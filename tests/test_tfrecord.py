@@ -149,6 +149,55 @@ def test_split_write_and_distributed_read(spark, sf_dir):
         )
 
 
+def _jobs_fired(spark, group: str, action) -> int:
+    """Spark jobs (AQE query stages included) that ``action`` fires."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_split_sink_contract(spark, tmp_path):
+    """write_split_tfrecords writes every split from ONE pass: each task
+    writes its shard of every split (empty shards included), the -of-NNNNN
+    suffix counts the tasks, no .part file is left, the returned counts
+    are the records on disk, and the write fires no more Spark jobs than a
+    noop write of the same DataFrame."""
+    import uuid
+
+    from videos_to_tfrecords_spark.sources.tfrecord import write_split_tfrecords
+
+    df = spark.createDataFrame(
+        [("Train", b"a"), ("Val", b"bb"), ("Train", b"ccc")], "dataset string, rec binary"
+    ).repartition(8)
+    out = str(tmp_path)
+    tag = uuid.uuid4().hex
+    counts = {}
+
+    def write():
+        counts.update(write_split_tfrecords(df, "rec", "dataset", out))
+
+    n_write = _jobs_fired(spark, f"sink-{tag}", write)
+    n_noop = _jobs_fired(
+        spark, f"noop-{tag}", lambda: df.write.format("noop").mode("overwrite").save()
+    )
+    assert counts == {"Train": 2, "Val": 1, "Test": 0}
+    records = {}
+    for split in ("Train", "Val", "Test"):
+        split_dir = os.path.join(out, "data", split.lower())
+        names = sorted(os.listdir(split_dir))  # a leftover .part would show here
+        assert names == [f"{split.lower()}-{i:05d}-of-00008.tfrecord" for i in range(8)]
+        records[split] = sorted(
+            r for n in names for r in read_records(os.path.join(split_dir, n))
+        )
+    assert records == {"Train": [b"a", b"ccc"], "Val": [b"bb"], "Test": []}
+    assert 0 < n_write <= n_noop
+
+
 def test_python_datasource_roundtrip(spark, sf_dir):
     """spark.read/write.format('tfrecord') via the Spark 4 Python Data
     Source API: write a sharded dataset, read it back, verify multiset."""

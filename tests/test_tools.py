@@ -73,3 +73,16 @@ def test_refuses_on_empty_live_set(tmp_path, monkeypatch):
     monkeypatch.setattr(mod, "live_prefixes", lambda: set())
     monkeypatch.setattr(sys, "argv", ["prune_warehouse.py", "--delete"])
     assert mod.main() == 2
+
+
+def test_scale_probe_rejects_option_argument(tmp_path, monkeypatch):
+    """make_scale_probe takes its output directory as its only argument; an
+    option such as --help must not become a directory of parquet files."""
+    path = os.path.join(os.path.dirname(_TOOL), "make_scale_probe.py")
+    spec = importlib.util.spec_from_file_location("make_scale_probe", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    monkeypatch.chdir(tmp_path)
+    assert mod.main(["--help"]) == 2
+    assert mod.main([str(tmp_path / "a"), str(tmp_path / "b")]) == 2
+    assert os.listdir(tmp_path) == []

@@ -16,7 +16,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
-OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+DEFAULT_OUT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale_probe", "sf1"
 )
 REPLICAS = 10
@@ -45,10 +45,15 @@ SHIFT_COLS = {
 }
 
 
-def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
+def main(argv: list[str]) -> int:
+    # an option-like argument (e.g. --help) is a mistake, not an output path
+    if len(argv) > 1 or any(a.startswith("-") for a in argv):
+        print(__doc__.strip().splitlines()[-1], file=sys.stderr)
+        return 2
+    out_dir = argv[0] if argv else DEFAULT_OUT
+    os.makedirs(out_dir, exist_ok=True)
     for dim in ("region", "nation"):
-        pq.write_table(pq.read_table(f"{SRC}/{dim}.parquet"), f"{OUT}/{dim}.parquet")
+        pq.write_table(pq.read_table(f"{SRC}/{dim}.parquet"), f"{out_dir}/{dim}.parquet")
     for tname, shifts in SHIFT_COLS.items():
         base = pq.read_table(f"{SRC}/{tname}.parquet")
         reps = []
@@ -75,9 +80,10 @@ def main() -> None:
                 t = t.set_column(t.schema.get_field_index("embedding"), "embedding", arr)
             reps.append(t)
         out = pa.concat_tables(reps).combine_chunks()
-        pq.write_table(out, f"{OUT}/{tname}.parquet", row_group_size=200_000)
+        pq.write_table(out, f"{out_dir}/{tname}.parquet", row_group_size=200_000)
         print(tname, out.num_rows)
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

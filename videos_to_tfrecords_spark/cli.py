@@ -8,8 +8,9 @@ maps to the Spark master URL; everything else drives the same pipeline the
 ``video_pipeline_*`` queries run: manifest → extension filter → label
 extraction (P3) → split (R1) → decode (U1) → batched inference (U2) → mode
 dispatch (crop_video | full_video | single_frame, preprocess.py:399-406) →
-FormatFeatures (G5/G6) → SequenceExample (U3) → shuffled sharded TFRecords
-per split (R2+S4, preprocess.py:389-416).
+FormatFeatures (G5/G6) → shuffle (R2) → SequenceExample (U3) encoded inside
+the one-pass sharded TFRecord write of every split (R3+S4,
+preprocess.py:389-416).
 
 Usage:
     python -m videos_to_tfrecords_spark.cli \
@@ -52,8 +53,8 @@ def parse_arguments(argv: list[str] | None = None) -> argparse.Namespace:
 def build_pipeline(spark: SparkSession, args: argparse.Namespace) -> dict[str, int]:
     """The composition root (reference build_pipeline, preprocess.py:371-416).
     Returns records-written per split."""
-    from videos_to_tfrecords_spark.ml.inference import batch_inference, linear_stub_model
-    from videos_to_tfrecords_spark.ml.video import decode_videos
+    from videos_to_tfrecords_spark.ml.inference import linear_stub_model
+    from videos_to_tfrecords_spark.ml.video import decode_and_infer
     from videos_to_tfrecords_spark.operators.filenames import (
         create_filenames,
         extract_label,
@@ -68,7 +69,7 @@ def build_pipeline(spark: SparkSession, args: argparse.Namespace) -> dict[str, i
     from videos_to_tfrecords_spark.operators.split import with_random_split
     from videos_to_tfrecords_spark.schema import CONTEXT_COLUMNS, LIST_COLUMNS
     from videos_to_tfrecords_spark.sources.tfrecord import (
-        with_sequence_example,
+        sequence_example_payloads,
         write_split_tfrecords,
     )
 
@@ -80,15 +81,10 @@ def build_pipeline(spark: SparkSession, args: argparse.Namespace) -> dict[str, i
     stamped = with_random_split(
         labeled, args.train, args.val, args.test, seed=args.seed
     )  # R1
-    frames = decode_videos(
-        stamped, skip_msec=args.frame_sample_rate, cloud=args.cloud
-    )  # U1 + P7/P8/R4
-    embedded = batch_inference(
-        frames.drop("height", "width", "channels"),
-        "image",
-        linear_stub_model(12, 8),
-        drop_input=True,  # U2 (+P4)
-    )
+    # U1 + U2 (+P4/P7/P8/R4) fused: frames never leave the Python worker
+    embedded = decode_and_infer(
+        stamped, linear_stub_model(12, 8), skip_msec=args.frame_sample_rate, cloud=args.cloud
+    ).drop("height", "width", "channels")
 
     # mode dispatch — driver-side control flow, reference preprocess.py:399-406
     if args.mode == "crop_video":
@@ -107,28 +103,26 @@ def build_pipeline(spark: SparkSession, args: argparse.Namespace) -> dict[str, i
     else:
         grouped = single_frame(embedded, ts_ms_col="timestamp_ms", key_cols=["filename"])
 
+    context_cols = ["filename", "label", "dataset", "frame_per_sec", "frame_total"]
+    list_cols = ["logits", "timestamp_ms"]
     seqs = format_features(
         grouped,
         context_cols=["label", "dataset", "frame_per_sec", "frame_total"],
-        list_cols=["logits", "timestamp_ms"],
+        list_cols=list_cols,
     )
-    protos = with_sequence_example(
-        seqs,
-        context_cols=["filename", "label", "dataset", "frame_per_sec", "frame_total"],
-        list_cols=["logits", "timestamp_ms"],
+    # R2 shuffles the pruned sequences, then the sink's one Python pass
+    # encodes each SequenceExample (U3) and writes every split's shards
+    # (R3+S4): the encode runs on every shuffled partition, and no encoded
+    # proto crosses an exchange.
+    decorrelated = shuffle(seqs.select(*context_cols, *list_cols), seed=args.seed)
+    return write_split_tfrecords(
+        decorrelated,
         # serialize by DECLARED dtype (reference features.py:25-36), not
         # runtime inference — an int-valued FLOAT column stays FloatList
-        context_kinds=CONTEXT_COLUMNS,
-        list_kinds=LIST_COLUMNS,
+        sequence_example_payloads(context_cols, list_cols, CONTEXT_COLUMNS, LIST_COLUMNS),
+        "dataset",
+        args.output_dir,
     )
-    # persist: write_split_tfrecords materializes once PER SPLIT — without
-    # this the full decode→inference→encode pipeline re-executes 3×
-    # (correct only because every upstream op is seeded; wasteful always)
-    decorrelated = shuffle(protos.select("dataset", "proto"), seed=args.seed).persist()  # R2
-    try:
-        return write_split_tfrecords(decorrelated, "proto", "dataset", args.output_dir)  # R3+S4
-    finally:
-        decorrelated.unpersist(blocking=False)
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> dict[str, int]:

@@ -1820,8 +1820,9 @@ FROM b GROUP BY split
 def q_tfrecord_sink_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 on the executed plan (VERDICT r07 #5): the reference's actual
     output contract — ``write_split_tfrecords`` (per-split prefix
-    LOWERCASED per reference preprocess.py:119, one shard per task,
-    CRC32C-masked record framing) — written to the warehouse, then read
+    LOWERCASED per reference preprocess.py:119, one shard per task of
+    every split from one pass over the corpus, CRC32C-masked record
+    framing) — written to the warehouse, then read
     back DISTRIBUTED (``read_tfrecords_df``: binaryFile scan + Arrow
     flat-map, which RAISES on any bad length/payload CRC, so a green row
     proves the wire framing), and censused per split: shard count from
@@ -1855,7 +1856,6 @@ def q_tfrecord_sink_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rec"),
         )
         .repartition(4)
-        .localCheckpoint(eager=True)  # one corpus pass feeds 3 split sinks
     )
     base = os.path.join(
         os.path.dirname(

@@ -17,6 +17,39 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: largest default driver heap, in GiB
+MAX_DRIVER_HEAP_GIB = 24
+
+
+def _meminfo_gib(key: str) -> float | None:
+    """A ``/proc/meminfo`` field in GiB, or None where there is none."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith(key + ":"):
+                    return int(line.split()[1]) / 2**20
+    except OSError:
+        pass
+    return None
+
+
+def _heap_gib(spec: str) -> float:
+    """A JVM size such as ``8g``, ``512m`` or ``1073741824`` in GiB."""
+    units = {"k": 2**-20, "m": 2**-10, "g": 1.0, "t": 2**10}
+    spec = spec.strip().lower().rstrip("b")
+    if spec[-1:] in units:
+        return float(spec[:-1]) * units[spec[-1]]
+    return float(spec) / 2**30
+
+
+def default_driver_mem() -> str:
+    """About half the host's RAM, capped at MAX_DRIVER_HEAP_GIB: in local
+    mode the driver JVM is the executor, and the Python workers need the
+    other half. 8g where the host's RAM is unknown."""
+    total = _meminfo_gib("MemTotal")
+    if total is None:
+        return "8g"
+    return f"{max(1, min(MAX_DRIVER_HEAP_GIB, round(total / 2)))}g"
 
 
 def get_spark(
@@ -35,8 +68,13 @@ def get_spark(
         "SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     )
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-    if os.environ.get("SPARK_GRAFT_JVM_PRETOUCH", "1") != "0":
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
+    # pre-touch only a heap the host can commit now: an override larger than
+    # the available RAM still starts (the heap grows on demand) instead of
+    # crashing the JVM at start-up
+    available = _meminfo_gib("MemAvailable")
+    fits = available is None or _heap_gib(driver_mem) <= available
+    if fits and os.environ.get("SPARK_GRAFT_JVM_PRETOUCH", "1") != "0":
         driver_jvm_opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
     else:
         driver_jvm_opts = ""
@@ -66,10 +104,8 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode: the driver JVM IS the executor — size its heap for 32
-        # concurrent tasks (the box has 128 GiB; 8g let accumulated
-        # localCheckpoint blocks + a big sort evict each other at sf1,
-        # killing every query after the pressure point in one session)
+        # local mode: the driver JVM IS the executor — its heap is sized
+        # from the host (default_driver_mem), SPARK_GRAFT_DRIVER_MEM overrides
         .config("spark.driver.memory", driver_mem)
         # Pin the heap: commit Xms=Xmx up front and pre-touch it so the
         # committed range is faulted once at startup. Without this, G1

@@ -7,7 +7,9 @@ Reference parity:
   coercions — scalar→single-element list (features.py:41-42), str→utf-8 bytes
   (features.py:49-53), unsupported dtype → skipped (features.py:55-56).
 - ``WriteTFRecord`` (reference preprocess.py:109-128): lowercased prefix,
-  sharded files ``{out}/data/{split}/{split}-NNNNN-of-MMMMM.tfrecord``.
+  sharded files ``{out}/data/{split}/{split}-NNNNN-of-MMMMM.tfrecord``,
+  every split written by one ``mapInArrow`` job (Beam's tagged outputs,
+  preprocess.py:389-416).
 
 Instead of requiring tensorflow, the engine emits the protobuf wire format
 directly (it is small and fixed: SequenceExample{1: context Features,
@@ -20,7 +22,8 @@ tf.train.SequenceExample wire layout per the public protobuf spec.
 
 Scale: serialization is a per-row map (no shuffle); the randomizing R2
 shuffle runs BEFORE the encode so the wide binary column never exchanges
-(the reference's own column-pruning lesson, preprocess.py:241).
+(the reference's own column-pruning lesson, preprocess.py:241). The encode
+can run inside the sink's own Python pass (``sequence_example_payloads``).
 
 Determinism convention: map entries are emitted in sorted-key order (proto
 map order is unspecified; sorting makes output bytes reproducible).
@@ -31,6 +34,7 @@ from __future__ import annotations
 import os
 import struct
 from collections.abc import Iterable, Sequence
+from itertools import repeat
 
 import numpy as np
 
@@ -298,6 +302,14 @@ def decode_sequence_example(buf: bytes) -> tuple[dict, dict]:
 # ------------------------------------------------------ Spark-facing ops ---
 
 
+def _encode_row(rec, context_cols, list_cols, context_kinds, list_kinds) -> bytes:
+    """One row (a mapping of column → value, from pandas or Arrow) as
+    SequenceExample wire bytes."""
+    ctx = {c: rec[c] for c in context_cols}
+    lists = {c: list(rec[c]) if rec[c] is not None else [] for c in list_cols}
+    return encode_sequence_example(ctx, lists, context_kinds, list_kinds)
+
+
 def with_sequence_example(
     df,
     context_cols,
@@ -317,8 +329,10 @@ def with_sequence_example(
 
     Proto encoding is inherently per-row Python; mapInPandas keeps the
     transfer Arrow-batched and lets one task amortize the encoder across
-    its whole partition. Placed AFTER any shuffle (never exchange the
-    binary column — SURVEY §7.3)."""
+    its whole partition. Place it after any shuffle so the binary column
+    never exchanges (SURVEY §7.3); a pipeline that ends in the sink can
+    skip the column entirely and encode inside the write with
+    :func:`sequence_example_payloads` (what the CLI does)."""
     import pandas as pd  # local import: executors need it, driver may not
 
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
@@ -326,17 +340,34 @@ def with_sequence_example(
 
     def encode(batches):
         for pdf in batches:
-            protos = []
-            for rec in pdf.to_dict("records"):
-                ctx = {c: rec[c] for c in context_cols}
-                lists = {c: list(rec[c]) if rec[c] is not None else [] for c in list_cols}
-                protos.append(
-                    encode_sequence_example(ctx, lists, context_kinds, list_kinds)
-                )
+            protos = [
+                _encode_row(rec, context_cols, list_cols, context_kinds, list_kinds)
+                for rec in pdf.to_dict("records")
+            ]
             pdf[out] = pd.Series(protos, index=pdf.index, dtype=object)
             yield pdf
 
     return df.mapInPandas(encode, schema)
+
+
+def sequence_example_payloads(
+    context_cols,
+    list_cols,
+    context_kinds: dict | None = None,
+    list_kinds: dict | None = None,
+):
+    """A sink payload function (see :func:`write_split_tfrecords`) that
+    encodes each row of an Arrow batch as SequenceExample wire bytes — the
+    same bytes :func:`with_sequence_example` puts in its column, computed
+    inside the write task instead of in a Python pass of its own."""
+
+    def payloads(batch) -> list[bytes]:
+        return [
+            _encode_row(rec, context_cols, list_cols, context_kinds, list_kinds)
+            for rec in batch.to_pylist()
+        ]
+
+    return payloads
 
 
 # --------------------------------------------------------- TFRecord files ---
@@ -368,47 +399,96 @@ def read_records(path: str, verify: bool = True) -> Iterable[bytes]:
             yield payload
 
 
-def write_tfrecords(df, bytes_col: str, output_dir: str, prefix: str) -> int:
+def write_tfrecords(df, payload, output_dir: str, prefix: str) -> int:
     """Sharded TFRecord sink (reference WriteTFRecord, preprocess.py:109-128):
     ``{output_dir}/data/{prefix}/{prefix}-NNNNN-of-MMMMM.tfrecord``, prefix
     lowercased (P6), one shard per partition (Spark task = output shard,
     exactly the runner-chosen sharding of the reference's sink).
+    ``payload`` is as for :func:`write_split_tfrecords`.
 
     Caller is expected to have applied operators.shuffle.shuffle() first —
     kept separate so the write itself adds no exchange."""
-    prefix = str(prefix).lower()  # reference preprocess.py:119
-    out = os.path.join(output_dir, "data", prefix)
-    os.makedirs(out, exist_ok=True)
-    n_shards = df.rdd.getNumPartitions()
-
-    def write_partition(idx: int, rows) -> Iterable[int]:
-        path = os.path.join(out, f"{prefix}-{idx:05d}-of-{n_shards:05d}.tfrecord")
-        n = 0
-        with open(path, "wb") as fh:
-            for row in rows:
-                write_record(fh, row[bytes_col])
-                n += 1
-        yield n
-
-    counts = df.select(bytes_col).rdd.mapPartitionsWithIndex(write_partition).collect()
-    return sum(counts)
+    return write_split_tfrecords(df, payload, None, output_dir, [prefix])[str(prefix)]
 
 
 def write_split_tfrecords(
-    df, bytes_col: str, split_col: str, output_dir: str, splits=("Train", "Val", "Test")
+    df, payload, split_col: str | None, output_dir: str, splits=("Train", "Val", "Test")
 ) -> dict[str, int]:
     """The reference's per-split sink layout (R3 + S4: one sink per tagged
-    split, preprocess.py:389-416): each split filtered from the same frame
-    and written under its own prefix. Callers should cache/checkpoint the
-    upstream frame when all splits are consumed so the pipeline runs once
-    per branch (Beam's single-pass tagged outputs have no single-plan Spark
-    analog — SURVEY §2.3 R3)."""
+    split, preprocess.py:389-416), written in ONE pass like Beam's tagged
+    outputs. Returns records written per split.
+
+    It is one ``mapInArrow`` job: task ``i`` opens shard ``i`` of every
+    split, routes each row by ``split_col`` (rows of other splits are
+    dropped; ``None`` sends every row to the first split) and frames it
+    with :func:`write_record`, then reports its per-split counts. Tasks
+    write ``{prefix}-NNNNN.tfrecord.part``; after the job the driver knows
+    the shard count (one per task, empty partitions included, since
+    ``mapInArrow`` calls the function on them too) and renames each part
+    to its final ``-of-MMMMM`` name. The input plan runs once whatever the
+    number of splits, so nothing upstream needs caching.
+
+    ``payload`` is either the name of a binary column holding each record,
+    or a function from an Arrow ``RecordBatch`` to one ``bytes`` per row,
+    run inside the write task (e.g. :func:`sequence_example_payloads`, so
+    the encode needs no Python pass of its own)."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
-    return {
-        s: write_tfrecords(df.filter(F.col(split_col) == s), bytes_col, output_dir, s)
-        for s in splits
-    }
+    keys = [str(s) for s in splits]
+    prefixes = {s: s.lower() for s in keys}  # reference preprocess.py:119
+    dirs = {s: os.path.join(output_dir, "data", p) for s, p in prefixes.items()}
+    for d in dirs.values():
+        os.makedirs(d, exist_ok=True)
+
+    def part(split, idx: int) -> str:
+        return os.path.join(dirs[split], f"{prefixes[split]}-{idx:05d}.tfrecord.part")
+
+    if callable(payload):
+        to_bytes = payload
+    else:
+        df = df.select(payload, *([split_col] if split_col else []))
+
+        def to_bytes(batch):
+            return batch.column(payload).to_pylist()
+
+    if split_col:
+        df = df.filter(F.col(split_col).isin(keys))
+
+    def write(batches):
+        from pyspark import TaskContext
+
+        idx = TaskContext.get().partitionId()
+        counts = dict.fromkeys(keys, 0)
+        handles = {s: open(part(s, idx), "wb") for s in keys}
+        try:
+            for batch in batches:
+                routes = batch.column(split_col).to_pylist() if split_col else repeat(keys[0])
+                for split, record in zip(routes, to_bytes(batch)):
+                    write_record(handles[split], record)
+                    counts[split] += 1
+        finally:
+            for fh in handles.values():
+                fh.close()
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([idx] * len(keys), pa.int32()),
+                pa.array(keys, pa.string()),
+                pa.array([counts[s] for s in keys], pa.int64()),
+            ],
+            names=["shard", "split", "n"],
+        )
+
+    rows = df.mapInArrow(write, "shard int, split string, n long").collect()
+    n_shards = len({r.shard for r in rows})
+    for s in keys:
+        for i in range(n_shards):
+            final = f"{prefixes[s]}-{i:05d}-of-{n_shards:05d}.tfrecord"
+            os.replace(part(s, i), os.path.join(dirs[s], final))
+    totals = dict.fromkeys(keys, 0)
+    for r in rows:
+        totals[r.split] += r.n
+    return totals
 
 
 def read_tfrecords_df(spark, path_glob: str):
