@@ -235,43 +235,20 @@ def shingle_table(
 _PERM_P = 1_000_000_007
 
 
-def minhash_signatures(sh: DataFrame, id_col: str = "doc_id", n_perm: int = N_PERM) -> DataFrame:
-    """One columnar aggregation computes all permutations' minima.
-
-    Permutation i hashes the shingle ONCE with native xxhash64 (JVM,
-    codegen) and derives perm values arithmetically:
-    ((2i+1)·x1 + (4i+3)·x2 + i) mod p with x1/x2 the hash's 30-bit halves —
-    16× fewer hash computations than hashing per permutation. Signatures
-    are internal (correctness is judged on verified pairs), so the portable
-    md5 hash is not needed here."""
-    # hash hoisted into a projection — same rationale as the portable
-    # twin below: aggregates don't CSE, so an inlined xxhash64 would be
-    # re-evaluated 2·n_perm times per row
-    hs = sh.select(F.col(id_col), F.xxhash64("s").alias("_hx"))
-    h = F.col("_hx")
-    x1 = h.bitwiseAND(F.lit((1 << 30) - 1))
-    x2 = F.shiftright(h, 30).bitwiseAND(F.lit((1 << 30) - 1))
-    mins = [
-        F.min((x1 * (2 * i + 1) + x2 * (4 * i + 3) + i) % _PERM_P).alias(f"sig{i}")
-        for i in range(n_perm)
-    ]
-    return hs.groupBy(id_col).agg(*mins)
-
-
 def minhash_signatures_portable(
     sh: DataFrame, id_col: str = "doc_id", n_perm: int = N_PERM
 ) -> DataFrame:
-    """Portable twin of ``minhash_signatures``: identical universal-hash
-    family, but the base shingle hash is the 60-bit md5 prefix
-    (functions/hashing.h15) instead of xxhash64 — every signature, band
-    key, and therefore every banding CANDIDATE is reproducible bit-for-bit
-    by a SQL oracle. The r9 sf1 value-hash gate showed why that matters:
-    8×2 banding misses real pairs at J≈0.8 with p≈1e-4, so an "LSH output
-    == exact ground truth" oracle is a probabilistic claim that breaks at
-    scale; with this hash family the oracle replays the LSH algorithm
-    itself and equality is structural, at any SF. The xxhash64 variant
-    stays the scan-side production path (rows-only by design) — its miss
-    set is deterministic per corpus but not SQL-expressible."""
+    """MinHash signatures in one columnar aggregation over a portable hash.
+
+    Permutation i is ((2i+1)·x1 + (4i+3)·x2 + i) mod p, with x1/x2 the
+    30-bit halves of the shingle's 60-bit md5 prefix (functions/hashing.h15),
+    so every signature, band key, and therefore every banding CANDIDATE is
+    reproducible bit-for-bit by a SQL oracle. The r9 sf1 value-hash gate
+    showed why that matters: 8×2 banding misses real pairs at J≈0.8 with
+    p≈1e-4, so an "LSH output == exact ground truth" oracle is a
+    probabilistic claim that breaks at scale; with this hash family the
+    oracle replays the LSH algorithm itself and equality is structural, at
+    any SF."""
     from videos_to_tfrecords_spark.functions.hashing import h15
 
     # Hoist the md5-based hash into a projection (the simhash fix, r7):
@@ -527,9 +504,10 @@ def minhash_signatures_mapside(
     minima come from ``np.minimum.reduceat`` over the batch-flat shingle
     array. Zero per-shingle Python. Signatures are internal — correctness
     is judged on exact-Jaccard-verified pairs — so no ORACLE-portable hash
-    is required (see minhash_signatures), but cross-ENVIRONMENT determinism
-    is: the banded candidate set (and therefore any near-threshold miss)
-    must be a pure function of the corpus, never of the pandas version."""
+    is required (unlike minhash_signatures_portable), but cross-ENVIRONMENT
+    determinism is: the banded candidate set (and therefore any
+    near-threshold miss) must be a pure function of the corpus, never of
+    the pandas version."""
     import numpy as np
 
     cols = ", ".join(f"sig{i} long" for i in range(n_perm))

@@ -138,7 +138,6 @@ def ngram_partial_counts(
                         "ngram_partial_counts: a single n-gram exceeds the "
                         "output chunk cap"
                     )
-                hi = min(hi, n_sh)
                 c_off = out_off[lo : hi + 1] - base
                 c_len = sh_len[lo:hi]
                 c_total = int(c_off[-1])

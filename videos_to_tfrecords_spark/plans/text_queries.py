@@ -2683,8 +2683,7 @@ def q_minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     trial, so mean J per agreement bucket should track matches/16).
 
     Signatures here use the PORTABLE h15 hash split into 30-bit halves
-    with the same universal-hash family as the production sketch
-    (operators/dedup.minhash_signatures) so the oracle reproduces them
+    (operators/dedup.minhash_signatures_portable) so the oracle reproduces them
     bit-for-bit; candidates come from the same 8x2 banding; exact J comes
     from the array-intersect verifier restricted to candidates (pairs
     sharing no shingle count as J=0). One shingle shuffle + one banding

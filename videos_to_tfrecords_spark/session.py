@@ -19,6 +19,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 #: largest default driver heap, in GiB
 MAX_DRIVER_HEAP_GIB = 24
+#: entries in Spark's generated-code cache (``spark.sql.codegen.cache.maxEntries``,
+#: default 100). One warm pass of the benchmark's queries_mix (seven queries)
+#: uses about 157 distinct classes, so the default cache thrashes and
+#: recompiles 149-150 classes per pass, about 11 ms each. One pass over all
+#: 388 registered queries at sf0.001 compiles about 5,260 classes and grows
+#: metaspace plus code heap by 310-330 MiB, roughly 60 KiB per class: 8192
+#: entries hold the whole registry.
+CODEGEN_CACHE_ENTRIES = 8192
 
 
 def _meminfo_gib(key: str) -> float | None:
@@ -117,6 +125,7 @@ def get_spark(
         # region. Opt out with SPARK_GRAFT_JVM_PRETOUCH=0.
         .config("spark.driver.extraJavaOptions", driver_jvm_opts)
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Parquet scans: pushdown + pruning are on by default; keep splits
         # bounded so a 100 TB table yields sane task counts.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
