@@ -150,7 +150,7 @@ def main() -> None:
 
         yield from batches
 
-    n_cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     (
         spark.range(n_cores, numPartitions=n_cores)
         .mapInArrow(_warm_arrow, "id long")

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, ahead of any other copy on the path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from videos_to_tfrecords_spark.session import get_spark  # noqa: E402
 

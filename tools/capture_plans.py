@@ -19,19 +19,18 @@ from __future__ import annotations
 import os
 import sys
 
+#: the checkout this tool belongs to
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     round_dir = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r11")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        round_dir,
-    )
+    out_dir = os.path.join(ROOT, "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
     from videos_to_tfrecords_spark.session import get_spark
 

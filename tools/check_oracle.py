@@ -20,10 +20,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
+
+#: the checkout this tool belongs to
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR_DEFAULT = "/root/testdata/sf0.01"
 
@@ -146,11 +150,9 @@ def main() -> int:
     # require an identical value hash (statefulness probe)
     twice = "--twice" in sys.argv[1:]
     if "--cache" in sys.argv[1:]:
-        import os
-
         os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
 
     if "--changed" in sys.argv[1:] and not only:
@@ -159,7 +161,7 @@ def main() -> int:
         from videos_to_tfrecords_spark.plans.registry import MODULES
 
         diff = subprocess.run(
-            ["git", "-C", "/root/repo", "diff", "HEAD", "--name-only"],
+            ["git", "-C", ROOT, "diff", "HEAD", "--name-only"],
             capture_output=True,
             text=True,
             check=True,
@@ -205,8 +207,6 @@ def main() -> int:
         gate cascaded 91 such failures). Bounded limit + disk spill makes
         heavy oracles spill instead of OOM; the retry below replaces a
         poisoned connection."""
-        import os
-
         c = duckdb.connect()
         # $SPARK_GRAFT_DUCK_MEM overrides for solo re-runs of spill-heavy
         # oracles (48GB forces the curation closure to ~80GB of disk

@@ -18,7 +18,11 @@ with a "queries" key. Later segments win on duplicate names.
 from __future__ import annotations
 
 import json
+import os
 import sys
+
+#: the checkout this tool belongs to
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
@@ -29,7 +33,7 @@ def main() -> int:
         merged.update(d.get("queries", d))
     failures = sorted(n for n, r in merged.items() if r.get("status") == "fail")
     rows_only = sorted(n for n, r in merged.items() if r.get("status") == "rows-only")
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as e
     from videos_to_tfrecords_spark.plans.registry import ENV_GATED
 
@@ -42,7 +46,7 @@ def main() -> int:
     env_gated_absent = sorted(ENV_GATED - set(merged))
     json.dump(
         {
-            "sf_dir": "/root/repo/.scale_probe/sf1",
+            "sf_dir": os.path.join(ROOT, ".scale_probe", "sf1"),
             "n_registry": len(registry),
             "n_run": len(merged),
             "failures": len(failures),

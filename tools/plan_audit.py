@@ -8,8 +8,12 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
+
+#: the checkout this tool belongs to
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -31,7 +35,7 @@ FEATURES = {
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
     from videos_to_tfrecords_spark.session import get_spark
 
@@ -93,7 +97,7 @@ def main() -> None:
         "jobs during construction and is documented in the operator's",
         "docstring + SCALE.md.",
     ]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(rows)} queries)")
 

@@ -52,9 +52,14 @@ DEFAULT_SKIP_MSEC = 500.0  # reference run_preprocess.py:87-91
 LOCAL_FRAME_CAP = 3  # reference preprocess.py:170-171
 
 
-def _fake_video_props(filename: str) -> tuple[float, float]:
-    """Deterministic (fps, duration_ms) from the filename hash."""
-    h = int(hashlib.md5(filename.encode()).hexdigest()[:8], 16)
+def _filename_hash(filename: str) -> int:
+    return int(hashlib.md5(filename.encode()).hexdigest()[:8], 16)
+
+
+def _fake_video_props(filename: str, h: int | None = None) -> tuple[float, float]:
+    """Deterministic (fps, duration_ms) from the filename hash ``h``."""
+    if h is None:
+        h = _filename_hash(filename)
     fps = [24.0, 30.0, 60.0][h % 3]
     duration_ms = 2_000.0 + (h % 8) * 1_000.0
     return fps, duration_ms
@@ -63,7 +68,8 @@ def _fake_video_props(filename: str) -> tuple[float, float]:
 def _decode_fake(filename: str, skip_msec: float, cloud: bool):
     """Synthetic decoder with the reference's exact control flow: advance
     pos_msec at 1000/fps per frame, keep one per skip_msec, cap in local."""
-    fps, duration_ms = _fake_video_props(filename)
+    h = _filename_hash(filename)
+    fps, duration_ms = _fake_video_props(filename, h)
     frame_total = duration_ms / 1000.0 * fps
     kept, last_ts = [], None
     pos_msec, frame_idx = 0.0, 0
@@ -71,7 +77,7 @@ def _decode_fake(filename: str, skip_msec: float, cloud: bool):
         if last_ts is None or pos_msec >= last_ts + skip_msec:  # P8 predicate
             last_ts = pos_msec
             # 2×2×3 constant frame: value = (hash ⊕ frame_idx) scaled to [0,1]
-            v = ((int(hashlib.md5(filename.encode()).hexdigest()[:8], 16) ^ frame_idx) % 256) / 255.0
+            v = ((h ^ frame_idx) % 256) / 255.0
             image = np.full(2 * 2 * 3, v, dtype=np.float32)
             kept.append((image, 2, 2, 3, pos_msec, fps, frame_total))
             if not cloud and len(kept) >= LOCAL_FRAME_CAP:  # R4 local cap

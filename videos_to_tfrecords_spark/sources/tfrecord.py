@@ -38,6 +38,8 @@ from itertools import repeat
 
 import numpy as np
 
+from videos_to_tfrecords_spark.schema import FeatureKind
+
 # ---------------------------------------------------------------- CRC32C ---
 
 _CRC32C_POLY = 0x82F63B78  # Castagnoli, reflected
@@ -127,8 +129,6 @@ def encode_feature(value, kind: str | None = None) -> bytes | None:
         value = [value]  # scalar→list promotion, features.py:41-42
     value = [v.item() if isinstance(v, np.generic) else v for v in value]
     if kind is not None:
-        from videos_to_tfrecords_spark.schema import FeatureKind
-
         if kind == FeatureKind.FLOAT:  # features.py:43-45
             return _len_delimited(2, _float_list([float(v) for v in value]))
         if kind == FeatureKind.INT:  # features.py:46-47
