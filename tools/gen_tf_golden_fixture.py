@@ -26,7 +26,10 @@ It intentionally imports NOTHING from videos_to_tfrecords_spark — the
 test (tests/test_tfrecord.py::test_vendored_golden_tfrecord) then checks
 the engine's encoder/decoder/framing byte-for-byte against this file.
 The CRC implementation is bit-by-bit (no shared table code) and is
-self-checked against the public CRC32C test vector before writing.
+self-checked against the public CRC32C test vector on import. Importing the
+module writes nothing, so tests/tfrecord_oracle.py takes ``crc32c_bitwise``
+and ``masked`` from here as the scalar oracle for the engine's vectorized
+CRC32C.
 
 Run once: python tools/gen_tf_golden_fixture.py
 """
@@ -47,7 +50,8 @@ def crc32c_bitwise(data: bytes) -> int:
     return crc ^ 0xFFFFFFFF
 
 
-assert crc32c_bitwise(b"123456789") == 0xE3069283  # public check vector
+if crc32c_bitwise(b"123456789") != 0xE3069283:  # public check vector
+    raise AssertionError("crc32c_bitwise fails the CRC-32C check vector")
 
 
 def masked(data: bytes) -> int:

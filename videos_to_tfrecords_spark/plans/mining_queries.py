@@ -1052,7 +1052,7 @@ FROM documents GROUP BY lang
 )
 def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE flagship sink/source round-trip as a registered oracle query:
-    documents → SequenceExample wire bytes (pure-Python proto encoder) →
+    documents → SequenceExample wire bytes (columnar proto encoder) →
     sharded .tfrecord files (masked-CRC32C framing) → distributed
     binaryFile read → proto DECODE → per-lang aggregate. The oracle
     aggregates the parquet directly, so a hash match proves every byte of

@@ -14,26 +14,28 @@ a helper function:
 Planning: one InputPartition per file (TFRecord framing has no intra-file
 split points — records must be walked; the reference's sharded layout keeps
 files task-sized, which is exactly why S4 shards). The writer emits one
-shard per task into ``part-NNNNN.tfrecord``.
+shard per task into ``part-NNNNN.tfrecord``. Both go through the columnar
+kernel (``tfrecord_kernel``): the reader parses a block of records at a
+time and verifies both masked CRCs of all of them at once; the writer takes
+Arrow batches and frames each bounded slice with one ``write``.
 """
 
 from __future__ import annotations
 
 import glob as globlib
 import os
-import struct
-from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
 from pyspark.sql import types as T
 
-from videos_to_tfrecords_spark.sources.tfrecord import masked_crc32c, write_record
+from videos_to_tfrecords_spark.sources import tfrecord_kernel as kernel
 
 READ_SCHEMA = T.StructType(
     [
@@ -65,43 +67,21 @@ class TFRecordReader(DataSourceReader):
     def read(self, partition: _FilePartition):
         # yield Arrow RecordBatches (the API's fast path — per-row tuple
         # yields cost a pickle round-trip per record)
-        import pyarrow as pa
-
-        def batch(paths: list, records: list):
-            # explicit types always: pa.array([]) would infer NULL type and
-            # fail the (string, binary) schema cast for empty/boundary files
-            return pa.record_batch(
-                [
-                    pa.array(paths, type=pa.string()),
-                    pa.array(records, type=pa.binary()),
-                ],
-                names=["path", "record"],
-            )
-
-        paths, records = [], []
         emitted = False
         with open(partition.path, "rb") as fh:
-            while True:
-                header = fh.read(8)
-                if not header:
-                    break
-                (length,) = struct.unpack("<Q", header)
-                (hcrc,) = struct.unpack("<I", fh.read(4))
-                payload = fh.read(length)
-                (pcrc,) = struct.unpack("<I", fh.read(4))
-                if masked_crc32c(header) != hcrc or masked_crc32c(payload) != pcrc:
-                    raise ValueError(f"{partition.path}: bad tfrecord crc")
-                paths.append(partition.path)
-                records.append(payload)
-                if len(records) >= 10_000:
-                    yield batch(paths, records)
-                    paths, records = [], []
-                    emitted = True
-        # trailing partial — skipped when a flush already emitted everything
-        # (exact-multiple record counts); an empty FILE still yields one
-        # typed empty batch so the scan sees the declared schema
-        if records or not emitted:
-            yield batch(paths, records)
+            for records in kernel.read_file(fh, partition.path):
+                yield _batch(partition.path, records)
+                emitted = True
+        if not emitted:  # an empty FILE still yields one typed empty batch
+            yield _batch(partition.path, pa.array([], pa.binary()))
+
+
+def _batch(path: str, records: pa.Array) -> pa.RecordBatch:
+    # explicit types always: pa.array([]) would infer NULL type and fail the
+    # (string, binary) schema cast for empty files
+    return pa.record_batch(
+        [pa.array([path] * len(records), type=pa.string()), records], names=["path", "record"]
+    )
 
 
 class _Committed(WriterCommitMessage):
@@ -110,7 +90,7 @@ class _Committed(WriterCommitMessage):
         self.n = n
 
 
-class TFRecordWriter(DataSourceWriter):
+class TFRecordWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, schema: T.StructType):
         self.out_dir = options.get("path")
         if not self.out_dir:
@@ -120,9 +100,10 @@ class TFRecordWriter(DataSourceWriter):
         if not binary_cols:
             raise ValueError("tfrecord sink needs a binary column of record bytes")
         self.record_col = options.get("recordcol", binary_cols[0])
-        self.col_index = [f.name for f in schema.fields].index(self.record_col)
 
     def write(self, iterator) -> _Committed:
+        """Frame the record column of each Arrow batch, one bounded slice
+        per ``write``."""
         from pyspark import TaskContext
 
         idx = TaskContext.get().partitionId()
@@ -130,9 +111,10 @@ class TFRecordWriter(DataSourceWriter):
         path = os.path.join(self.out_dir, f"part-{idx:05d}.tfrecord")
         n = 0
         with open(path, "wb") as fh:
-            for row in iterator:
-                write_record(fh, bytes(row[self.col_index]))
-                n += 1
+            for batch in iterator:
+                for rows in kernel.slices(batch.select([self.record_col])):
+                    fh.write(kernel.frame(rows.column(0)))
+                    n += rows.num_rows
         return _Committed(path, n)
 
 
