@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from videos_to_tfrecords_spark.ml.inference import batch_inference, linear_stub_model
 from videos_to_tfrecords_spark.ml.video import LOCAL_FRAME_CAP, _fake_video_props, decode_videos
@@ -69,17 +68,6 @@ def test_sample_frames_exact_anchored_semantics(spark):
         r.timestamp_ms for r in sample_frames_exact(df, skip_msec=500.0).collect()
     )
     assert kept == [0.0, 900.0, 1401.0]
-
-
-def test_native_predict_batch_udf_matches_iterator_path(spark):
-    from videos_to_tfrecords_spark.ml.inference import batch_inference_native
-
-    vecs = [[float(x) for x in np.linspace(-1, 1, 8)], [0.5] * 8]
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], "id long, vec array<float>")
-    a = {r.id: r.logits for r in batch_inference(df, "vec", linear_stub_model(8, 3), drop_input=False).collect()}
-    b = {r.id: r.logits for r in batch_inference_native(df, "vec", linear_stub_model(8, 3), input_width=8, drop_input=False).collect()}
-    for i in a:
-        np.testing.assert_allclose(a[i], b[i], rtol=1e-6)
 
 
 @pytest.mark.skipif(
@@ -160,26 +148,6 @@ def test_batch_inference_by_shape_stacks_mixed_shapes(spark):
     for i in range(10):
         assert got[f"s{i}"] == [float(i), float(i)]
         assert got[f"b{i}"] == [float(100 + i), float(100 + i)]
-
-
-def test_decode_videos_udtf_matches_mapinpandas(spark):
-    """The Spark 4 Python UDTF variant (the literal analog of the
-    reference's multi-row-yield DoFn) must produce exactly the
-    mapInPandas flat-map's rows."""
-    from videos_to_tfrecords_spark.ml.video import decode_videos_udtf
-
-    files = spark.createDataFrame(
-        [("gs://b/L/360P/v1.mp4", "L", "Train"), ("gs://b/M/720P/v2.mkv", "M", "Val")],
-        "filename string, label string, dataset string",
-    )
-    a = sorted(map(tuple, decode_videos(files, cloud=True).collect()))
-    b = sorted(map(tuple, decode_videos_udtf(files, cloud=True).collect()))
-    assert a == b and len(a) > 0
-    local = decode_videos_udtf(files, cloud=False).collect()
-    per_file: dict[str, int] = {}
-    for r in local:
-        per_file[r.filename] = per_file.get(r.filename, 0) + 1
-    assert all(n <= LOCAL_FRAME_CAP for n in per_file.values())
 
 
 def test_e2e_by_shape_flag_matches_default_path(spark):

@@ -20,5 +20,3 @@ always Arrow-batched.
 """
 
 __version__ = "0.1.0"
-
-from videos_to_tfrecords_spark.session import get_spark  # noqa: F401

@@ -105,44 +105,6 @@ def batch_inference(
     return out.drop(input_col) if drop_input else out
 
 
-def batch_inference_native(
-    df: DataFrame,
-    input_col: str,
-    model_factory: ModelFactory,
-    output_col: str = "logits",
-    batch_size: int = 1024,
-    input_width: int = 8,
-    drop_input: bool = True,
-) -> DataFrame:
-    """Same semantics via ``pyspark.ml.functions.predict_batch_udf`` (Spark
-    ≥3.4) — the built-in that packages U2's whole lifecycle: per-executor
-    model cache (``setup()``), tensor batching (``process()`` buffers +
-    ``batch_size`` flush, reference preprocess.py:246-265), and end-of-data
-    drain (``finish_bundle()``). Falls back to :func:`batch_inference` if
-    the ml module is unavailable."""
-    try:
-        from pyspark.ml.functions import predict_batch_udf
-    except ImportError:  # pragma: no cover
-        return batch_inference(df, input_col, model_factory, output_col, drop_input)
-
-    def make_predict_fn():
-        model = model_factory()
-
-        def predict(inputs: np.ndarray) -> np.ndarray:
-            return model(inputs.astype(np.float64)).astype(np.float32)
-
-        return predict
-
-    infer = predict_batch_udf(
-        make_predict_fn,
-        return_type=T.ArrayType(T.FloatType()),
-        batch_size=batch_size,
-        input_tensor_shapes=[[input_width]],
-    )
-    out = df.withColumn(output_col, infer(F.col(input_col)))
-    return out.drop(input_col) if drop_input else out
-
-
 def batch_inference_by_shape(
     df: DataFrame,
     input_col: str,

@@ -281,65 +281,3 @@ def decode_and_infer(
             yield res
 
     return df.mapInPandas(fused, out_schema)
-
-
-def decode_videos_udtf(df: DataFrame, skip_msec: float = DEFAULT_SKIP_MSEC, cloud: bool = False) -> DataFrame:
-    """The same flat-map as :func:`decode_videos`, expressed as a true
-    Spark 4 Python UDTF — the closest Spark analog of the reference's
-    ``beam.DoFn`` with multi-row ``yield`` (VideoToFrames,
-    preprocess.py:156-190): one class, per-row ``eval`` yielding N frame
-    tuples, usable from SQL via ``lateral join``.
-
-    The mapInPandas path remains the hot-path default (Arrow batching
-    amortizes transfer; UDTFs are row-at-a-time) — this exists for API
-    parity and SQL-callable decode; a pytest asserts both produce
-    identical rows."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import lit, udtf
-
-    @udtf(returnType=FRAME_SCHEMA)
-    class VideoToFrames:
-        def eval(self, filename: str, label: str, dataset: str, skip: float, is_cloud: bool):
-            for image, h, w, c, ts, fps, total in _decode_fake(
-                filename, skip, is_cloud
-            ):
-                yield (
-                    filename,
-                    label,
-                    dataset,
-                    [float(x) for x in image],
-                    h,
-                    w,
-                    c,
-                    float(ts),
-                    float(fps),
-                    float(total),
-                )
-
-    # rename the correlated inputs so the UDTF's output columns (same
-    # contract as decode_videos) are unambiguous after the lateral join
-    rows = df.select(
-        F.col("filename").alias("_f"),
-        F.col("label").alias("_l"),
-        F.col("dataset").alias("_d"),
-    )
-    return rows.lateralJoin(
-        VideoToFrames(
-            F.col("_f").outer(),
-            F.col("_l").outer(),
-            F.col("_d").outer(),
-            lit(skip_msec),
-            lit(cloud),
-        )
-    ).select(
-        "filename",
-        "label",
-        "dataset",
-        "image",
-        "height",
-        "width",
-        "channels",
-        "timestamp_ms",
-        "frame_per_sec",
-        "frame_total",
-    )
