@@ -1,9 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship crop_video query at sf0.001;
-``queries()`` exposes every implemented operator from SURVEY.md §2 as a
+``queries()`` exposes every registered query as a
 ``(spark, sf_dir) -> DataFrame`` callable; ``oracle_sql()`` gives the DuckDB
-twin for each hash-checkable query. Implementations live in
+twin for each hash-checkable query. Both return the registry in
+registration order: the plan modules in the import order below, each
+module's queries in definition order. Implementations live in
 ``videos_to_tfrecords_spark/plans/``.
 """
 
@@ -20,268 +22,18 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # importing the query modules populates the registry
 import videos_to_tfrecords_spark.plans.reference_queries  # noqa: F401,E402
 import videos_to_tfrecords_spark.plans.relational_queries  # noqa: F401,E402
-
-try:  # extension modules land incrementally; keep the contract importable
-    import videos_to_tfrecords_spark.plans.text_queries  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import videos_to_tfrecords_spark.plans.similarity_queries  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import videos_to_tfrecords_spark.plans.pipeline_queries  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import videos_to_tfrecords_spark.plans.advanced_queries  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import videos_to_tfrecords_spark.plans.tpch_queries  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import videos_to_tfrecords_spark.plans.graph_queries  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import videos_to_tfrecords_spark.plans.feature_queries  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import videos_to_tfrecords_spark.plans.mining_queries  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import videos_to_tfrecords_spark.plans.learning_queries  # noqa: F401,E402
-except ImportError:
-    pass
-
+import videos_to_tfrecords_spark.plans.text_queries  # noqa: F401,E402
+import videos_to_tfrecords_spark.plans.similarity_queries  # noqa: F401,E402
+import videos_to_tfrecords_spark.plans.pipeline_queries  # noqa: F401,E402
+import videos_to_tfrecords_spark.plans.advanced_queries  # noqa: F401,E402
+import videos_to_tfrecords_spark.plans.tpch_queries  # noqa: F401,E402
+import videos_to_tfrecords_spark.plans.graph_queries  # noqa: F401,E402
+import videos_to_tfrecords_spark.plans.feature_queries  # noqa: F401,E402
+import videos_to_tfrecords_spark.plans.mining_queries  # noqa: F401,E402
+import videos_to_tfrecords_spark.plans.learning_queries  # noqa: F401,E402
 from videos_to_tfrecords_spark.plans.registry import ORACLES, QUERIES  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
-# Rotation state (VERDICT r08 item #1). The driver's per-round snapshot
-# covers a ~50-entry prefix of the registry, so never-driver-checked
-# queries are ordered FIRST. _TIER1_R9 is the 33 registry names with no
-# driver-of-record row in any CORRECTNESS_r01-r08 — the r8 late additions
-# first (tfrecord_sink_census, variant_shred_census, statestore_reader_audit,
-# sql_udf_frontend, dpp_join_census, the three streaming-watermark
-# censuses, ...), then the 12 r5 eval tails. All 33 are green on the
-# judge's strict local gate (VERDICT r08: "0 failures / 384 queries");
-# this tier converts that local evidence into driver-of-record rows and,
-# at 33 < 50, ends the never-checked debt permanently. Prior rounds'
-# tier tuples live in git history (r8: commit 666adb9 and earlier).
-_TIER1_R9 = (
-    "tfrecord_sink_census", "variant_shred_census",
-    "statestore_reader_audit", "sql_udf_frontend", "dpp_join_census",
-    "streaming_late_data_census", "streaming_stream_stream_left_outer",
-    "streaming_dedup_within_watermark", "collated_group_census",
-    "sql4_agg_surface", "lateral_join_frontend", "bucketed_join_census",
-    "bitmap_distinct_census", "python_stream_source_census",
-    "xml_source_roundtrip", "codepoint_census_arrow",
-    "cogroup_asof_enrichment", "zonemap_pruning_census",
-    "bloom_prefilter_join_census", "dedup_threshold_sweep",
-    "approx_quantile_accuracy_eval", "knn_shapley_values", "eval_pass_at_k",
-    "wilson_lower_bound_ranking", "dsir_effective_sample_size",
-    "eval_best_of_k_value", "group_relative_advantage",
-    "preference_transitivity_audit", "value_drift_ks",
-    "copurchase_recommender_eval", "two_proportion_ztest", "value_drift_qq",
-    "aa_test_null_check",
-)
-
-# Queries whose semantics/oracle CHANGED in round 9 (the sf1 value-gate
-# LSH-recall fix): fronted so the driver re-records them on the new
-# definition rather than carrying a stale green row from r01-r08.
-_CHANGED_R9 = (
-    "doc_minhash_lsh_pairs", "doc_dup_clusters", "dedup_corpus_summary",
-    "dedup_keep_best",
-)
-
-_KNOWN_AT_R9_CLOSE = (
-    "aa_test_null_check", "above_nation_average", "acf_user_value",
-    "ann_recall_at_k", "ann_topk_bruteforce", "ann_topk_ivf",
-    "ann_topk_lsh", "ann_topk_lsh_multiprobe", "annotator_kappa",
-    "approx_distinct_parts", "approx_quantile_accuracy_eval",
-    "arithmetic_normalize", "array_functions", "asof_last_purchase",
-    "asof_nearest_purchase", "audio_energy_windows", "bag_set_ops",
-    "bandit_replay_eval", "benford_first_digit",
-    "bigram_lm_next_token_accuracy", "bitmap_distinct_census",
-    "blocklist_filter_census", "bloom_filter_fpr",
-    "bloom_prefilter_join_census", "bm25_topk_docs",
-    "boilerplate_prefix_census", "bootstrap_mean_ci", "bpe_token_counts",
-    "bpe_train_merges", "brier_decomposition", "bucketed_join_census",
-    "canary_contamination_scan", "capture_recapture_estimate",
-    "chisq_independence_source_lang", "churn_training_frame",
-    "classifier_auc_by_group", "classifier_auc_eval",
-    "classifier_calibration_bins", "classifier_ece_summary",
-    "classifier_eval_card", "cms_bigram_frequencies",
-    "codepoint_census_arrow", "cogroup_asof_enrichment",
-    "cohort_did_purchase", "collated_group_census", "compaction_plan",
-    "conditional_functions", "conformal_coverage_eval",
-    "copurchase_recommender_eval", "corpus_bigram_topk",
-    "corpus_curation_e2e", "count_overdispersion",
-    "coverage_source_selection", "crop_video_events",
-    "cross_doc_span_removal", "cross_source_duplication",
-    "crossmodal_integrity_audit", "crossmodal_spearman_length_norm",
-    "csv_source_roundtrip", "cube_quantity", "cuped_adjusted_lift",
-    "curation_funnel_census", "customer_rfm_segments",
-    "customer_value_gini", "customer_value_lorenz", "customers_by_region",
-    "customers_with_orders", "customers_without_orders",
-    "cv_fold_balance_audit", "daily_anomaly_robust_z",
-    "data_quality_checks", "dataset_datasheet", "dataset_fingerprint",
-    "date_functions", "dedup_corpus_summary", "dedup_keep_best",
-    "dedup_threshold_sweep", "deletion_cascade_audit",
-    "distinct_flag_status", "distinct_parts_per_flag", "doc_bigram_lm_nll",
-    "doc_bpe_token_estimate", "doc_characteristic_terms", "doc_chunking",
-    "doc_containment_pairs", "doc_decontamination", "doc_dup_clusters",
-    "doc_duplicate_spans", "doc_exact_dedup", "doc_fingerprint",
-    "doc_lang_id", "doc_line_dedup", "doc_minhash_lsh_pairs",
-    "doc_negative_samples", "doc_ngram_jaccard_pairs",
-    "doc_normalized_text", "doc_oov_rate", "doc_pii_scrub",
-    "doc_pretokenize_census", "doc_quality_classifier", "doc_quality_score",
-    "doc_repetition_signals", "doc_simhash", "doc_simhash_hamming_pairs",
-    "doc_token_fertility", "doc_token_stats", "doc_trigram_interp_nll",
-    "doc_unigram_entropy", "dpp_join_census", "dsir_effective_sample_size",
-    "dsir_importance_weights", "dup_cluster_size_histogram",
-    "dup_span_length_histogram", "edit_distance_adjacent",
-    "em_linkage_weights", "embedding_alignment_margin",
-    "embedding_anisotropy", "embedding_dedup_funnel_e2e",
-    "embedding_dup_clusters", "embedding_gram_matrix",
-    "embedding_hubness_topk", "embedding_intrinsic_dimension",
-    "embedding_jl_projection", "embedding_norm_by_label",
-    "embedding_quantize_int8", "embedding_threshold_pairs",
-    "equidepth_value_histogram", "eval_best_of_k_value", "eval_pass_at_k",
-    "eval_span_contamination", "event_entropy_rate", "event_funnel",
-    "event_markov_transitions", "event_order_inversions",
-    "event_trigram_topk", "event_value_fill_forward",
-    "event_value_outliers", "ewma_user_value", "experiment_readout_e2e",
-    "filename_extension_filter", "filename_extract_label",
-    "fim_transform_census", "fisher_discriminant_ratio",
-    "frame_downsample_buckets", "full_video_sequences", "fuzzy_name_pairs",
-    "gap_filled_daily_counts", "geometric_mean_value", "global_top_orders",
-    "golden_record_survivorship", "graph_adamic_adar_topk",
-    "graph_bfs_distances", "graph_degree_assortativity",
-    "graph_feature_propagation", "graph_hits_trade", "graph_kcore_trade",
-    "graph_link_prediction", "graph_local_clustering",
-    "graph_lpa_communities", "graph_negative_edge_samples",
-    "graph_pagerank_trade", "graph_ppr_region_affinity", "graph_rich_club",
-    "graph_triangles_copurchase", "graph_weighted_pagerank",
-    "group_relative_advantage", "grouped_split_assignment",
-    "grouping_sets_revenue", "hapax_rate_by_source", "hard_negative_mining",
-    "hash_bucket_split_counts", "heaps_law_fit", "heavy_hitters_mg",
-    "hill_tail_index", "hll_accuracy_eval", "hll_portable_union_distinct",
-    "hll_sketch_union_distinct", "holt_linear_order_forecast",
-    "hybrid_rrf_fusion", "incremental_agg_maintenance",
-    "incremental_dedup_delta", "incremental_join_maintenance",
-    "inference_logits", "interarrival_exponential_gof",
-    "interval_range_join", "isotonic_calibration_fit", "ivfpq_adc_topk",
-    "join_key_skew_report", "json_props_histogram",
-    "jsonl_source_roundtrip", "k_anonymity_audit", "kcenter_coreset",
-    "kendall_tau_value_hour", "kmeans_cluster_profile", "knn_loo_accuracy",
-    "knn_shapley_values", "krippendorff_alpha", "l_diversity_audit",
-    "label_centroid_distances", "label_noise_knn_audit",
-    "lang_id_confusion", "lateral_join_frontend", "lateral_token_positions",
-    "leakage_free_split_audit", "length_bucket_batching",
-    "linreg_extprice_normal_eq", "mahalanobis_event_outliers",
-    "mannwhitney_value_by_flag", "market_basket_rules",
-    "markov_next_event_accuracy", "markov_removal_attribution",
-    "mcnemar_model_compare", "media_decode_frames", "media_phash_dup_pairs",
-    "merge_upsert_orders", "minhash_estimate_calibration",
-    "mixture_alpha_weights", "mixture_resample",
-    "mixture_token_budget_plan", "mmr_diversified_retrieval",
-    "multimodal_meta", "mutual_information_fields",
-    "naive_bayes_source_eval", "nation_supplier_hhi", "nested_subset_curve",
-    "observed_quality_metrics", "orc_source_roundtrip",
-    "order_cohort_retention", "order_status_set_ops", "order_volume_cusum",
-    "outer_join_profile", "overlap_shipping_windows", "packed_concat_spans",
-    "parquet_schema_evolution", "part_brand_stats", "pca_power_component",
-    "pivot_status_quantity", "pq_adc_recall", "pq_codebook_profile",
-    "preference_confound_audit", "preference_pipeline_e2e",
-    "preference_transitivity_audit", "price_elasticity_by_brand",
-    "price_mad_robust_scale", "price_quartiles_ntile",
-    "price_skewness_by_brand", "pricing_summary",
-    "purchase_attribution_first_touch", "purchase_attribution_last_touch",
-    "purchase_attribution_time_decay", "python_stream_source_census",
-    "quality_filter_by_lang", "quantity_percentiles",
-    "quantization_recall_eval", "rag_retrieval_e2e", "random_split_sizes",
-    "range_window_revenue", "ranker_rbo_agreement", "record_linkage_scores",
-    "referential_integrity_audit", "regexp_functions",
-    "retrieval_ndcg_eval", "retrieval_rerank_topk", "revenue_by_priority",
-    "rolling_median_value", "rollup_quantity", "rouge_adjacent_overlap",
-    "running_quantity_by_supplier", "salted_join_revenue",
-    "salted_revenue_by_supplier", "sample_representativeness_audit",
-    "scd2_point_in_time_join", "scd2_priority_history",
-    "seasonal_decomposition_dow", "seasonal_dow_anomaly",
-    "semantic_dedup_keep", "sequence_packing_summary",
-    "session_window_native", "shadow_inference_agreement", "shard_manifest",
-    "ship_latency_by_priority", "shipment_gaps", "shipping_survival_curve",
-    "shuffle_preserves_multiset", "simpsons_paradox_scan",
-    "single_frame_sequences", "skyline_parts", "sliding_distinct_users",
-    "sliding_window_stats_paned", "snapshot_diff_orders",
-    "source_loo_value", "source_quota_sample", "source_shingle_containment",
-    "source_unigram_kl", "span_dedup_keep_first", "sql4_agg_surface",
-    "sql_frontend_q5", "sql_frontend_recursive_rollup", "sql_pipe_frontend",
-    "sql_udf_frontend", "statestore_reader_audit", "stratified_sample",
-    "streaming_cms_counts", "streaming_dedup_events",
-    "streaming_dedup_within_watermark", "streaming_foreachbatch_upsert",
-    "streaming_heavy_hitters", "streaming_hll_distinct",
-    "streaming_late_data_census", "streaming_session_windows",
-    "streaming_stream_static_join", "streaming_stream_stream_join",
-    "streaming_stream_stream_left_outer", "streaming_tumbling_counts",
-    "streaming_value_drift", "string_functions",
-    "subscription_regularity_topk", "supplier_bt_strength",
-    "supplier_shipped_revenue", "t_closeness_audit",
-    "table_profile_lineitem", "temperature_mixture_weights",
-    "text_pipeline_e2e", "tfrecord_sink_census",
-    "tfrecord_source_roundtrip", "theil_sen_order_trend",
-    "threshold_tuning_max_f1", "timestamp_formatting",
-    "token_burstiness_topk", "token_pmi_pairs", "top_orders_per_customer",
-    "tpch_q10_returned_items", "tpch_q11_important_stock",
-    "tpch_q12_shipping_priority_mode", "tpch_q13_customer_distribution",
-    "tpch_q14_promotion_effect", "tpch_q15_top_supplier",
-    "tpch_q16_parts_supplier", "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_volume", "tpch_q19_discounted_revenue",
-    "tpch_q20_potential_promotion", "tpch_q21_waiting_suppliers",
-    "tpch_q22_global_sales_opportunity", "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority", "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping",
-    "tpch_q8_market_share", "tpch_q9_product_profit",
-    "traffic_profile_dow_hour", "trimmed_mean_price_by_flag",
-    "truncation_loss_census", "tumbling_window_stats",
-    "two_proportion_ztest", "uniform_sample_exact_k",
-    "unpivot_part_metrics", "url_parsing", "user_sessions",
-    "user_sessions_udtf", "user_value_trend", "value_drift_chisq",
-    "value_drift_emd", "value_drift_ks", "value_drift_psi",
-    "value_drift_psi_weekly", "value_drift_qq", "variant_props_stats",
-    "variant_shred_census", "video_crop_census", "video_inference_census",
-    "video_pipeline_crop_mode", "video_pipeline_e2e",
-    "video_scene_segments", "video_sequence_census", "vocab_coverage_curve",
-    "vocab_token_ids", "vocab_zipf_slope", "weighted_doc_sample",
-    "wilson_lower_bound_ranking", "xml_source_roundtrip",
-    "zonemap_pruning_census", "zorder_values",
-)
-
-
-def _rotated(mapping: dict) -> dict:
-    """Three-tier ordering so the driver's fixed-size snapshot prefix always
-    covers the least-driver-verified queries first: (1) _TIER1_R9 — the 33
-    names with no driver-of-record row in any CORRECTNESS_r01-r08 (r8 late
-    additions first); (2) brand-new round-9 additions (not in the r9-close
-    known-name list); (3) _CHANGED_R9 — queries whose definition changed
-    this round (the LSH-recall fix), re-recorded on the new semantics;
-    (4) queries already driver-green in some CORRECTNESS_r01..r08."""
-    tier1 = [k for k in _TIER1_R9 if k in mapping]
-    t1 = set(tier1)
-    known = set(_KNOWN_AT_R9_CLOSE)
-    changed = [k for k in _CHANGED_R9 if k in mapping and k not in t1]
-    t1 |= set(changed)
-    order = tier1
-    order += [k for k in mapping if k not in t1 and k not in known]
-    order += changed
-    order += [k for k in mapping if k not in t1 and k in known]
-    return {k: mapping[k] for k in order}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -292,8 +44,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _rotated(dict(QUERIES))
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    return _rotated(dict(ORACLES))
+    return dict(ORACLES)

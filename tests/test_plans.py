@@ -627,3 +627,13 @@ def test_warm_rerun_compiles_no_code(spark, sf_dir):
     before = compiled.getCount()
     one_pass()
     assert compiled.getCount() - before == 0
+
+
+def test_driver_contract_returns_registry_order():
+    """queries() and oracle_sql() hand a driver the registry in
+    registration order; no reordering layer sits between them."""
+    import __spark_entry__ as entrymod
+    from videos_to_tfrecords_spark.plans.registry import ORACLES, QUERIES
+
+    assert list(entrymod.queries()) == list(QUERIES)
+    assert list(entrymod.oracle_sql()) == list(ORACLES)

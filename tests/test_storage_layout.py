@@ -3,7 +3,6 @@ pruning, and bucketed tables giving shuffle-free joins."""
 
 from __future__ import annotations
 
-import glob
 import os
 import tempfile
 
@@ -134,57 +133,6 @@ def test_zorder_write_prunes_2d_range_predicates(spark, tmp_path):
     # (row-group pruning applies automatically on the clustered files)
     plan = plan_of(spark.read.parquet(zpath).filter(pred))
     assert "PushedFilters" in plan and "GreaterThanOrEqual(l_partkey,100)" in plan
-
-
-def test_compact_small_files_reduces_count_losslessly(spark, tmp_path):
-    """64 tiny files compact to the computed target count; the row multiset
-    survives; range-clustered output keeps footer min/max tight."""
-    from videos_to_tfrecords_spark.sources.layout import (
-        compact_small_files,
-        prunable_files,
-    )
-
-    src = str(tmp_path / "frag")
-    spark.range(0, 4096).selectExpr(
-        "id", "id * 7 % 4096 AS v"
-    ).repartition(64).write.parquet(src)
-    out = str(tmp_path / "compact")
-    stats = compact_small_files(
-        spark, src, out, target_bytes=1 << 30, sort_col="id"
-    )
-    assert stats["files_before"] == 64
-    assert stats["files_after"] == stats["target_files"] == 1
-    a = sorted(r.id for r in spark.read.parquet(out).collect())
-    assert a == list(range(4096))
-    # after re-clustering on id, an id-range predicate touches 1 file
-    touch, total = prunable_files(out, {"id": (10, 20)})
-    assert (touch, total) == (1, 1)
-
-
-def test_compact_multiple_targets_cluster_ranges(spark, tmp_path):
-    """With a small target size the compactor emits several range-disjoint
-    files: an id-range predicate touches a strict subset of them."""
-    from videos_to_tfrecords_spark.sources.layout import (
-        compact_small_files,
-        prunable_files,
-    )
-
-    src = str(tmp_path / "frag2")
-    spark.range(0, 50_000).selectExpr("id", "CAST(id AS STRING) AS s").repartition(
-        32
-    ).write.parquet(src)
-    bytes_total = sum(
-        os.path.getsize(f)
-        for f in glob.glob(src + "/*.parquet")
-    )
-    out = str(tmp_path / "compact2")
-    stats = compact_small_files(
-        spark, src, out, target_bytes=bytes_total // 4 + 1, sort_col="id"
-    )
-    assert 2 <= stats["files_after"] <= 8
-    touch, total = prunable_files(out, {"id": (0, 100)})
-    assert total == stats["files_after"]
-    assert touch < total
 
 
 def test_read_binary_blobs_local(spark, tmp_path):

@@ -1075,3 +1075,36 @@ def test_shingle_table_chunked_output_matches_single_batch(spark):
 
     with _pytest.raises(PythonException, match="split the document upstream"):
         shingle_table(df, _chunk_bytes=32).collect()
+
+
+def test_ngram_partial_counts_chunked_counts_match_single_batch(spark):
+    """Output over the chunk cap splits into several n-gram-aligned record
+    batches (exercised with a tiny cap): the summed counts equal the
+    unchunked run's. A chunk must stay strictly under the cap, so an
+    n-gram exactly as long as the cap raises."""
+    import pytest as _pytest
+    from pyspark.errors.exceptions.captured import PythonException
+
+    from videos_to_tfrecords_spark.operators.text import ngram_partial_counts
+
+    rows = [("aa bb cc dd ee aa bb cc",), (None,), ("",), ("xx yy aa bb",)]
+    df = spark.createDataFrame(rows, "text string").coalesce(1)
+
+    def summed(**kw):
+        return {
+            r.ngram: r.n
+            for r in ngram_partial_counts(df, n=2, **kw)
+            .groupBy("ngram")
+            .agg(F.sum("cnt").alias("n"))
+            .collect()
+        }
+
+    want = summed()
+    assert want["aa bb"] == 3 and sum(want.values()) == 10
+    # every bigram here is 5 bytes: a 12-byte cap holds two per chunk, a
+    # 6-byte cap one, so "aa bb" is counted in several chunks
+    for cap in (12, 6):
+        assert summed(_chunk_bytes=cap) == want
+        assert ngram_partial_counts(df, n=2, _chunk_bytes=cap).count() > len(want)
+    with _pytest.raises(PythonException, match="exceeds the output chunk cap"):
+        ngram_partial_counts(df, n=2, _chunk_bytes=5).collect()

@@ -86,3 +86,26 @@ def test_scale_probe_rejects_option_argument(tmp_path, monkeypatch):
     assert mod.main(["--help"]) == 2
     assert mod.main([str(tmp_path / "a"), str(tmp_path / "b")]) == 2
     assert os.listdir(tmp_path) == []
+
+
+def test_check_oracle_rejects_unknown_flag(monkeypatch, capsys):
+    """A misspelt flag exits 2 and names it, and --help prints the usage
+    and exits 0 — both before Spark or DuckDB start."""
+    import duckdb
+
+    import videos_to_tfrecords_spark.session as session
+
+    path = os.path.join(os.path.dirname(_TOOL), "check_oracle.py")
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("an engine started")
+
+    monkeypatch.setattr(duckdb, "connect", refuse)
+    monkeypatch.setattr(session, "get_spark", refuse)
+    assert mod.main(["--chaned"]) == 2
+    assert "--chaned" in capsys.readouterr().err
+    assert mod.main(["--help"]) == 0
+    assert "Usage:" in capsys.readouterr().out

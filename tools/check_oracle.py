@@ -6,14 +6,19 @@ row count, schema (column names), and an order-insensitive value hash
 (columns sorted by name, rows sorted, values canonicalized). Use while
 iterating so the driver's CORRECTNESS_r{N}.json holds no surprises.
 
-Usage: python tools/check_oracle.py [sf_dir] [query ...]
+Usage: python tools/check_oracle.py [flags] [sf_dir] [query ...]
 Flags:
   --cache      persist each table scan once per session (SPARK_GRAFT_CACHE_TABLES)
   --changed    only run queries whose defining plans/ module appears in
                `git diff HEAD --name-only`; any diff OUTSIDE plans/ (operators,
                sources, functions, ...) falls back to the full suite because a
                shared helper can affect any query
-  --tz=ZONE    non-UTC driver-session probe (see below)
+  --twice      run every Spark query twice in one session and require the
+               same value hash (statefulness probe)
+  --tz=ZONE    run the Spark side in a session whose time zone is ZONE, to
+               prove load_table's UTC pinning (the oracle side has no zone)
+  --json=PATH  write one record per query (status, rows, seconds) to PATH
+  --help       print this text
 """
 
 from __future__ import annotations
@@ -136,26 +141,44 @@ def table_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    # --tz=America/New_York: build a NON-UTC session to prove load_table's
-    # UTC pinning protects every timezone-sensitive query (a real round-1
-    # bug class); the oracle side is timezone-free either way
-    tz = next(
-        (a.split("=", 1)[1] for a in sys.argv[1:] if a.startswith("--tz=")), None
-    )
+def parse_args(argv: list[str]) -> tuple[list[str], dict[str, str | bool]] | int:
+    """Split ``argv`` into positional arguments and flags (module docstring).
+    Returns an exit code instead when the run should not start: 0 after
+    ``--help`` printed the usage, 2 for an unknown flag."""
+    args: list[str] = []
+    flags: dict[str, str | bool] = {}
+    for a in argv:
+        name, eq, value = a.partition("=")
+        if not a.startswith("-"):
+            args.append(a)
+        elif a in ("--help", "-h"):
+            print(__doc__)
+            return 0
+        elif name in ("--cache", "--changed", "--twice") and not eq:
+            flags[name] = True
+        elif name in ("--tz", "--json") and value:
+            flags[name] = value
+        else:
+            print(f"check_oracle: unknown flag {a} (see --help)", file=sys.stderr)
+            return 2
+    return args, flags
+
+
+def main(argv: list[str] | None = None) -> int:
+    parsed = parse_args(sys.argv[1:] if argv is None else argv)
+    if isinstance(parsed, int):
+        return parsed
+    args, flags = parsed
     sf_dir = args[0] if args else SF_DIR_DEFAULT
     only = set(args[1:])
-    # --twice: run every Spark query a second time in the SAME session and
-    # require an identical value hash (statefulness probe)
-    twice = "--twice" in sys.argv[1:]
-    if "--cache" in sys.argv[1:]:
+    twice = bool(flags.get("--twice"))
+    if flags.get("--cache"):
         os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
 
     sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
 
-    if "--changed" in sys.argv[1:] and not only:
+    if flags.get("--changed") and not only:
         import subprocess
 
         from videos_to_tfrecords_spark.plans.registry import MODULES
@@ -184,21 +207,19 @@ def main() -> int:
             print("--changed: no python diff -> nothing to run")
             return 0
 
-    if tz:
-        from pyspark.sql import SparkSession
+    from videos_to_tfrecords_spark.session import get_spark
 
-        spark = (
-            SparkSession.builder.master("local[32]")
-            .appName("check_oracle_tz")
-            .config("spark.sql.session.timeZone", tz)
-            .config("spark.sql.shuffle.partitions", "32")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
+    # --tz=America/New_York: a NON-UTC session proves load_table's UTC
+    # pinning protects every timezone-sensitive query (a real round-1 bug
+    # class); the oracle side is timezone-free either way
+    tz = flags.get("--tz")
+    if tz:
+        spark = get_spark(
+            "check_oracle_tz", extra_conf={"spark.sql.session.timeZone": tz}
         )
     else:
-        from videos_to_tfrecords_spark.session import get_spark
-
         spark = get_spark("check_oracle")
+
     def fresh_con():
         """Connection with an explicit memory budget and spill directory.
         DuckDB's default limit (80% of RAM) overcommits next to the 24g
@@ -236,10 +257,7 @@ def main() -> int:
     # --json=PATH: persist one record per query (status/rows/secs) so a
     # whole-suite gate at a non-default SF leaves a citable artifact
     # instead of only scrollback (the r8 sf1 gate died unrecorded)
-    json_out = next(
-        (a.split("=", 1)[1] for a in sys.argv[1:] if a.startswith("--json=")),
-        None,
-    )
+    json_out = flags.get("--json")
     record: dict[str, dict] = {}
 
     queries = entrymod.queries()

@@ -53,22 +53,14 @@ def shingle_table(
 ) -> DataFrame:
     """(id, shingle) distinct pairs — the unit of Jaccard similarity.
 
-    Vectorized ``mapInArrow`` (guide §4.2): tokens come from a single-space
-    split, so the n-gram starting at token i is EXACTLY the contiguous byte
-    slice of the text from token i's start to token i+n-1's end — shingling
-    reduces to offset arithmetic on the Arrow value buffer (0x20 never
-    occurs inside a UTF-8 multibyte sequence, so byte positions of spaces
-    are token boundaries). NumPy computes every slice boundary in a few
-    whole-batch passes and one ragged gather builds the output buffer;
-    within-doc distinct (the ``seen`` set of the old row-loop) is Arrow's
-    C++ hash group-by. Output is byte-identical to the previous
-    row-at-a-time mapInPandas for NON-NULL inputs (A/B-verified incl.
-    empty/short docs, consecutive spaces, leading/trailing spaces,
-    multi-byte UTF-8) and to the declarative functions.textfn.shingles().
-    vs the row loop: no per-row Python objects cross the boundary
-    (mapInArrow, not mapInPandas), no pandas import in the worker
-    (fresh-worker init on a cold executor drops ~0.7 s), and throughput
-    scales with bytes, not rows.
+    Vectorized ``mapInArrow`` (guide §4.2) over the shared n-gram slice
+    kernel (``videos_to_tfrecords_spark._ngram``): every shingle is a
+    contiguous byte slice of its text, cut out by whole-batch NumPy offset
+    arithmetic; within-doc distinct is Arrow's C++ hash group-by. For
+    non-null inputs the output equals the declarative
+    functions.textfn.shingles() (empty/short docs, consecutive, leading and
+    trailing spaces, multi-byte UTF-8). No per-row Python objects cross the
+    boundary, and throughput scales with bytes, not rows.
 
     Null semantics (r11 ADVICE): a NULL text is treated as an empty
     document — zero shingles, no output row (the old row loop raised on
@@ -89,84 +81,34 @@ def shingle_table(
     def gen(batches):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        out_fields = [pa.field(id_col, pa.int64()), pa.field("s", pa.string())]
-        out_schema = pa.schema(out_fields)
+        from videos_to_tfrecords_spark._ngram import NgramSlices
 
+        out_schema = pa.schema(
+            [pa.field(id_col, pa.int64()), pa.field("s", pa.string())]
+        )
+        empty = pa.RecordBatch.from_arrays(
+            [pa.array([], pa.int64()), pa.array([], pa.string())],
+            schema=out_schema,
+        )
         for rb in batches:
             ids_arr = rb.column(0)
-            sa = rb.column(1)
-            if len(sa) == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([], pa.int64()), pa.array([], pa.string())],
-                    schema=out_schema,
-                )
-                continue
             if ids_arr.null_count:
                 # int64-with-nulls comes back from to_numpy as float64 with
                 # NaN; astype(int64) would turn NaN into an arbitrary id.
                 raise ValueError("shingle_table: null doc ids are not supported")
-            if sa.null_count:
-                sa = pc.fill_null(sa, "")  # null text == empty doc (no shingles)
-            if pa.types.is_large_string(sa.type):
-                off_dtype = np.int64
-            else:
-                off_dtype = np.int32
-            bufs = sa.buffers()
-            offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-                sa.offset : sa.offset + len(sa) + 1
-            ].astype(np.int64)
-            data = np.frombuffer(bufs[2], dtype=np.uint8)
-            doc_begin, doc_end = offsets[:-1], offsets[1:]
-            n_docs = len(sa)
-            # token boundaries: every space byte within [begin, end) of its doc
-            window = data[offsets[0] : offsets[-1]]
-            spaces = np.flatnonzero(window == 32).astype(np.int64) + offsets[0]
-            doc_of_space = np.searchsorted(doc_end, spaces, side="right")
-            k = np.bincount(doc_of_space, minlength=n_docs) + 1  # tokens per doc
-            n_tok = int(k.sum())
-            tok_off = np.zeros(n_docs + 1, dtype=np.int64)
-            np.cumsum(k, out=tok_off[1:])
-            starts = np.empty(n_tok, dtype=np.int64)
-            ends = np.empty(n_tok, dtype=np.int64)
-            first = np.zeros(n_tok, dtype=bool)
-            first[tok_off[:-1]] = True
-            starts[first] = doc_begin
-            starts[~first] = spaces + 1
-            last = np.zeros(n_tok, dtype=bool)
-            last[tok_off[1:] - 1] = True
-            ends[last] = doc_end
-            ends[~last] = spaces
-            # shingle j of a doc spans tokens j .. j+n-1
-            m = np.maximum(k - n + 1, 0)
-            n_sh = int(m.sum())
-            if n_sh == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([], pa.int64()), pa.array([], pa.string())],
-                    schema=out_schema,
-                )
+            sl = NgramSlices(rb.column(1), n)
+            if sl.total == 0:
+                yield empty
                 continue
-            sh_off = np.zeros(n_docs + 1, dtype=np.int64)
-            np.cumsum(m, out=sh_off[1:])
-            gidx = np.arange(n_sh, dtype=np.int64) + np.repeat(
-                tok_off[:-1] - sh_off[:-1], m
-            )
-            sh_start = starts[gidx]
-            sh_len = ends[gidx + n - 1] - sh_start
-            out_off = np.zeros(n_sh + 1, dtype=np.int64)
-            np.cumsum(sh_len, out=out_off[1:])
             id_np = np.asarray(ids_arr.to_numpy(zero_copy_only=False), dtype=np.int64)
-
-            # Output bytes (~n× input) can exceed Arrow's 2 GiB string
-            # value-buffer cap even for int32-offset input. Emit doc-aligned
-            # sub-batches each < 2³¹ output bytes (doc-aligned keeps the
-            # within-doc distinct below exact). doc_out_end[d] = cumulative
-            # output bytes through doc d.
-            doc_out_end = out_off[sh_off[1:]]
-            d_lo = 0
+            # Emit doc-aligned sub-batches each < 2³¹ output bytes
+            # (doc-aligned keeps the within-doc distinct below exact).
+            # doc_out_end[d] = cumulative output bytes through doc d.
+            doc_out_end = sl.out_off[sl.doc_off[1:]]
+            d_lo, n_docs = 0, len(ids_arr)
             while d_lo < n_docs:
-                base = int(out_off[sh_off[d_lo]])
+                base = int(sl.out_off[sl.doc_off[d_lo]])
                 d_hi = int(
                     np.searchsorted(doc_out_end, base + _chunk_bytes, side="left")
                 )
@@ -177,43 +119,16 @@ def shingle_table(
                         "shingle_table: a single document produces >= 2 GiB "
                         "of shingle bytes; split the document upstream"
                     )
-                lo, hi = sh_off[d_lo], sh_off[d_hi]
-                c_sh = int(hi - lo)
-                if c_sh == 0:
+                lo, hi = int(sl.doc_off[d_lo]), int(sl.doc_off[d_hi])
+                if hi == lo:
                     d_lo = d_hi
                     continue
-                c_off = out_off[lo : hi + 1] - base
-                c_total = int(c_off[-1])
-                c_len = sh_len[lo:hi]
-                # 32-bit gather indices whenever both the input value buffer
-                # and this chunk's output allow — the index temporaries are
-                # the dominant allocation of this kernel
-                idx_dt = (
-                    np.int32
-                    if int(offsets[-1]) < 2**31 and c_total < 2**31
-                    else np.int64
-                )
-                pos = (
-                    np.arange(c_total, dtype=idx_dt)
-                    - np.repeat(c_off[:-1].astype(idx_dt), c_len)
-                    + np.repeat(sh_start[lo:hi].astype(idx_dt), c_len)
-                )
-                out_bytes = data[pos]
-                s_arr = pa.Array.from_buffers(
-                    pa.string(),
-                    c_sh,
-                    [
-                        None,
-                        pa.py_buffer(c_off.astype(np.int32).tobytes()),
-                        pa.py_buffer(out_bytes.tobytes()),
-                    ],
-                )
                 out_ids = pa.array(
-                    np.repeat(id_np[d_lo:d_hi], m[d_lo:d_hi]), type=pa.int64()
+                    np.repeat(id_np[d_lo:d_hi], sl.per_doc[d_lo:d_hi]),
+                    type=pa.int64(),
                 )
-                # within-doc distinct, exactly the old `seen` set
                 dedup = (
-                    pa.table({id_col: out_ids, "s": s_arr})
+                    pa.table({id_col: out_ids, "s": sl.strings(lo, hi)})
                     .group_by([id_col, "s"], use_threads=False)
                     .aggregate([])
                 )

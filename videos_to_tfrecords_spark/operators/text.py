@@ -51,21 +51,19 @@ def ngram_partial_counts(
     per Arrow batch, to be summed by a downstream groupBy — the combiner
     shape of BPE-style vocabulary counting.
 
-    Same vectorized offset-arithmetic kernel as
-    ``operators.dedup.shingle_table`` (tokens come from a single-space
-    split, so every n-gram is a contiguous byte slice of the text; all
-    slice bounds are whole-batch NumPy passes and one ragged gather builds
-    the output buffer), but COUNTING via Arrow's C++ group-by instead of
-    within-doc distinct — no doc ids, no per-row Python objects, no pandas
-    in the worker. Null text counts as an empty document (zero n-grams).
-    Output is emitted in sub-batches under the 2 GiB ``string``
-    value-buffer cap; counts may split across sub-batches (the downstream
-    sum merges them), so splits need no doc alignment."""
+    Same n-gram slice kernel as ``operators.dedup.shingle_table``
+    (``videos_to_tfrecords_spark._ngram``), but COUNTING via Arrow's C++
+    group-by instead of within-doc distinct — no doc ids, no per-row Python
+    objects. Null text counts as an empty document (zero n-grams). Output
+    is emitted in sub-batches under the 2 GiB ``string`` value-buffer cap;
+    counts may split across sub-batches (the downstream sum merges them), so
+    splits need no doc alignment."""
 
     def gen(batches):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
+
+        from videos_to_tfrecords_spark._ngram import NgramSlices
 
         out_schema = pa.schema(
             [pa.field("ngram", pa.string()), pa.field("cnt", pa.int64())]
@@ -75,60 +73,18 @@ def ngram_partial_counts(
             schema=out_schema,
         )
         for rb in batches:
-            sa = rb.column(0)
-            if len(sa) == 0:
+            sl = NgramSlices(rb.column(0), n)
+            if sl.total == 0:
                 yield empty
                 continue
-            if sa.null_count:
-                sa = pc.fill_null(sa, "")
-            off_dtype = (
-                np.int64 if pa.types.is_large_string(sa.type) else np.int32
-            )
-            bufs = sa.buffers()
-            offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-                sa.offset : sa.offset + len(sa) + 1
-            ].astype(np.int64)
-            data = np.frombuffer(bufs[2], dtype=np.uint8)
-            doc_begin, doc_end = offsets[:-1], offsets[1:]
-            n_docs = len(sa)
-            window = data[offsets[0] : offsets[-1]]
-            spaces = np.flatnonzero(window == 32).astype(np.int64) + offsets[0]
-            doc_of_space = np.searchsorted(doc_end, spaces, side="right")
-            k = np.bincount(doc_of_space, minlength=n_docs) + 1
-            n_tok = int(k.sum())
-            tok_off = np.zeros(n_docs + 1, dtype=np.int64)
-            np.cumsum(k, out=tok_off[1:])
-            starts = np.empty(n_tok, dtype=np.int64)
-            ends = np.empty(n_tok, dtype=np.int64)
-            first = np.zeros(n_tok, dtype=bool)
-            first[tok_off[:-1]] = True
-            starts[first] = doc_begin
-            starts[~first] = spaces + 1
-            last = np.zeros(n_tok, dtype=bool)
-            last[tok_off[1:] - 1] = True
-            ends[last] = doc_end
-            ends[~last] = spaces
-            m = np.maximum(k - n + 1, 0)
-            n_sh = int(m.sum())
-            if n_sh == 0:
-                yield empty
-                continue
-            sh_off = np.zeros(n_docs + 1, dtype=np.int64)
-            np.cumsum(m, out=sh_off[1:])
-            gidx = np.arange(n_sh, dtype=np.int64) + np.repeat(
-                tok_off[:-1] - sh_off[:-1], m
-            )
-            sh_start = starts[gidx]
-            sh_len = ends[gidx + n - 1] - sh_start
-            out_off = np.zeros(n_sh + 1, dtype=np.int64)
-            np.cumsum(sh_len, out=out_off[1:])
             lo = 0
-            while lo < n_sh:
-                base = int(out_off[lo])
+            while lo < sl.total:
+                # the chunk's bytes must stay < _chunk_bytes: equality with
+                # the cap raises, because int32 offsets top out at 2³¹ − 1
                 hi = (
                     int(
                         np.searchsorted(
-                            out_off, base + _chunk_bytes, side="left"
+                            sl.out_off, sl.out_off[lo] + _chunk_bytes, side="left"
                         )
                     )
                     - 1
@@ -138,30 +94,8 @@ def ngram_partial_counts(
                         "ngram_partial_counts: a single n-gram exceeds the "
                         "output chunk cap"
                     )
-                c_off = out_off[lo : hi + 1] - base
-                c_len = sh_len[lo:hi]
-                c_total = int(c_off[-1])
-                idx_dt = (
-                    np.int32
-                    if int(offsets[-1]) < 2**31 and c_total < 2**31
-                    else np.int64
-                )
-                pos = (
-                    np.arange(c_total, dtype=idx_dt)
-                    - np.repeat(c_off[:-1].astype(idx_dt), c_len)
-                    + np.repeat(sh_start[lo:hi].astype(idx_dt), c_len)
-                )
-                s_arr = pa.Array.from_buffers(
-                    pa.string(),
-                    hi - lo,
-                    [
-                        None,
-                        pa.py_buffer(c_off.astype(np.int32).tobytes()),
-                        pa.py_buffer(data[pos].tobytes()),
-                    ],
-                )
                 counted = (
-                    pa.table({"ngram": s_arr})
+                    pa.table({"ngram": sl.strings(lo, hi)})
                     .group_by(["ngram"], use_threads=False)
                     .aggregate([("ngram", "count")])
                 )

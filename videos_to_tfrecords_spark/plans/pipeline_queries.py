@@ -569,13 +569,9 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic split → video decode (fake, mapInPandas UDTF) → batched
     inference (pandas UDF) → full_video sequence assembly → FormatFeatures
     pivot → SequenceExample proto bytes. Output: per-split sequence counts
-    and total proto bytes (deterministic; schema-stable).
-    SPARK_GRAFT_E2E_BY_SHAPE=1 switches the inference stage to
-    shape-homogeneous batching (see run_pipeline_e2e)."""
-    import os
-
-    by_shape = os.environ.get("SPARK_GRAFT_E2E_BY_SHAPE") == "1"
-    return run_pipeline_e2e(spark, sf_dir, by_shape=by_shape)
+    and total proto bytes (deterministic; schema-stable). Inference runs
+    fused with decode (see run_pipeline_e2e)."""
+    return run_pipeline_e2e(spark, sf_dir)
 
 
 def _text_e2e_oracle() -> str:

@@ -96,52 +96,6 @@ def prunable_files(path: str, ranges: dict[str, tuple]) -> tuple[int, int]:
     return needed, len(per_file)
 
 
-def compact_small_files(
-    spark,
-    path: str,
-    out_path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    sort_col: str | None = None,
-) -> dict[str, int]:
-    """Small-files compaction (the OPTIMIZE half of Delta's
-    OPTIMIZE ... ZORDER): rewrite a parquet directory into files sized
-    toward ``target_bytes``, optionally re-clustering on ``sort_col``
-    while at it. File count is computed from the ACTUAL on-disk bytes
-    (Σ size / target, ceil) — the same arithmetic a table-format
-    maintenance job runs — and the rewrite is one
-    ``repartitionByRange``/``repartition`` pass, so at 100 TB it scales
-    as a single shuffle of the partition being compacted (real systems
-    compact partition-by-partition; callers pass one partition directory
-    at a time).
-
-    Returns {files_before, bytes_before, files_after, target_files} for
-    the caller's maintenance audit log.
-    """
-    import math
-
-    files = [
-        f for f in glob.glob(os.path.join(path, "*.parquet"))
-        if os.path.isfile(f)
-    ]
-    bytes_before = sum(os.path.getsize(f) for f in files)
-    n_target = max(1, math.ceil(bytes_before / target_bytes))
-    df = spark.read.parquet(path)
-    if sort_col is not None:
-        out = df.repartitionByRange(n_target, sort_col).sortWithinPartitions(sort_col)
-    else:
-        out = df.repartition(n_target)
-    out.write.mode("overwrite").parquet(out_path)
-    files_after = len(
-        [f for f in glob.glob(os.path.join(out_path, "*.parquet")) if os.path.isfile(f)]
-    )
-    return {
-        "files_before": len(files),
-        "bytes_before": bytes_before,
-        "files_after": files_after,
-        "target_files": n_target,
-    }
-
-
 def write_bucketed(
     df,
     table_name: str,

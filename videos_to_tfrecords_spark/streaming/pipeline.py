@@ -79,73 +79,6 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_sliding_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production-shaped variant: watermark + sliding window + append
-    mode (bounded state). On a bounded source the un-flushed tail is
-    expected — asserted in tests, not oracle-compared."""
-    agg = (
-        events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 day")
-        .groupBy(F.window("ts", "2 days", "1 day").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-    )
-    name = f"stream_app_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
-        (F.unix_micros("w.start") / 1_000_000).cast("long").alias("win_start_s"),
-        "event_type",
-        "n",
-    )
-
-
-def streaming_user_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (§7 extension; the reference has
-    no keyed state — SURVEY §2.5): per-user running event count kept in
-    arbitrary state via applyInPandasWithState. Drained on the bounded
-    source, the final per-user counts equal the batch groupBy — asserted in
-    tests/test_streaming.py."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-    counts = (
-        events_stream(spark, sf_dir)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="user_id long, n_events long",
-            stateStructType="n long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    name = f"stream_state_{uuid.uuid4().hex[:8]}"
-    q = counts.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # update-mode memory sink may hold several emissions per key; the LAST
-    # (max) is the final running count
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
-    )
-
-
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication (the LLM-pipeline dedup primitive under
     unbounded input): dropDuplicates on a key within a watermark — state
@@ -466,66 +399,6 @@ def streaming_sessionize_stateful(
     return spark.table(name)
 
 
-def streaming_merge_upsert(
-    spark: SparkSession,
-    src_dir: str,
-    target_dir: str,
-    schema: T.StructType,
-    key_cols: list[str],
-    order_cols: list[str],
-) -> int:
-    """Streaming CDC apply: every microbatch MERGEs into a parquet target
-    (the foreachBatch upsert idiom — what Delta's MERGE INTO does with
-    ACID; here emulated with operators.relational.merge_upsert + an
-    atomic-enough overwrite, the documented non-lakehouse fallback).
-
-    Within a batch the LATEST row per key wins (ordered by ``order_cols``
-    desc, deterministic); across batches later microbatches supersede
-    earlier ones — last-writer-wins CDC. The merged target is
-    localCheckpoint'ed before the overwrite so the write never reads the
-    files it replaces. Returns the number of microbatches applied.
-    maxFilesPerTrigger=1 in the reader makes each source file its own
-    batch, so tests exercise true multi-batch upserts."""
-    import os
-
-    from pyspark.sql import Window
-
-    from videos_to_tfrecords_spark.operators.relational import merge_upsert
-
-    n_batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.desc(c) for c in order_cols]
-        )
-        latest = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if os.path.isdir(target_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(target_dir)
-        ):
-            target = spark.read.schema(batch_df.schema).parquet(target_dir)
-            merged = merge_upsert(target, latest, key_cols)
-        else:
-            merged = latest
-        # materialize BEFORE overwriting the directory being read
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(target_dir)
-        n_batches["n"] += 1
-
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(
-        src_dir
-    )
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return n_batches["n"]
-
-
 def streaming_stream_stream_join(
     spark: SparkSession,
     sf_dir: str,
@@ -588,120 +461,6 @@ def streaming_stream_stream_join(
     finally:
         q.stop()
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
-
-
-def streaming_sessionize_tws(
-    spark: SparkSession,
-    src_dir: str,
-    gap_seconds: int = 3600,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Sessionization on Spark 4's ``transformWithStateInPandas`` — the
-    new-generation stateful API (successor to applyInPandasWithState):
-    explicit ValueState + event-time TIMERS instead of a per-call timeout
-    conf, schema'd state the engine can evolve, and a mandatory RocksDB
-    state store (set spark.sql.streaming.stateStore.providerClass before
-    calling — state lives on executor disk by construction). NOTE: the
-    API's Python driver worker talks protobuf to the JVM state server, so
-    the ``protobuf`` package must be importable on workers — absent in
-    this container, hence the pytest is skipif(protobuf) like the cv2/TF
-    legs; the implementation follows the public API contract. Semantics
-    identical to :func:`streaming_sessionize_stateful`: sessions close
-    in-stream when a later event passes the gap, or via the timer when the
-    watermark passes last + gap. Pytest asserts both APIs emit the same
-    sessions."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    gap_us = gap_seconds * 1_000_000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState(
-                "open_session", "start_us long, last_us long, n long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            ts_us = []
-            for pdf in rows:
-                ts_us.extend(int(t.value) // 1000 for t in pd.to_datetime(pdf["ts"]))
-            ts_us.sort()
-            out = {"user_id": [], "start_us": [], "end_us": [], "n_events": []}
-            if self._state.exists():
-                start, last, n = self._state.get()
-            else:
-                start, last, n = 0, 0, 0
-            for t in ts_us:
-                if n == 0:
-                    start = last = t
-                    n = 1
-                elif t - last > gap_us:
-                    out["user_id"].append(key[0])
-                    out["start_us"].append(start)
-                    out["end_us"].append(last)
-                    out["n_events"].append(n)
-                    start = last = t
-                    n = 1
-                else:
-                    last = max(last, t)
-                    n += 1
-            if n > 0:
-                self._state.update((start, last, n))
-                # close the open session when the watermark passes last+gap
-                self._handle.registerTimer((last + gap_us) // 1000 + 1)
-            if out["user_id"]:
-                yield pd.DataFrame(out)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if self._state.exists():
-                start, last, n = self._state.get()
-                # the timer may be stale (a later event extended the
-                # session and registered a newer timer): only flush if the
-                # session really ended before this expiry
-                if expiredTimerInfo.getExpiryTimeInMs() >= (last + gap_us) // 1000 + 1:
-                    self._state.clear()
-                    yield pd.DataFrame(
-                        {
-                            "user_id": [key[0]],
-                            "start_us": [start],
-                            "end_us": [last],
-                            "n_events": [n],
-                        }
-                    )
-
-        def close(self) -> None:
-            pass
-
-    stream = (
-        spark.readStream.schema(
-            T.StructType(
-                [
-                    T.StructField("event_id", T.LongType()),
-                    T.StructField("ts", T.TimestampType()),
-                    T.StructField("user_id", T.LongType()),
-                ]
-            )
-        )
-        .parquet(src_dir)
-        .withWatermark("ts", "0 seconds")
-    )
-    sessions = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType="user_id long, start_us long, end_us long, n_events long",
-        outputMode="append",
-        timeMode="EventTime",
-    )
-    name = f"stream_tws_{uuid.uuid4().hex[:8]}"
-    writer = sessions.writeStream.outputMode("append").format("memory").queryName(name)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
