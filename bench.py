@@ -119,6 +119,26 @@ def _contending_pids() -> list[dict]:
     return flagged
 
 
+def release_blocks(spark) -> None:
+    """Release the localCheckpoint/persist blocks of the queries run so
+    far: the Py4J finalizer -> ContextCleaner chain only fires on GC, and
+    checkpointed blocks are lineage-truncated (NOT re-computable if
+    evicted) — 219 queries' worth accumulating in one session is what
+    broke the first sf1 suite run. Python GC alone only queues the Py4J
+    finalizers; the JVM-side ContextCleaner drains on JVM GC, which a
+    mostly-idle 24g heap may not trigger for many queries — by query ~150
+    the r10 canonical run showed 3-10x in-suite inflation (solo: 1x) from
+    accumulated blocks/broadcasts. Force both collections so each query
+    starts from a comparable JVM state."""
+    import gc
+
+    gc.collect()
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception:  # noqa: BLE001  (py4j hiccup: skip, never fail the bench)
+        pass
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
@@ -137,13 +157,15 @@ def main() -> None:
 
     spark.range(1000).select(_warm("id")).write.format("noop").mode("overwrite").save()
 
-    # warm the worker pool for the mapInArrow path too (r11): the Arrow
-    # kernels import numpy+pyarrow (NOT pandas) in the worker, so a solo
-    # measurement of a 1-task mapInArrow query otherwise pays a per-worker
-    # pyarrow import (~0.3 s) that the full suite amortizes after its first
-    # Arrow query — warm-ups are outside every timed region, same rationale
-    # as the pandas_udf warm-up above. Run one task per core so the whole
-    # reusable pool is warmed, not just one worker.
+    # warm the worker pool for the mapInArrow path too (r11): a worker's
+    # first mapInArrow task pays the Arrow path's imports — pyarrow, and
+    # pandas too: every worker holds pandas after its first mapInArrow
+    # task, even when the function imports neither — so a solo measurement
+    # of a 1-task mapInArrow query otherwise pays a per-worker import cost
+    # that the full suite amortizes after its first Arrow query. Warm-ups
+    # are outside every timed region, same rationale as the pandas_udf
+    # warm-up above. Run one task per core so the whole reusable pool is
+    # warmed, not just one worker.
     def _warm_arrow(batches):
         import numpy as np  # noqa: F401
         import pyarrow  # noqa: F401
@@ -163,15 +185,6 @@ def main() -> None:
     for t in TABLES:
         load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
 
-    # the flagship query, untimed (VERDICT r03 #6): first-run codegen/JIT
-    # on a real query plan (the range/pandas warm-ups above don't touch
-    # join/agg codegen paths), so the first TIMED query isn't the one
-    # paying session-global JIT warm-up
-    try:
-        entrymod.entry(spark).write.format("noop").mode("overwrite").save()
-    except Exception as e:  # noqa: BLE001
-        print(f"bench warm-up query failed: {e}", file=sys.stderr)
-
     try:
         sf = float(os.path.basename(os.path.normpath(sf_dir)).replace("sf", ""))
     except ValueError:
@@ -190,6 +203,28 @@ def main() -> None:
     # adjudication loop. Unset (the driver's invocation) = full suite.
     only_env = os.environ.get("SPARK_GRAFT_ONLY", "").strip()
     only = {n.strip() for n in only_env.split(",") if n.strip()} if only_env else None
+
+    # untimed warm-up on real query plans (VERDICT r03 #6): first-run
+    # codegen/JIT (the range/pandas warm-ups above don't touch join/agg
+    # codegen paths), so the first TIMED query isn't the one paying
+    # session-global JIT warm-up. The full suite runs the flagship query
+    # once; a selected set runs each of its own queries once, since one
+    # unrelated plan leaves the set's first query paying the warm-up of
+    # the set's own operators and worker paths.
+    if only is None:
+        warm = [lambda: entrymod.entry(spark)]
+    else:
+        warm = [
+            lambda fn=fn: fn(spark, sf_dir)
+            for name, fn in entrymod.queries().items()
+            if name in only
+        ]
+    for build in warm:
+        try:
+            build().write.format("noop").mode("overwrite").save()
+        except Exception as e:  # noqa: BLE001
+            print(f"bench warm-up query failed: {e}", file=sys.stderr)
+    release_blocks(spark)
 
     timings: dict[str, float] = {}
     raw_runs: dict[str, list[float]] = {}
@@ -213,24 +248,7 @@ def main() -> None:
             print(f"bench error in {name}: {e}", file=sys.stderr)
             timings[name] = -1.0
             raw_runs[name] = [round(r, 3) for r in runs]
-        # release this query's localCheckpoint/persist blocks before the
-        # next one: the Py4J finalizer -> ContextCleaner chain only fires
-        # on GC, and checkpointed blocks are lineage-truncated (NOT
-        # re-computable if evicted) — 219 queries' worth accumulating in
-        # one session is what broke the first sf1 suite run.
-        # Python GC alone only queues the Py4J finalizers; the JVM-side
-        # ContextCleaner drains on JVM GC, which a mostly-idle 24g heap
-        # may not trigger for many queries — by query ~150 the r10
-        # canonical run showed 3-10x in-suite inflation (solo: 1x) from
-        # accumulated blocks/broadcasts. Force both collections so each
-        # query starts from a comparable JVM state.
-        import gc
-
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001  (py4j hiccup: skip, never fail the bench)
-            pass
+        release_blocks(spark)
 
     # ---- automated drift adjudication (VERDICT r6 #7, r7 #4) ---------
     # r6 spent real manual time solo-re-measuring 12 in-suite >10× flags

@@ -4,7 +4,10 @@ through every --mode, producing parseable sharded TFRecords per split."""
 from __future__ import annotations
 
 import glob
+import inspect
 import os
+import sys
+import types
 
 import pytest
 
@@ -140,3 +143,75 @@ def test_cli_defaults_match_reference():
     assert a.sequence_length == 15_000
     assert a.frame_sample_rate == 500.0
     assert (a.train, a.val, a.test) == (0.7, 0.15, 0.15)
+
+
+def _reaches(code, targets: set, defs: dict, seen: set) -> bool:
+    """Whether ``code`` names one of ``targets`` — itself, in a nested
+    function, or (by name, transitively) in a function of the package."""
+    names = set(code.co_names)
+    nested = [c for c in code.co_consts if isinstance(c, types.CodeType)]
+    for name in names - seen:
+        seen.add(name)
+        nested += defs.get(name, [])
+    return bool(names & targets) or any(_reaches(c, targets, defs, seen) for c in nested)
+
+
+def test_video_queries_decode_only_through_cli_stages(spark, sf_dir, monkeypatch):
+    """``cli`` is the one composition root of the video chain. Every
+    registered plan that can reach a decode or model kernel (found from the
+    bytecode: names, followed through the package's functions) is built
+    with the kernels and ``cli.decoded_logits`` wrapped; each query that
+    decodes video must call the kernels only inside that stage."""
+    import __spark_entry__  # noqa: F401 - importing registers every query module
+    from videos_to_tfrecords_spark import cli
+    from videos_to_tfrecords_spark.ml import inference, video
+    from videos_to_tfrecords_spark.plans.registry import QUERIES
+
+    package = [m for n, m in sys.modules.items() if n.startswith("videos_to_tfrecords_spark")]
+    defs: dict[str, list] = {}
+    for m in package:
+        for name, obj in vars(m).items():
+            if inspect.isfunction(obj) and obj.__module__ == m.__name__:
+                defs.setdefault(name, []).append(obj.__code__)
+    kernels = {
+        name: getattr(mod, name)
+        for mod, names in (
+            (video, ("decode_videos", "decode_and_infer")),
+            (inference, ("batch_inference", "batch_inference_by_shape")),
+        )
+        for name in names
+    }
+    reaching = [n for n, fn in QUERIES.items() if _reaches(fn.__code__, set(kernels), defs, set())]
+
+    calls, depth, stage = [], [0], cli.decoded_logits
+
+    def staged(*args, **kwargs):
+        depth[0] += 1
+        try:
+            return stage(*args, **kwargs)
+        finally:
+            depth[0] -= 1
+
+    monkeypatch.setattr(cli, "decoded_logits", staged)
+    for name, orig in kernels.items():
+
+        def wrapped(*args, _name=name, _orig=orig, **kwargs):
+            calls.append((_name, depth[0] > 0))
+            return _orig(*args, **kwargs)
+
+        for m in package:  # every module-level alias of the kernel
+            if getattr(m, name, None) is orig:
+                monkeypatch.setattr(m, name, wrapped)
+
+    chains = {}
+    for name in reaching:
+        calls.clear()
+        QUERIES[name](spark, sf_dir)  # builds the plan; the kernels run at execution
+        if {"decode_videos", "decode_and_infer"} & {k for k, _ in calls}:
+            chains[name] = list(calls)
+    assert set(chains) >= {
+        "video_inference_census", "video_sequence_census", "video_crop_census",
+        "video_pipeline_e2e",
+    }
+    outside = {n: c for n, c in chains.items() if not all(inside for _, inside in c)}
+    assert not outside, f"video chains composed outside cli's stages: {outside}"

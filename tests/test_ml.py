@@ -150,20 +150,39 @@ def test_batch_inference_by_shape_stacks_mixed_shapes(spark):
         assert got[f"b{i}"] == [float(100 + i), float(100 + i)]
 
 
-def test_e2e_by_shape_flag_matches_default_path(spark):
-    """run_pipeline_e2e(by_shape=True) routes inference through
-    shape-homogeneous batching; on the fake decoder's constant 2×2×3
-    frames the adaptive and fixed stub models share no weights, so compare
-    STRUCTURE (splits, sequence counts) — and determinism of both paths."""
-    from videos_to_tfrecords_spark.plans.pipeline_queries import run_pipeline_e2e
+def test_e2e_by_shape_flag_matches_default_path(spark, sf_dir):
+    """Shape-homogeneous batching (``decode_videos`` →
+    ``batch_inference_by_shape``, the reference's per-shape buffers) in
+    place of the fused decode+infer stage, composed over the CLI's other
+    stages as video_pipeline_e2e composes them. On the fake decoder's
+    constant 2×2×3 frames the adaptive and fixed stub models share no
+    weights, so compare STRUCTURE (splits, sequence counts) with
+    video_pipeline_e2e — and determinism of the by-shape path."""
+    from collections import Counter
 
-    sf = "/root/testdata/sf0.001"
-    base = sorted(map(tuple, run_pipeline_e2e(spark, sf, by_shape=False).collect()))
-    shaped = sorted(map(tuple, run_pipeline_e2e(spark, sf, by_shape=True).collect()))
-    assert [r[:2] for r in base] == [r[:2] for r in shaped]  # dataset, n_sequences
-    assert shaped == sorted(
-        map(tuple, run_pipeline_e2e(spark, sf, by_shape=True).collect())
+    from videos_to_tfrecords_spark import cli
+    from videos_to_tfrecords_spark.ml.inference import (
+        adaptive_stub_model,
+        batch_inference_by_shape,
     )
+    from videos_to_tfrecords_spark.ml.video import decode_videos
+    from videos_to_tfrecords_spark.operators.split import hash_bucket_split
+    from videos_to_tfrecords_spark.plans.pipeline_queries import q_pipeline_e2e
+    from videos_to_tfrecords_spark.plans.reference_queries import _files_df
+
+    stamped = hash_bucket_split(cli.labeled_files(_files_df(spark, sf_dir)), "doc_id")
+    frames = decode_videos(stamped.select("filename", "label", "dataset"), cloud=True)
+    shape = ["height", "width", "channels"]
+    embedded = batch_inference_by_shape(
+        frames, "image", shape, adaptive_stub_model(4), model_cache_key="e2e_adaptive"
+    ).drop(*shape)
+    seqs = cli.sequences(embedded, "full_video").select("dataset", "filename", "logits")
+
+    shaped = sorted(map(tuple, seqs.collect()))
+    base = {r.dataset: r.n_sequences for r in q_pipeline_e2e(spark, sf_dir).collect()}
+    assert Counter(r[0] for r in shaped) == base  # dataset, n_sequences
+    assert all(len(step) == 4 for r in shaped for step in r[2])
+    assert shaped == sorted(map(tuple, seqs.collect()))
 
 
 def test_mixed_resolution_frames_through_full_pipeline(spark):
@@ -176,14 +195,11 @@ def test_mixed_resolution_frames_through_full_pipeline(spark):
     import numpy as _np
     import pytest as _pytest
 
+    from videos_to_tfrecords_spark import cli
     from videos_to_tfrecords_spark.ml.inference import (
         adaptive_stub_model,
         batch_inference,
         batch_inference_by_shape,
-    )
-    from videos_to_tfrecords_spark.operators.sequence import (
-        format_features,
-        to_full_video,
     )
     from videos_to_tfrecords_spark.sources.tfrecord import (
         decode_sequence_example,
@@ -226,24 +242,8 @@ def test_mixed_resolution_frames_through_full_pipeline(spark):
         want = _np.maximum(_np.array(r.image, dtype=_np.float64) @ wmat, 0.0)
         assert _np.allclose(_np.array(r.logits, dtype=_np.float64), want, atol=1e-6)
 
-    full = to_full_video(
-        embedded.select(
-            "filename", "label", "dataset", "timestamp_ms", "frame_per_sec",
-            "frame_total", "logits",
-        ),
-        ts_ms_col="timestamp_ms",
-        key_cols=["filename"],
-    )
-    seqs = format_features(
-        full,
-        context_cols=["label", "dataset", "frame_per_sec", "frame_total"],
-        list_cols=["logits", "timestamp_ms"],
-    )
-    protos = with_sequence_example(
-        seqs,
-        context_cols=["filename", "label", "dataset", "frame_per_sec", "frame_total"],
-        list_cols=["logits", "timestamp_ms"],
-    ).collect()
+    seqs = cli.sequences(embedded.drop("image", "height", "width", "channels"), "full_video")
+    protos = with_sequence_example(seqs, cli.CONTEXT_COLS, cli.LIST_COLS).collect()
     assert len(protos) == 4  # one sequence per video, both resolutions
     by_name = {}
     for p in protos:

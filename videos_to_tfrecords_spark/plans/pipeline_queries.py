@@ -3,8 +3,14 @@
 These exercise the Python-boundary operators (mapInPandas decode, pandas-UDF
 inference, proto serialization, Structured Streaming). Where the fake decode
 is closed-form, the query is STILL hash-checked against SQL arithmetic —
-proving the opaque-operator plumbing, not just the formula. Inference and
-proto bytes are rows-only (no SQL analog) with pytest golden checks.
+proving the opaque-operator plumbing, not just the formula.
+
+The video-chain queries — video_inference_census, video_sequence_census,
+video_crop_census and video_pipeline_e2e — are built from the CLI's stage
+functions (``videos_to_tfrecords_spark.cli``), so the gate checks the chain
+the CLI runs. Inference is hash-checked through exact-integer hash-weight
+models; proto bytes through video_pipeline_e2e's closed-form size oracle,
+with pytest golden wire bytes pinning the values.
 """
 
 from __future__ import annotations
@@ -12,13 +18,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from videos_to_tfrecords_spark.ml.inference import batch_inference, linear_stub_model
-from videos_to_tfrecords_spark.ml.video import decode_and_infer, decode_videos
+from videos_to_tfrecords_spark import cli
+from videos_to_tfrecords_spark.ml.inference import (
+    batch_inference,
+    int_hash_linear_model,
+    linear_stub_model,
+)
 from videos_to_tfrecords_spark.operators.multimodal import (
     decode_media_frames,
     with_media_payload,
 )
-from videos_to_tfrecords_spark.operators.sequence import format_features, to_full_video
 from videos_to_tfrecords_spark.operators.split import hash_bucket_split
 from videos_to_tfrecords_spark.plans.reference_queries import (
     _FILES_SQL,
@@ -112,8 +121,6 @@ def q_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     same UDF plumbing a real model uses — is hash-checked against a SQL
     matmul oracle (upgraded from rows-only in round 3). The float-weight
     stub keeps its numeric-golden pytest coverage in tests/test_ml.py."""
-    from videos_to_tfrecords_spark.ml.inference import int_hash_linear_model
-
     emb = load_table(spark, sf_dir, "embeddings")
     out = batch_inference(emb, "embedding", int_hash_linear_model(8), drop_input=True)
     return out.select(
@@ -165,31 +172,32 @@ GROUP BY 1, 2
 """
 
 
+def _video_logits(
+    spark: SparkSession, sf_dir: str, model_factory, cloud: bool
+) -> DataFrame:
+    """The CLI's stages over the corpus file table: P2+P3
+    (``cli.labeled_files``) → the deterministic hash split, which a SQL
+    oracle can replay → fused decode + inference (U1+U2,
+    ``cli.decoded_logits``) — one row per kept frame."""
+    stamped = hash_bucket_split(cli.labeled_files(_files_df(spark, sf_dir)), "doc_id")
+    return cli.decoded_logits(stamped, model_factory, cloud=cloud)
+
+
 @query("video_inference_census", _VIDEO_INFER_CENSUS_ORACLE)
 def q_video_inference_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference mainline — filename table → extension filter → video
-    decode (U1, mapInPandas flat-map) → batched model inference (U2,
-    iterator pandas UDF with per-worker model init) → census — as ONE
-    hash-checked query (VERDICT r6 #8): the deterministic fake decoder's
-    frames feed the exact-integer ``int_hash_linear_model``, so every
-    stage of the decode→infer→assemble chain the reference runs
-    (preprocess.py:156-265) is verified end to end against a closed-form
-    SQL twin, not just rows-counted. The frame values are constant per
-    frame (12 × v), so each logit collapses to relu(xq·Σᵢw[i][j]) — the
-    oracle rebuilds the weight column sums from the same portable md5.
-    Scale: decode fan-out is the spread-repartitioned mapInPandas stage;
-    inference is Arrow-batched; the final census is one partial-agg
+    """The reference mainline — filename table → extension filter + label
+    (P2+P3) → split → fused video decode (U1) + batched model inference
+    (U2, per-worker model init) → census — as ONE hash-checked query, on
+    the CLI's own stages: the deterministic fake decoder's frames feed the
+    exact-integer ``int_hash_linear_model``, so the decode→infer chain the
+    reference runs (preprocess.py:156-265) is verified end to end against
+    a closed-form SQL twin, not just rows-counted. The frame values are
+    constant per frame (12 × v), so each logit collapses to
+    relu(xq·Σᵢw[i][j]) — the oracle rebuilds the weight column sums from
+    the same portable md5. Scale: decode+inference is one
+    spread-repartitioned mapInPandas stage; the census is one partial-agg
     shuffle of (fps, argmax) rows."""
-    from videos_to_tfrecords_spark.ml.inference import (
-        batch_inference,
-        int_hash_linear_model,
-    )
-
-    files = _files_df(spark, sf_dir).filter(~F.col("filename").endswith(".txt"))
-    frames = decode_videos(files.select("filename"))
-    logits = batch_inference(
-        frames, "image", int_hash_linear_model(8), drop_input=True
-    )
+    logits = _video_logits(spark, sf_dir, int_hash_linear_model(8), cloud=False)
     per_frame = logits.select(
         "filename",
         F.col("frame_per_sec").cast("long").alias("fps"),
@@ -244,58 +252,14 @@ FROM fm GROUP BY 1, 2
 """
 
 
-@query("video_sequence_census", _VIDEO_SEQ_CENSUS_ORACLE)
-def q_video_sequence_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE reference mainline, hash-checked (r7, extends
-    video_inference_census to the sequence-assembly and encoder stages):
-    filename table (S2) → extension filter (P2) → label extraction (P3)
-    → deterministic hash split (U6) → fake video decode (U1, mapInPandas)
-    → exact-integer batched inference (U2) → time-sorted full_video
-    sequence assembly (G1/G4/G5) → FormatFeatures pivot (U7) →
-    SequenceExample framing (U3/U4) → per-(split, label) census. Every
-    stage the reference's preprocess.py runs is on the executed plan; the
-    output pins sequence counts, frame counts, and the exact integer
-    per-frame max-logit mass, and the proto encoder's execution via the
-    framing flag (the bytes themselves stay golden-pytest-pinned).
-
-    Scale: the same shapes as video_pipeline_e2e — spread-repartitioned
-    decode fan-out, Arrow-batched inference, one sequence-assembly
-    shuffle on filename, census partial-aggregates; the encoder runs
-    after the last exchange."""
-    from videos_to_tfrecords_spark.ml.inference import (
-        batch_inference,
-        int_hash_linear_model,
-    )
-    from videos_to_tfrecords_spark.operators.filenames import (
-        extract_label,
-        filter_extensions,
-    )
-
-    labeled = extract_label(filter_extensions(_files_df(spark, sf_dir)))
-    split = hash_bucket_split(labeled, "doc_id")
-    frames = decode_videos(split.select("filename", "label", "dataset"))
-    logits = batch_inference(
-        frames, "image", int_hash_linear_model(8), drop_input=True
-    )
-    full = to_full_video(
-        logits.select(
-            "filename", "label", "dataset", "timestamp_ms", "frame_per_sec",
-            "frame_total", "logits",
-        ),
-        ts_ms_col="timestamp_ms",
-        key_cols=["filename"],
-    )
-    seqs = format_features(
-        full,
-        context_cols=["label", "dataset", "frame_per_sec", "frame_total"],
-        list_cols=["logits", "timestamp_ms"],
-    )
+def _sequence_census(seqs: DataFrame) -> DataFrame:
+    """Per-(split, label) census of ``cli.sequences`` output encoded as
+    SequenceExamples (U3/U4): sequence and frame counts, the exact integer
+    per-frame max-logit mass, and whether every proto is framed."""
     protos = with_sequence_example(
         seqs,
-        context_cols=[
-            "filename", "label", "dataset", "frame_per_sec", "frame_total",
-        ],
-        list_cols=["logits", "timestamp_ms"],
+        context_cols=cli.CONTEXT_COLS,
+        list_cols=cli.LIST_COLS,
         context_kinds=CONTEXT_COLUMNS,
         list_kinds=LIST_COLUMNS,
     )
@@ -318,13 +282,52 @@ def q_video_sequence_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("video_sequence_census", _VIDEO_SEQ_CENSUS_ORACLE)
+def q_video_sequence_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The COMPLETE reference mainline in full_video mode, hash-checked on
+    the CLI's stages: filename table (S2) → extension filter + label
+    extraction (P2+P3) → deterministic hash split (U6) → fused fake video
+    decode + exact-integer batched inference (U1+U2) → time-sorted
+    full_video sequence assembly + FormatFeatures pivot (G1/G4/G5/U7,
+    ``cli.sequences``) → SequenceExample framing (U3/U4) → per-(split,
+    label) census. The output pins sequence counts, frame counts, the
+    exact integer per-frame max-logit mass, and the proto encoder's
+    execution via the framing flag (the bytes themselves are pinned by
+    video_pipeline_e2e's size oracle and golden pytests).
+
+    Scale: spread-repartitioned decode+inference, one sequence-assembly
+    shuffle on filename, census partial-aggregates; the encoder runs
+    after the last exchange."""
+    logits = _video_logits(spark, sf_dir, int_hash_linear_model(8), cloud=False)
+    return _sequence_census(cli.sequences(logits, "full_video"))
+
+
+def _cloud_frames(fps: float, dur: float) -> list[tuple[int, float]]:
+    """(frame index, position ms) of every frame the fake decoder keeps in
+    cloud mode at the default 500 ms sample rate — ml/video._decode_fake's
+    loop, replayed double for double (pos advances by 1000.0/fps, keep at
+    ≥ last + 500)."""
+    kept, last_ts = [], None
+    pos, idx = 0.0, 0
+    while pos < dur:
+        if last_ts is None or pos >= last_ts + 500.0:
+            last_ts = pos
+            kept.append((idx, pos))
+        idx += 1
+        pos = idx * (1000.0 / fps)
+    return kept
+
+
+#: every (fps, duration ms) the fake decoder's filename hash can produce
+_FAKE_PROPS = [(fps, dur) for fps in (24, 30, 60) for dur in range(2000, 10000, 1000)]
+
+
 def _crop_membership_rows() -> list[tuple[int, int, int, int]]:
     """(fps, duration_ms, win_start_ms, frame_idx) membership table of the
     crop-mode mainline, precomputed by replicating the engine's EXACT float
     semantics (the Python-precomputed-constant-table discipline):
 
-    - the fake decoder's cloud-mode frame loop (ml/video._decode_fake:
-      pos advances by the double 1000.0/fps, keep at ≥ last+500);
+    - the fake decoder's cloud-mode frame loop (:func:`_cloud_frames`);
     - assign_windows' µs rounding (round(ts·1000), half-up) and the two
       epoch-aligned 2000/1000 sliding windows per frame;
     - crop_video's P9 reference keep rule, INCLUDING the float
@@ -337,29 +340,18 @@ def _crop_membership_rows() -> list[tuple[int, int, int, int]]:
     import math
 
     rows = []
-    for fps in (24.0, 30.0, 60.0):
-        for dur_i in range(2000, 10000, 1000):
-            dur = float(dur_i)
-            kept, last_ts = [], None
-            pos, idx = 0.0, 0
-            while pos < dur:
-                if last_ts is None or pos >= last_ts + 500.0:
-                    last_ts = pos
-                    kept.append((idx, pos))
-                idx += 1
-                pos = idx * (1000.0 / fps)
-            frame_total = dur / 1000.0 * fps
-            length = 1000.0 * frame_total / fps
-            for k, ts in kept:
-                ts_us = int(math.floor(ts * 1000 + 0.5))
-                base = ts_us - ts_us % 1_000_000
-                for w_us in (base - 1_000_000, base):
-                    if not (w_us <= ts_us < w_us + 2_000_000):
-                        continue
-                    w_ms = w_us // 1000
-                    end_ms = w_ms + 2000
-                    if end_ms == 2000 or (w_ms >= 0 and float(end_ms) <= length):
-                        rows.append((int(fps), dur_i, w_ms, k))
+    for fps, dur in _FAKE_PROPS:
+        length = 1000.0 * (dur / 1000.0 * fps) / fps
+        for k, ts in _cloud_frames(float(fps), float(dur)):
+            ts_us = int(math.floor(ts * 1000 + 0.5))
+            base = ts_us - ts_us % 1_000_000
+            for w_us in (base - 1_000_000, base):
+                if not (w_us <= ts_us < w_us + 2_000_000):
+                    continue
+                w_ms = w_us // 1000
+                end_ms = w_ms + 2000
+                if end_ms == 2000 or (w_ms >= 0 and float(end_ms) <= length):
+                    rows.append((fps, dur, w_ms, k))
     return rows
 
 
@@ -408,145 +400,115 @@ FROM fm GROUP BY 1, 2
 
 @query("video_crop_census", _video_crop_census_oracle())
 def q_video_crop_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's --mode=crop_video mainline, hash-checked (r7, the
-    crop twin of video_sequence_census): uncapped cloud decode → exact-
-    integer inference → SLIDING-window assembly with the P9 partial-window
-    rule (video_length = 1000·frame_total/frame_per_sec, float-faithful)
-    → FormatFeatures → SequenceExample framing → per-(split, label)
-    census. The oracle joins a Python-precomputed 24-case membership
-    table (see _crop_membership_rows — it encodes the decoder's float
-    frame loop, the µs window rounding, and the P9 keep rule including
-    its ulp-sensitive length round-trip), so the window semantics are
-    pinned bit-exactly, not approximately."""
-    from videos_to_tfrecords_spark.ml.inference import (
-        batch_inference,
-        int_hash_linear_model,
-    )
-    from videos_to_tfrecords_spark.operators.filenames import (
-        extract_label,
-        filter_extensions,
-    )
-    from videos_to_tfrecords_spark.operators.sequence import crop_video
-
-    labeled = extract_label(filter_extensions(_files_df(spark, sf_dir)))
-    split = hash_bucket_split(labeled, "doc_id")
-    frames = decode_videos(
-        split.select("filename", "label", "dataset"), cloud=True
-    )
-    logits = batch_inference(
-        frames, "image", int_hash_linear_model(8), drop_input=True
-    )
-    length_ms = F.lit(1000.0) * F.col("frame_total") / F.col("frame_per_sec")
-    crop = crop_video(
-        logits.withColumn("length_ms", length_ms).select(
-            "filename", "label", "dataset", "timestamp_ms", "length_ms",
-            "logits",
-        ),
-        ts_ms_col="timestamp_ms",
-        key_cols=["filename"],
-        size_ms=2000,
-        slide_ms=1000,
-        length_ms_col="length_ms",
-        partial_policy="reference",
-    )
-    seqs = format_features(
-        crop,
-        context_cols=["label", "dataset"],
-        list_cols=["logits", "timestamp_ms"],
-    )
-    protos = with_sequence_example(
-        seqs,
-        context_cols=["label", "dataset"],
-        list_cols=["logits", "timestamp_ms"],
-        context_kinds=CONTEXT_COLUMNS,
-        list_kinds=LIST_COLUMNS,
-    )
-    per_seq = protos.select(
-        "dataset",
-        "label",
-        F.size("timestamp_ms").cast("long").alias("nf"),
-        F.expr(
-            "aggregate(logits, 0L, (a, fl) -> a + CAST(array_max(fl) AS LONG))"
-        ).alias("seq_logit_sum"),
-        (F.length("proto") >= F.lit(12)).alias("framed"),
-    )
-    return per_seq.groupBy("dataset", "label").agg(
-        F.count("*").cast("long").alias("n_sequences"),
-        F.sum("nf").cast("long").alias("n_frames"),
-        F.sum("seq_logit_sum").cast("long").alias("logit_sum"),
-        (F.count(F.when(F.col("framed"), 1)) == F.count("*")).alias(
-            "protos_framed"
-        ),
-    )
+    """The reference's --mode=crop_video mainline, hash-checked on the
+    CLI's stages (the crop twin of video_sequence_census): uncapped cloud
+    decode + exact-integer inference → SLIDING-window assembly with the P9
+    partial-window rule (video_length = 1000·frame_total/frame_per_sec,
+    float-faithful) → FormatFeatures → SequenceExample framing →
+    per-(split, label) census. The oracle joins a Python-precomputed
+    24-case membership table (see _crop_membership_rows — it encodes the
+    decoder's float frame loop, the µs window rounding, and the P9 keep
+    rule including its ulp-sensitive length round-trip), so the window
+    semantics are pinned bit-exactly, not approximately."""
+    logits = _video_logits(spark, sf_dir, int_hash_linear_model(8), cloud=True)
+    return _sequence_census(cli.sequences(logits, "crop_video", 2000, 1000))
 
 
-def run_pipeline_e2e(
-    spark: SparkSession, sf_dir: str, by_shape: bool = False
-) -> DataFrame:
-    """E2E pipeline body shared by the registered query and tests. With
-    ``by_shape=True`` the inference stage routes through
-    :func:`batch_inference_by_shape` grouped on (height, width, channels)
-    — the reference's shape-homogeneous batching (preprocess.py:246-253),
-    required when the decoder emits mixed resolutions (np.stack over a
-    ragged Arrow batch raises). The fake decoder's frames are all 2×2×3,
-    so both paths produce identical results here; the mixed-resolution
-    case is exercised by tests/test_ml.py with a ragged fixture."""
-    files = _files_df(spark, sf_dir)
-    from videos_to_tfrecords_spark.operators.filenames import (
-        extract_label,
-        filter_extensions,
+def _pb(x):
+    """Byte length of a length-delimited protobuf field — tag, varint
+    length, then ``x`` payload bytes: an int for an int ``x``, else the SQL
+    expression over the SQL expression ``x``."""
+    if isinstance(x, int):
+        return 2 + x + (x >= 128) + (x >= 16384) + (x >= 2097152)
+    return f"(2 + {x} + ({x} >= 128)::INT + ({x} >= 16384)::INT + ({x} >= 2097152)::INT)"
+
+
+def _video_e2e_oracle() -> str:
+    """video_pipeline_e2e's proto sizes in closed form. A SequenceExample's
+    length does not depend on the logit values (FloatLists are packed,
+    4 bytes a float), only on the string lengths and the frame count, so
+    the oracle is the per-file frame count of the fake cloud decode (a
+    Python-precomputed (fps, duration) table, as for video_crop_census)
+    under the wire layout of sources/tfrecord_kernel: a map entry
+    {1: key, 2: Feature} per context column (BytesList of one value, or a
+    FloatList of one float), and per feature list one Feature per frame (a
+    FloatList of 4 logits, or of 1 timestamp)."""
+    counts = ", ".join(
+        f"({fps}, {dur}, {len(_cloud_frames(float(fps), float(dur)))})"
+        for fps, dur in _FAKE_PROPS
     )
 
-    labeled = extract_label(filter_extensions(files))
-    split = hash_bucket_split(labeled, "doc_id")
-    if by_shape:
-        from videos_to_tfrecords_spark.ml.inference import (
-            adaptive_stub_model,
-            batch_inference_by_shape,
+    def entry(key: str, value: str) -> str:
+        return _pb(f"{_pb(len(key))} + {_pb(value)}")
+
+    def floats(k: int) -> int:  # Feature{2: FloatList{1: packed}}
+        return _pb(_pb(4 * k))
+
+    fixed = sum(
+        _pb(_pb(len(key)) + _pb(feature))
+        for key, feature in (
+            ("content_md5", _pb(_pb(16))),
+            ("frame_per_sec", floats(1)),
+            ("frame_total", floats(1)),
         )
+    )
+    return f"""
+WITH files AS ({_FILES_SQL}),
+vf AS (SELECT doc_id, filename,
+              string_split(filename, '/')[-3] AS label,
+              CAST(concat('0x', substr(md5(filename), 1, 8)) AS BIGINT) AS h
+       FROM files
+       WHERE string_split(filename, '.')[-1] IN ('mkv', 'avi', 'mp4')),
+sp AS (SELECT *, CASE WHEN (doc_id * 9973 + 7) % 100 < 15 THEN 'Test'
+                      WHEN (doc_id * 9973 + 7) % 100 < 30 THEN 'Val'
+                      ELSE 'Train' END AS dataset,
+              CASE h % 3 WHEN 0 THEN 24 WHEN 1 THEN 30 ELSE 60 END AS fps,
+              2000 + (h % 8) * 1000 AS dur
+       FROM vf),
+nf(fps, dur, n) AS (VALUES {counts}),
+-- Feature{{1: BytesList{{1: value}}}} of each string context value, and
+-- the FeatureList bytes of each list column
+fb AS (SELECT s.dataset,
+              {_pb(_pb("strlen(s.filename)"))} AS f_filename,
+              {_pb(_pb("strlen(s.label)"))} AS f_label,
+              {_pb(_pb("strlen(s.dataset)"))} AS f_dataset,
+              n.n * {_pb(floats(4))} AS l_logits,
+              n.n * {_pb(floats(1))} AS l_ts
+       FROM sp s JOIN nf n ON n.fps = s.fps AND n.dur = s.dur),
+sz AS (SELECT dataset,
+              {entry("filename", "f_filename")} + {entry("label", "f_label")}
+                + {entry("dataset", "f_dataset")} + {fixed} AS ctx,
+              {entry("logits", "l_logits")} + {entry("timestamp_ms", "l_ts")}
+                AS lists
+       FROM fb)
+SELECT dataset, CAST(count(*) AS BIGINT) AS n_sequences,
+       CAST(sum({_pb("ctx")} + {_pb("lists")}) AS BIGINT) AS total_proto_bytes
+FROM sz GROUP BY dataset
+"""
 
-        frames = decode_videos(split.select("filename", "label", "dataset"), cloud=True)
-        embedded = batch_inference_by_shape(
-            frames,
-            "image",
-            ["height", "width", "channels"],
-            adaptive_stub_model(4),
-            drop_input=True,
-            model_cache_key="e2e_adaptive",
-        )
-    else:
-        # fused decode→inference: frames never cross the Arrow boundary
-        # (decode_and_infer docstring; pytest asserts == the unfused chain)
-        embedded = decode_and_infer(
-            split.select("filename", "label", "dataset"),
-            linear_stub_model(12, 4),
-            cloud=True,
-        )
-    full = to_full_video(
-        embedded.select(
-            "filename", "label", "dataset", "timestamp_ms", "frame_per_sec",
-            "frame_total", "logits",
-        ),
-        ts_ms_col="timestamp_ms",
-        key_cols=["filename"],
-    )
-    seqs = format_features(
-        full,
-        context_cols=["label", "dataset", "frame_per_sec", "frame_total"],
-        list_cols=["logits", "timestamp_ms"],
-    )
+
+@query("video_pipeline_e2e", _video_e2e_oracle())
+def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's whole mainline (preprocess.py:371-416) on the CLI's
+    stages: filename table → extension filter + label extraction →
+    deterministic split → fused video decode (fake) + batched inference
+    with the float-weight stub → full_video sequence assembly +
+    FormatFeatures pivot → SequenceExample proto bytes. Output: per-split
+    sequence counts and total proto bytes, hash-checked against a
+    closed-form size oracle (the logit values do not change a proto's
+    length)."""
+    logits = _video_logits(spark, sf_dir, linear_stub_model(12, 4), cloud=True)
     # a RAW-binary context column (BinaryType, not str→utf8): exercises the
     # encode_feature bytes-passthrough branch of the BYTES-declared leg
     # (reference features.py:30-36, 48-54) through the registry path —
     # real pipelines carry content digests / thumbnail bytes in context
-    seqs = seqs.withColumn("content_md5", F.unhex(F.md5("filename")))
+    seqs = cli.sequences(logits, "full_video").withColumn(
+        "content_md5", F.unhex(F.md5("filename"))
+    )
     protos = with_sequence_example(
         seqs,
-        context_cols=[
-            "filename", "label", "dataset", "frame_per_sec", "frame_total",
-            "content_md5",
-        ],
-        list_cols=["logits", "timestamp_ms"],
+        context_cols=[*cli.CONTEXT_COLS, "content_md5"],
+        list_cols=cli.LIST_COLS,
         # serialize by DECLARED dtype (reference features.py:25-36), not
         # runtime inference — an int-valued FLOAT column stays FloatList
         context_kinds={**CONTEXT_COLUMNS, "content_md5": FeatureKind.BYTES},
@@ -560,18 +522,6 @@ def run_pipeline_e2e(
         )
         .orderBy("dataset")
     )
-
-
-@query("video_pipeline_e2e")  # rows-only: spans decode+inference+proto encode
-def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's whole mainline (preprocess.py:371-416) re-expressed
-    Spark-first: filename table → extension filter → label extraction →
-    deterministic split → video decode (fake, mapInPandas UDTF) → batched
-    inference (pandas UDF) → full_video sequence assembly → FormatFeatures
-    pivot → SequenceExample proto bytes. Output: per-split sequence counts
-    and total proto bytes (deterministic; schema-stable). Inference runs
-    fused with decode (see run_pipeline_e2e)."""
-    return run_pipeline_e2e(spark, sf_dir)
 
 
 def _text_e2e_oracle() -> str:
@@ -813,52 +763,6 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return streaming_session_windows(spark, sf_dir)
-
-
-@query("video_pipeline_crop_mode")  # rows-only: spans decode+inference+windows
-def q_pipeline_crop_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's --mode=crop_video E2E (preprocess.py:399-403): decode
-    → inference → SLIDING-window sequence assembly with the P9 partial-
-    window rule (video_length = 1000·frame_total/frame_per_sec, exactly
-    preprocess.py:293) → FormatFeatures → per-split window counts."""
-    files = _files_df(spark, sf_dir)
-    from videos_to_tfrecords_spark.operators.filenames import (
-        extract_label,
-        filter_extensions,
-    )
-    from videos_to_tfrecords_spark.operators.sequence import crop_video
-
-    labeled = extract_label(filter_extensions(files))
-    split = hash_bucket_split(labeled, "doc_id")
-    # fused decode→inference (one Python boundary; see decode_and_infer)
-    embedded = decode_and_infer(
-        split.select("filename", "label", "dataset"),
-        linear_stub_model(12, 4),
-        cloud=True,
-    )
-    length_ms = F.lit(1000.0) * F.col("frame_total") / F.col("frame_per_sec")
-    crop = crop_video(
-        embedded.withColumn("length_ms", length_ms),
-        ts_ms_col="timestamp_ms",
-        key_cols=["filename"],
-        size_ms=2000,
-        slide_ms=1000,
-        length_ms_col="length_ms",
-        partial_policy="reference",
-    )
-    seqs = format_features(
-        crop,
-        context_cols=["label", "dataset"],
-        list_cols=["logits", "timestamp_ms"],
-    )
-    return (
-        seqs.groupBy("dataset")
-        .agg(
-            F.count("*").alias("n_sequences"),
-            F.sum(F.size("timestamp_ms")).alias("n_frames_total"),
-        )
-        .orderBy("dataset")
-    )
 
 
 @query(
@@ -1359,8 +1263,6 @@ def q_shadow_inference_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     (independent salt families), so the ENTIRE double-inference pipeline
     — two iterator-pandas-UDF passes included — hash-matches the SQL twin
     matmuls."""
-    from videos_to_tfrecords_spark.ml.inference import int_hash_linear_model
-
     emb = load_table(spark, sf_dir, "embeddings")
     prod = batch_inference(
         emb, "embedding", int_hash_linear_model(8, salt="w"), drop_input=False
@@ -2405,6 +2307,7 @@ def q_video_decode_real_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as _pd
 
     from videos_to_tfrecords_spark.ml import rawavi
+    from videos_to_tfrecords_spark.ml.video import decode_videos
 
     vids = spark.range(rawavi.N_VIDEOS).select(F.col("id").cast("int").alias("vid"))
 

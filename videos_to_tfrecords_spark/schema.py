@@ -7,10 +7,11 @@ per-frame LIST_COLUMNS {logits: FLOAT, timestamp_ms: FLOAT}
 BYTES; frame_per_sec, frame_total: FLOAT} (features.py:30-36). Everything
 else flows as schema-on-write Python dicts (SURVEY §1.1).
 
-The engine's deliberate departure: fixed StructType per pipeline stage,
-declared here, so Catalyst can prune/push down. Coercion rules from
-features.py:39-56 (scalar→list promotion, str→utf8 bytes) live in
-sources/tfrecord.py where the proto is actually built.
+The engine's deliberate departure: every stage is a DataFrame with a fixed
+StructType (the video chain's stages are the ``cli`` stage functions), so
+Catalyst can prune/push down. Coercion rules from features.py:39-56
+(scalar→list promotion, str→utf8 bytes) live in sources/tfrecord.py where
+the proto is actually built.
 """
 
 from __future__ import annotations
@@ -41,77 +42,6 @@ CONTEXT_COLUMNS: dict[str, str] = {
     "frame_per_sec": FeatureKind.FLOAT,
     "frame_total": FeatureKind.FLOAT,
 }
-
-#: Stage 1 — file listing rows ({"filename": str}, reference preprocess.py:319).
-FILENAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("filename", T.StringType(), False),
-    ]
-)
-
-#: Stage 2 — labeled + split rows (reference preprocess.py:273, 58-66).
-LABELED_SCHEMA = T.StructType(
-    [
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("dataset", T.StringType(), True),
-    ]
-)
-
-#: Stage 3 — decoded frames (reference preprocess.py:181-187). The image
-#: tensor convention: flat float array + shape struct (no Spark tensor type;
-#: SURVEY §7.3). Never shuffle `image` — drop it before wide exchanges, the
-#: reference's own lesson (preprocess.py:241).
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("dataset", T.StringType(), True),
-        T.StructField("image", T.ArrayType(T.FloatType()), True),
-        T.StructField(
-            "image_shape",
-            T.StructType(
-                [
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("channels", T.IntegerType()),
-                ]
-            ),
-            True,
-        ),
-        T.StructField("timestamp_ms", T.DoubleType(), False),
-        T.StructField("frame_per_sec", T.DoubleType(), True),
-        T.StructField("frame_total", T.DoubleType(), True),
-    ]
-)
-
-#: Stage 4 — post-inference frames (image dropped, logits added;
-#: reference preprocess.py:241-242).
-EMBEDDED_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("dataset", T.StringType(), True),
-        T.StructField("timestamp_ms", T.DoubleType(), False),
-        T.StructField("frame_per_sec", T.DoubleType(), True),
-        T.StructField("frame_total", T.DoubleType(), True),
-        T.StructField("logits", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-#: Stage 5 — assembled sequences (list cols pivoted to parallel arrays;
-#: reference preprocess.py:299-310).
-SEQUENCES_SCHEMA = T.StructType(
-    [
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("dataset", T.StringType(), True),
-        T.StructField("frame_per_sec", T.DoubleType(), True),
-        T.StructField("frame_total", T.DoubleType(), True),
-        T.StructField("logits", T.ArrayType(T.ArrayType(T.FloatType())), True),
-        T.StructField("timestamp_ms", T.ArrayType(T.DoubleType()), True),
-    ]
-)
 
 #: Multimodal column convention (engine extension, SURVEY §7.1 M5): payload
 #: as opaque binary + typed metadata struct. Image/audio/video all use this.
