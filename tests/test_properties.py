@@ -226,3 +226,41 @@ def test_snapshot_diff_matches_dict_reference(spark, a, b):
         else:
             want[k] = "unchanged"
     assert got == want
+
+
+@given(
+    data=st.data(),
+    nq=st.integers(0, 4),
+    nb=st.integers(0, 7),
+    k=st.integers(1, 9),
+)
+@settings(max_examples=80, deadline=None)
+def test_partial_topk_matches_python_sort(data, nq, nb, k):
+    """The shared per-batch partial top-k equals a plain sort by (score
+    desc, cand_id asc) with masked cells dropped: scores from a tiny range
+    force ties, the mask is self OR same-label, k may exceed the batch, and
+    empty query sets and batches are drawn."""
+    import numpy as np
+
+    from videos_to_tfrecords_spark.operators.similarity import _partial_topk
+
+    def ints(lo, hi, n, unique=False):
+        drawn = data.draw(st.lists(st.integers(lo, hi), min_size=n, max_size=n, unique=unique))
+        return np.array(drawn, dtype=np.int64)
+
+    cids, qids = ints(0, 20, nb, unique=True), ints(0, 20, nq)
+    clab, qlab = ints(0, 2, nb), ints(0, 2, nq)
+    score = ints(-3, 3, nq * nb).reshape(nq, nb)
+    drop = (qids[:, None] == cids[None, :]) | (qlab[:, None] == clab[None, :])
+
+    r, c = _partial_topk(score, cids, k, drop)
+    got = [(int(qi), int(cids[ci])) for qi, ci in zip(r, c)]
+    want = [
+        (qi, int(cids[ci]))
+        for qi in range(nq)
+        for ci in sorted(
+            (ci for ci in range(nb) if not drop[qi, ci]),
+            key=lambda ci: (-score[qi, ci], cids[ci]),
+        )[:k]
+    ]
+    assert got == want

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from videos_to_tfrecords_spark.operators.dedup import (
@@ -218,7 +219,7 @@ def _planted_twins(spark, n_bg=100, n_twins=20, dim=16, seed=3):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_lsh_topk_chunk_grid_is_purely_physical(spark):
+def test_lsh_topk_chunk_grid_is_purely_physical(spark, monkeypatch):
     """Adversarial single-bucket fixture: ~all vectors nearly parallel ⇒
     one giant bucket. The blocked chunk grid must (a) produce IDENTICAL
     results to the unblocked computation and (b) keep realized chunk
@@ -238,8 +239,12 @@ def test_lsh_topk_chunk_grid_is_purely_physical(spark):
         rows.append((i, [float(x) for x in v]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    big = sorted(map(tuple, lsh_topk(df, k=3, n_planes=4, chunk_cap=10**9).collect()))
-    blocked = sorted(map(tuple, lsh_topk(df, k=3, n_planes=4, chunk_cap=10).collect()))
+    from videos_to_tfrecords_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_CHUNK_CAP", 10**9)
+    big = sorted(map(tuple, lsh_topk(df, k=3, n_planes=4).collect()))
+    monkeypatch.setattr(similarity, "_CHUNK_CAP", 10)
+    blocked = sorted(map(tuple, lsh_topk(df, k=3, n_planes=4).collect()))
     assert big == blocked and len(big) == 120 * 3
 
     # realized chunk balance for the dominant bucket (n_chunks = ceil(B/10))
@@ -267,7 +272,7 @@ def test_multiprobe_recall_beats_single_probe(spark):
     assert multi >= 18  # θ≈3.5°: ≥2-plane splits are rare
 
 
-def test_multiprobe_chunk_grid_is_purely_physical_and_bounded(spark):
+def test_multiprobe_chunk_grid_is_purely_physical_and_bounded(spark, monkeypatch):
     """Adversarial single-bucket fixture for MULTIPROBE (the round-2 weak
     component): nearly-parallel vectors collapse into one bucket, and
     Hamming-1 probing multiplies the query side by n_planes+1. The blocked
@@ -277,6 +282,7 @@ def test_multiprobe_chunk_grid_is_purely_physical_and_bounded(spark):
     import numpy as np
     import pyspark.sql.functions as F
 
+    from videos_to_tfrecords_spark.operators import similarity
     from videos_to_tfrecords_spark.operators.similarity import (
         _bipartite_tagged_grid,
         hyperplane_bucket,
@@ -293,16 +299,14 @@ def test_multiprobe_chunk_grid_is_purely_physical_and_bounded(spark):
         rows.append((i, [float(x) for x in v]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    big = sorted(
-        map(tuple, lsh_topk_multiprobe(df, k=3, n_planes=4, chunk_cap=10**9).collect())
-    )
-    blocked = sorted(
-        map(tuple, lsh_topk_multiprobe(df, k=3, n_planes=4, chunk_cap=12).collect())
-    )
+    monkeypatch.setattr(similarity, "_CHUNK_CAP", 10**9)
+    big = sorted(map(tuple, lsh_topk_multiprobe(df, k=3, n_planes=4).collect()))
+    monkeypatch.setattr(similarity, "_CHUNK_CAP", 12)
+    blocked = sorted(map(tuple, lsh_topk_multiprobe(df, k=3, n_planes=4).collect()))
     assert big == blocked and len(big) == 150 * 3
 
     # realized per-task row bound: rebuild the grid the operator uses and
-    # measure the largest (bucket, qc, cc) group. chunk_cap=12 ⇒ each task
+    # measure the largest (bucket, qc, cc) group. _CHUNK_CAP=12 ⇒ each task
     # should stay within a small hash-imbalance factor of 2*cap.
     cap = 12
     bucketed = hyperplane_bucket(df, n_planes=4)
@@ -319,7 +323,7 @@ def test_multiprobe_chunk_grid_is_purely_physical_and_bounded(spark):
         F.explode(probes).alias("bucket"),
     ).select("bucket", "query_id", "v")
     sizes = (
-        _bipartite_tagged_grid(q, cand, ["bucket"], cap)
+        _bipartite_tagged_grid(q, cand, ["bucket"])
         .groupBy("bucket", "qc", "cc")
         .count()
         .agg(F.max("count").alias("mx"))
@@ -372,10 +376,116 @@ def test_ivf_kmeans_fixed_k_and_deterministic(spark):
     assert a == b and len(a) > 0
 
 
-def test_banded_threshold_pairs_subset_and_twin_recall(spark):
+def test_ivf_chunk_grid_is_purely_physical_and_bounded(spark, monkeypatch):
+    """Adversarial single-list fixture for IVF: nearly-parallel vectors
+    under one centroid make one inverted list as large as the corpus, with
+    every vector a query. The grid must (a) leave results identical to the
+    unblocked ranking and (b) bound the rows any (key, qc, cc) task sees,
+    within the multiprobe test's 4·2·cap slack."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from videos_to_tfrecords_spark.operators import similarity
+
+    rng = np.random.RandomState(13)
+    v0 = rng.normal(size=16)
+    v0 /= np.linalg.norm(v0)
+    rows = []
+    for i in range(150):
+        v = v0 + rng.normal(scale=0.01, size=16)
+        v /= np.linalg.norm(v)
+        rows.append((i, [float(x) for x in v]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def run():
+        return sorted(
+            map(
+                tuple,
+                similarity.ivf_topk(
+                    df, k_centroids=1, nprobe=1, query_mod=1, k=3
+                ).collect(),
+            )
+        )
+
+    monkeypatch.setattr(similarity, "_CHUNK_CAP", 10**9)
+    big = run()
+    cap = 12
+    monkeypatch.setattr(similarity, "_CHUNK_CAP", cap)
+    grids = []
+    grid = similarity._bipartite_tagged_grid
+    monkeypatch.setattr(
+        similarity,
+        "_bipartite_tagged_grid",
+        lambda *a: grids.append(grid(*a)) or grids[-1],
+    )
+    blocked = run()
+    assert big == blocked and len(big) == 150 * 3
+
+    (g,) = grids
+    assert g.filter(~F.col("is_q")).select("key").distinct().count() == 1
+    sizes = (
+        g.groupBy("key", "qc", "cc")
+        .count()
+        .agg(F.max("count").alias("mx"))
+        .collect()[0]["mx"]
+    )
+    assert sizes <= 4 * 2 * cap  # balls-in-bins slack over the 2·cap target
+
+
+def _empty_input_cases():
+    """(kernel, fixture, run) for every top-k kernel in similarity.py.
+    ``empty``: a 0-row corpus. ``odd_ids``: 200 rows with odd vec_ids, so
+    every id % 2 = 0 query sample (query_mod=2, and qmod = 200 div 80 = 2
+    for the PQ kernels) is empty."""
+    from videos_to_tfrecords_spark.operators import similarity as s
+
+    even = lambda df: df.filter(F.col("vec_id") % 2 == 0)  # noqa: E731
+    runs = {
+        "brute_force_topk": lambda df: s.brute_force_topk(even(df), df),
+        "lsh_topk": lambda df: s.lsh_topk(df),
+        "lsh_topk_multiprobe": lambda df: s.lsh_topk_multiprobe(df),
+        "cosine_threshold_pairs_banded": lambda df: s.cosine_threshold_pairs_banded(df),
+        "ivf_topk": lambda df: s.ivf_topk(df, query_mod=2),
+        "hard_negatives": lambda df: s.hard_negatives(df, query_mod=2),
+        "int8_brute_force_topk": lambda df: s.int8_brute_force_topk(even(df), df),
+        "euclidean_bottom2": lambda df: s.euclidean_bottom2(even(df), df),
+        "pq_adc_recall": lambda df: s.pq_adc_recall(df),
+        "ivfpq_adc_topk": lambda df: s.ivfpq_adc_topk(df),
+    }
+    sampled = {"ivf_topk", "hard_negatives", "pq_adc_recall", "ivfpq_adc_topk"}
+    return [(name, "empty", run) for name, run in runs.items()] + [
+        (name, "odd_ids", runs[name]) for name in sorted(sampled)
+    ]
+
+
+_EMPTY_INPUT_CASES = _empty_input_cases()
+
+
+@pytest.mark.parametrize(
+    "kernel,fixture,run",
+    _EMPTY_INPUT_CASES,
+    ids=[f"{k}-{f}" for k, f, _ in _EMPTY_INPUT_CASES],
+)
+def test_topk_kernels_on_empty_query_side(spark, kernel, fixture, run):
+    """An empty corpus, or an empty sampled query set, yields no rows (no
+    queries ⇒ pq_adc_recall's one row (0, 0, 0)) instead of raising."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    rows = [
+        (2 * i + 1, i % 3, [float(x) for x in rng.normal(size=16)])
+        for i in range(0 if fixture == "empty" else 200)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, label long, embedding array<float>")
+    got = [tuple(r) for r in run(df).collect()]
+    assert got == ([(0, 0, 0)] if kernel == "pq_adc_recall" else [])
+
+
+def test_banded_threshold_pairs_subset_and_twin_recall(spark, monkeypatch):
     """Banded near-dup pairs: every emitted pair is above threshold and is
     a subset of the exact all-pairs result; twins (cos≈0.998 ⇒ bands agree
     with prob ≈1) are all recovered. Blocked grid changes nothing."""
+    from videos_to_tfrecords_spark.operators import similarity
     from videos_to_tfrecords_spark.operators.similarity import (
         cosine_threshold_pairs,
         cosine_threshold_pairs_banded,
@@ -389,8 +499,9 @@ def test_banded_threshold_pairs_subset_and_twin_recall(spark):
     assert all(d >= thr for _, _, d in banded)
     twin_pairs = {(i, 1000 + i) for i in range(20)}
     assert twin_pairs <= {(a, b) for a, b, _ in banded}
+    monkeypatch.setattr(similarity, "_CHUNK_CAP", 7)
     blocked = sorted(
-        map(tuple, cosine_threshold_pairs_banded(df, threshold_scaled=thr, chunk_cap=7).collect())
+        map(tuple, cosine_threshold_pairs_banded(df, threshold_scaled=thr).collect())
     )
     assert blocked == banded
 

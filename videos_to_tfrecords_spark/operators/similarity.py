@@ -1,28 +1,37 @@
 """Similarity search over embedding columns (SURVEY §7.1 M5).
 
-Tiered like a production ANN stack:
+The search kernels are one pipeline — partition, candidate probe, exact
+verify — built from three shared pieces: the bounded (query-chunk ×
+cand-chunk) grid :func:`_bipartite_tagged_grid`, the numpy partial top-k
+:func:`_partial_topk` and the window close :func:`_rank_close`. Tiered
+like a production ANN stack:
 
-- brute-force top-k: query-set × corpus, exact dot, ranked per query.
-  Correctness baseline; at 100 TB only for broadcast-sized query sets
-  (the corpus never re-partitions).
-- sign-LSH top-k (`lsh_topk`): deterministic Rademacher hyperplanes bucket
-  the corpus; per-bucket ranking runs as a *blocked* (query-chunk ×
-  cand-chunk) grid so no task ever materializes more than ~2·chunk_cap
-  rows, however large a bucket gets. Plane count can be derived from the
-  corpus size so expected bucket population stays bounded.
-- multi-probe LSH (`lsh_topk_multiprobe`): queries additionally probe all
-  buckets within Hamming distance 1 — recall recovers most of what
-  single-probe loses at the cost of (n_planes+1)× candidate lookups.
+- brute-force top-k (`brute_force_topk`, and the int8 / euclidean /
+  hard-negative / PQ scans): a bounded query set × the corpus, exact
+  score, ranked per query. Correctness baseline; the query side is a
+  collected matrix, so at 100 TB only for broadcast-sized query sets (the
+  corpus never re-partitions).
+- ANN over a probed key (:func:`probe_topk`): each candidate is assigned
+  one key, each query probes one or more keys, and every key group is
+  ranked on the grid, so no task materializes more than ~2·_CHUNK_CAP
+  rows however large a bucket or an inverted list gets. Three assign /
+  probe pairs:
+  - sign-LSH (`lsh_topk`): deterministic Rademacher hyperplanes bucket the
+    corpus, a query probes its own bucket; the plane count can be derived
+    from the corpus size so the expected bucket population stays bounded;
+  - multi-probe LSH (`lsh_topk_multiprobe`): queries also probe every
+    bucket within Hamming distance 1 — recall recovers most of what
+    single-probe loses at the cost of (n_planes+1)× candidate lookups;
+  - IVF (`ivf_topk`): FIXED-k centroids from a deterministic kmeans-lite
+    (h15-seeded init + integer Lloyd updates), nearest-centroid
+    assignment, a sampled query probes its nprobe nearest lists. Centroid
+    count is a constant, so the assignment broadcast is O(k·dim)
+    regardless of corpus size.
 - banded threshold pairs (`cosine_threshold_pairs_banded`): the
   embedding near-dup primitive at scale — sign-LSH bands generate
-  candidates via an equi-join (shuffle ∝ docs·bands + candidate pairs, NO
+  candidates on the same grid (shuffle ∝ docs·bands + candidate pairs, NO
   corpus-proportional broadcast), then the exact integer dot verifies.
   Mirrors the MinHash-band → exact-Jaccard design in operators/dedup.py.
-- IVF (`ivf_topk`): FIXED-k centroids from a deterministic kmeans-lite
-  (h15-seeded init + integer Lloyd updates), nearest-centroid assignment,
-  exact ranking within the query's nprobe nearest probe lists. Centroid
-  count is a constant, so the assignment broadcast is O(k·dim) regardless
-  of corpus size (round-1 weakness: centroids ∝ corpus — fixed).
 
 Numeric contract: similarity = Σ round(aᵢ·1e6)·round(bᵢ·1e6) in int64 —
 exact, engine-independent (rounding is half-away-from-zero in Spark,
@@ -40,7 +49,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from videos_to_tfrecords_spark.functions.hashing import h15
@@ -50,6 +59,9 @@ _SCALE = 1_000_000
 # target expected bucket population when deriving the plane count from the
 # corpus size: planes = max(N_PLANES, ceil(log2(n / _TARGET_BUCKET_ROWS)))
 _TARGET_BUCKET_ROWS = 128
+#: rows per side of one grid cell: a key group splits into
+#: ceil(|side| / _CHUNK_CAP) hash chunks per side (read at call time)
+_CHUNK_CAP = 4096
 
 
 def _to_int_matrix(series: pd.Series) -> np.ndarray:
@@ -70,23 +82,95 @@ def _pair_dot():
 
 
 def _collect_query_matrix(
-    queries: DataFrame, cols: list[str], vec_col: str
+    queries: DataFrame, cols: list[str], vec_col: str, to_matrix=_to_int_matrix
 ) -> tuple[list[np.ndarray], np.ndarray]:
     """Materialize a BOUNDED query side as driver-side numpy: per-column
-    id/label arrays plus the int64-quantized vector matrix. The collect is
-    metadata-sized by contract — every caller bounds the query set (a fixed
-    probe sample or a corpus-derived-modulus sample), so this is the
-    classic broadcast-variable shape, not a data-sized collect."""
+    id/label arrays plus the ``to_matrix``-quantized vector matrix (a
+    (0, 1) matrix when the side is empty). The collect is metadata-sized
+    by contract — every caller bounds the query set (a fixed probe sample
+    or a corpus-derived-modulus sample), so this is the classic
+    broadcast-variable shape, not a data-sized collect."""
     rows = queries.select(*cols, vec_col).collect()
     meta = [
         np.array([r[i] for r in rows], dtype=np.int64) for i in range(len(cols))
     ]
     vecs = (
-        _to_int_matrix(pd.Series([list(r[-1]) for r in rows]))
+        to_matrix(pd.Series([list(r[-1]) for r in rows]))
         if rows
         else np.zeros((0, 1), dtype=np.int64)
     )
     return meta, vecs
+
+
+def _partial_topk(
+    score: np.ndarray, cids: np.ndarray, k: int, drop: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row partial top-k of a |q|×batch int64 score matrix under the
+    total order (score desc, cand_id asc), skipping the cells ``drop``
+    marks (self pairs, same-label pairs). Returns the (row, col) indices
+    of at most k kept cells per row, rows ascending, each row in rank
+    order. Exact: a row's top-k cells all score ≥ its k-th largest kept
+    score, so one ``np.partition`` finds that bound and only the cells at
+    or above it (ties included) are sorted."""
+    nq, nb = score.shape
+    kk = min(k, nb)
+    if not nq or not kk:
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
+    live = np.where(drop, np.iinfo(np.int64).min, score)
+    bound = np.partition(live, nb - kk, axis=1)[:, nb - kk]
+    r, c = np.nonzero((live >= bound[:, None]) & ~drop)
+    order = np.lexsort((cids[c], -score[r, c], r))
+    r, c = r[order], c[order]
+    keep = np.arange(len(r)) - np.searchsorted(r, r) < k
+    return r[keep], c[keep]
+
+
+def _rank_close(
+    df: DataFrame, k: int, order: list[Column], by: tuple[str, ...] = ("query_id",)
+) -> DataFrame:
+    """Close a top-k over partial rows: rank each ``by`` group under
+    ``order`` (a total order, so the rank is deterministic) and keep
+    ranks ≤ k. Exact whenever every partial holds its own top-k under the
+    same order — the global top-k is then among the partials."""
+    w = Window.partitionBy(*by).orderBy(*order)
+    return df.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _scan_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    score,
+    to_matrix=_to_int_matrix,
+) -> DataFrame:
+    """Exact top-k per query over a corpus scan, self excluded: the
+    bounded query side is collected once into a ``to_matrix`` matrix and
+    closed over a ``mapInPandas`` scan; each Arrow batch computes one
+    ``score(qmat, batch vectors)`` |q|×batch int64 matrix and emits only
+    its per-query :func:`_partial_topk`, and :func:`_rank_close` ranks the
+    batches·|q|·k partials under (score desc, cand_id asc). The corpus
+    crosses Arrow once and never shuffles. Output: (query_id, cand_id,
+    score, rnk)."""
+    (qids,), qmat = _collect_query_matrix(queries, [id_col], vec_col, to_matrix)
+    c = corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
+
+    def partial(it):
+        for pdf in it:
+            if not len(pdf) or not len(qids):
+                continue
+            cids = pdf["cand_id"].to_numpy()
+            s = score(qmat, pdf["cv"])
+            r, ci = _partial_topk(s, cids, k, qids[:, None] == cids[None, :])
+            yield pd.DataFrame(
+                {"query_id": qids[r], "cand_id": cids[ci], "score": s[r, ci]}
+            )
+
+    scored = c.mapInPandas(partial, "query_id long, cand_id long, score long")
+    return _rank_close(scored, k, [F.desc("score"), F.asc("cand_id")])
 
 
 def brute_force_topk(
@@ -96,58 +180,20 @@ def brute_force_topk(
     vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k neighbors per query (excluding self), with id tie-break.
-
-    The bounded query side (every caller samples it to O(100) rows — fixed
-    probe sets or corpus-derived-modulus samples) is collected once into an
-    int64 matrix and closed over a ``mapInPandas`` scan of the corpus: each
-    Arrow batch computes one |q|×batch BLAS matmul and emits only its
-    per-query partial top-k under the total order (-dot, cand_id). Exact:
-    every globally-top-k candidate is within its own batch's top-k under
-    the same total order, so the final window rank over batches·|q|·k
-    partial rows reproduces the full rank. vs the previous
-    crossJoin+pandas-UDF form this ships |corpus| vectors through Arrow
-    once instead of |q|·|corpus| pair copies, and the only shuffle carries
-    batches·|q|·k rows instead of |q|·|corpus|. The corpus side never
-    shuffles."""
-    (qids,), qmat = _collect_query_matrix(queries, [id_col], vec_col)
-    c = corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-
-    def partial(it):
-        for pdf in it:
-            if not len(pdf) or not len(qids):
-                continue
-            ci = _to_int_matrix(pdf["cv"])
-            cids = pdf["cand_id"].to_numpy()
-            dots = qmat @ ci.T  # |q| × batch, exact int64
-            out_q, out_c, out_d = [], [], []
-            for r in range(len(qids)):
-                order = np.lexsort((cids, -dots[r]))
-                taken = 0
-                for idx in order:
-                    if cids[idx] == qids[r]:
-                        continue
-                    out_q.append(qids[r])
-                    out_c.append(cids[idx])
-                    out_d.append(dots[r, idx])
-                    taken += 1
-                    if taken >= k:
-                        break
-            yield pd.DataFrame(
-                {"query_id": out_q, "cand_id": out_c, "dot_scaled": out_d}
-            ).astype(
-                {"query_id": "int64", "cand_id": "int64", "dot_scaled": "int64"}
-            )
-
-    scored = c.mapInPandas(
-        partial, "query_id long, cand_id long, dot_scaled long"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_scaled"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "dot_scaled", "rnk")
-    )
+    """Exact top-k neighbors per query by integer dot (excluding self),
+    with id tie-break: :func:`_scan_topk` with one |q|×batch BLAS matmul
+    per Arrow batch. vs the old crossJoin+pandas-UDF form this ships
+    |corpus| vectors through Arrow once instead of |q|·|corpus| pair
+    copies, and the only shuffle carries batches·|q|·k rows instead of
+    |q|·|corpus|. Every caller samples the query side to O(100) rows."""
+    return _scan_topk(
+        queries,
+        corpus,
+        id_col,
+        vec_col,
+        k,
+        lambda qmat, cv: qmat @ _to_int_matrix(cv).T,
+    ).withColumnRenamed("score", "dot_scaled")
 
 
 def cosine_threshold_pairs(
@@ -177,78 +223,29 @@ def cosine_threshold_pairs(
     )
 
 
-def _role_tagged_grid(
-    df: DataFrame, keys: list[str], chunk_cap: int
-) -> DataFrame:
-    """Blocked self-join scaffolding shared by lsh_topk and the banded
-    verifier. ``df`` carries ``keys + (query_id, v)``; each key-group is
-    hash-split into ceil(|group|/chunk_cap) chunks and every row is
-    emitted once per grid cell it participates in, tagged with its role:
-    as a query row for its own chunk row (qc=my, all cc), as a candidate
-    for its own chunk column (all qc, cc=my). A downstream
-    groupBy(keys, qc, cc) then sees ≤ ~2·chunk_cap rows per task however
-    large the key-group is (hash-balanced: a balls-in-bins expectation,
-    not a hard ceiling). Results are independent of the chunking, so
-    oracles never see this — it is purely physical.
+def _bipartite_tagged_grid(q: DataFrame, c: DataFrame, keys: list[str]) -> DataFrame:
+    """Blocked join scaffolding for every grid kernel: the query rows and
+    candidate rows of a key group are hash-chunked independently — qn =
+    ceil(|q-group|/cap), cn = ceil(|c-group|/cap), cap = _CHUNK_CAP — and
+    every (q-chunk × c-chunk) grid cell receives its own q rows plus its
+    own c rows, role-tagged (``is_q``). A downstream groupBy(keys, qc, cc)
+    task therefore sees ≤ ~2·cap rows however large either side of the
+    group gets (hash-balanced: a balls-in-bins expectation, not a hard
+    ceiling). Purely physical: every (query, candidate) pair of a group
+    lands in exactly one cell, so results are independent of the chunking
+    and oracles never see it.
 
-    The counts join is a plain equi-join (Spark/AQE broadcasts it when
-    small; at 2^planes buckets it stays a co-partitioned shuffle join —
-    never a corpus-proportional broadcast)."""
-    counts = df.groupBy(*keys).agg(
-        F.ceil(F.count("*") / F.lit(chunk_cap)).cast("int").alias("n_chunks")
-    )
-    chunked = df.join(counts, keys).withColumn(
-        "my_chunk",
-        F.pmod(
-            h15(F.col("query_id").cast("string"), salt="chunk"), F.col("n_chunks")
-        ).cast("int"),
-    )
-    grid = F.explode(F.sequence(F.lit(0), F.col("n_chunks") - 1))
-    q_side = chunked.select(
-        *keys,
-        F.col("my_chunk").alias("qc"),
-        grid.alias("cc"),
-        F.lit(True).alias("is_q"),
-        "query_id",
-        "v",
-    )
-    c_side = chunked.select(
-        *keys,
-        grid.alias("qc"),
-        F.col("my_chunk").alias("cc"),
-        F.lit(False).alias("is_q"),
-        "query_id",
-        "v",
-    )
-    return q_side.unionByName(c_side)
-
-
-def _bipartite_tagged_grid(
-    q: DataFrame, c: DataFrame, keys: list[str], chunk_cap: int
-) -> DataFrame:
-    """Bipartite twin of :func:`_role_tagged_grid` for join shapes where
-    the query side and candidate side of a key group are DIFFERENT row
-    sets (multi-probe: a query visits n_planes+1 buckets, a candidate
-    lives in exactly one). Each side is hash-chunked independently —
-    qn = ceil(|q-group|/cap), cn = ceil(|c-group|/cap) — and every
-    (q-chunk × c-chunk) grid cell receives its own q rows plus its own c
-    rows, role-tagged. A downstream groupBy(keys, qc, cc) task therefore
-    sees ≤ ~2·chunk_cap rows however large either side of the bucket gets
-    (hash-balanced expectation, as in _role_tagged_grid). Purely physical:
-    every (query, candidate) pair lands in exactly one cell, so results
-    are independent of the chunking and oracles never see it.
-
-    Both inputs must carry ``keys + (query_id, v)``; the count join is an
-    equi-join on the bucket keys (inner — a bucket with only one side
-    produces no pairs anyway)."""
+    Both inputs carry ``keys + (query_id, v)``. A self-join passes the
+    same frame as both sides, which computes the chunk counts once. The
+    count join is an equi-join on the keys (inner — a group with only one
+    side produces no pairs anyway); Spark/AQE broadcasts it when small,
+    and it is never a corpus-proportional broadcast."""
+    n = F.ceil(F.count("*") / F.lit(_CHUNK_CAP)).cast("int")
     counts = (
-        q.groupBy(*keys)
-        .agg(F.ceil(F.count("*") / F.lit(chunk_cap)).cast("int").alias("qn"))
-        .join(
-            c.groupBy(*keys).agg(
-                F.ceil(F.count("*") / F.lit(chunk_cap)).cast("int").alias("cn")
-            ),
-            keys,
+        q.groupBy(*keys).agg(n.alias("qn"), n.alias("cn"))
+        if c is q
+        else q.groupBy(*keys).agg(n.alias("qn")).join(
+            c.groupBy(*keys).agg(n.alias("cn")), keys
         )
     )
     my_chunk = lambda n: F.pmod(  # noqa: E731
@@ -281,6 +278,46 @@ def _bipartite_tagged_grid(
     return q_side.unionByName(c_side)
 
 
+def _cell_dots(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Split one role-tagged grid cell into (query ids, candidate ids,
+    |q|×|c| exact int64 dots); a cell missing a side yields no pairs."""
+    is_q = pdf["is_q"].to_numpy()
+    qs, cs = pdf[is_q], pdf[~is_q]
+    qids, cids = qs["query_id"].to_numpy(), cs["query_id"].to_numpy()
+    if not len(qs) or not len(cs):
+        return qids[:0], cids[:0], np.zeros((0, 0), dtype=np.int64)
+    return qids, cids, _to_int_matrix(qs["v"]) @ _to_int_matrix(cs["v"]).T
+
+
+def probe_topk(q: DataFrame, cand: DataFrame, k: int) -> DataFrame:
+    """Top-k by exact integer dot over probed keys — the probe and verify
+    half of every ANN kernel here. ``q`` holds one ``(key, query_id, v)``
+    row per key a query probes and ``cand`` one per key a candidate is
+    assigned (a self-join passes one frame as both). Each key group is
+    ranked on :func:`_bipartite_tagged_grid`: every cell emits the
+    :func:`_partial_topk` of its query rows against its candidate rows,
+    self excluded, and :func:`_rank_close` merges the partials under
+    (-dot, cand_id). As long as a query probes DISTINCT keys and a
+    candidate holds ONE key, each (query, candidate) pair meets in exactly
+    one cell, so the result equals the unblocked ranking.
+
+    Output: (query_id, cand_id, dot_scaled, rnk)."""
+
+    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        qids, cids, dots = _cell_dots(pdf)
+        r, c = _partial_topk(dots, cids, k, qids[:, None] == cids[None, :])
+        return pd.DataFrame(
+            {"query_id": qids[r], "cand_id": cids[c], "dot_scaled": dots[r, c]}
+        )
+
+    partials = (
+        _bipartite_tagged_grid(q, cand, ["key"])
+        .groupBy("key", "qc", "cc")
+        .applyInPandas(cell_topk, "query_id long, cand_id long, dot_scaled long")
+    )
+    return _rank_close(partials, k, [F.desc("dot_scaled"), F.asc("cand_id")])
+
+
 def cosine_threshold_pairs_banded(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -288,13 +325,12 @@ def cosine_threshold_pairs_banded(
     threshold_scaled: int = 400_000_000_000,
     n_planes: int = 24,
     n_bands: int = 6,
-    chunk_cap: int = 4096,
 ) -> DataFrame:
     """Near-dup pairs above a similarity threshold at corpus scale:
     candidates = (a < b) pairs sharing at least one sign-LSH band, verified
     by the exact integer dot ≥ threshold. No broadcast anywhere — the band
-    explode shuffles n·n_bands rows and the verify join shuffles only the
-    candidate pairs, so the plan survives a corpus that is 1000× the
+    explode shuffles n·n_bands rows and each (band, bkey) group is verified
+    on the bounded grid, so the plan survives a corpus that is 1000× the
     executors' memory. Per-plane collision prob is 1 - θ/π; with 4-bit
     bands at cos 0.4 the banded recall is ≈ 1-(1-0.159)^6 ≈ 0.65 —
     raise n_planes/n_bands for higher thresholds (near-dup corpora are
@@ -321,27 +357,17 @@ def cosine_threshold_pairs_banded(
             )
         ).alias("band", "bkey"),
     )
-    grid = _role_tagged_grid(bands, ["band", "bkey"], chunk_cap)
+    grid = _bipartite_tagged_grid(bands, bands, ["band", "bkey"])
 
     def local_matches(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "dot_scaled": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "dot_scaled": "int64"}
-        )
-        qmask = pdf["is_q"].to_numpy()
-        qs, cs = pdf[qmask], pdf[~qmask]
-        if not len(qs) or not len(cs):
-            return empty
-        qi, ci = _to_int_matrix(qs["v"]), _to_int_matrix(cs["v"])
-        qids = qs["query_id"].to_numpy()
-        cids = cs["query_id"].to_numpy()
-        dots = qi @ ci.T  # ≤ chunk_cap² int64 cells, vectorized
+        qids, cids, dots = _cell_dots(pdf)  # ≤ _CHUNK_CAP² int64 cells
         # id_a < id_b inside the kernel ⇒ each unordered pair survives in
         # exactly one grid cell (the transposed cell fails the inequality),
         # so no within-band dedupe is needed
         r, c = np.where((dots >= threshold_scaled) & (qids[:, None] < cids[None, :]))
         return pd.DataFrame(
             {"id_a": qids[r], "id_b": cids[c], "dot_scaled": dots[r, c]}
-        ).astype({"id_a": "int64", "id_b": "int64", "dot_scaled": "int64"})
+        )
 
     matches = grid.groupBy("band", "bkey", "qc", "cc").applyInPandas(
         local_matches, "id_a long, id_b long, dot_scaled long"
@@ -351,16 +377,17 @@ def cosine_threshold_pairs_banded(
     return matches.distinct()
 
 
-def _plane_matrix(n_planes: int, dim: int) -> np.ndarray:
-    """Deterministic Rademacher hyperplanes: sign for (plane p, dim i) is
-    the parity of the portable md5-prefix hash of "p,i" — identical to the
-    SQL oracle's h15-based computation."""
-    m = np.empty((n_planes, dim), dtype=np.int64)
-    for p in range(n_planes):
-        for i in range(dim):
-            h = int(hashlib.md5(f"{p},{i}".encode()).hexdigest()[:15], 16)
-            m[p, i] = 1 if h % 2 == 1 else -1
-    return m
+def _sign_matrix(n_rows: int, dim: int, prefix: str = "") -> np.ndarray:
+    """Deterministic Rademacher (±1) matrix: entry (j, i) is +1 iff the
+    portable md5-prefix hash of f"{prefix}{j},{i}" is odd — the LSH
+    hyperplanes (prefix "") and the JL projection (prefix "jl:") that the
+    SQL oracles rebuild bit-for-bit with h15."""
+    odd = [
+        int(hashlib.md5(f"{prefix}{j},{i}".encode()).hexdigest()[:15], 16) % 2
+        for j in range(n_rows)
+        for i in range(dim)
+    ]
+    return (2 * np.array(odd, dtype=np.int64) - 1).reshape(n_rows, dim)
 
 
 def auto_planes(n_rows: int, target_bucket_rows: int = _TARGET_BUCKET_ROWS) -> int:
@@ -387,7 +414,7 @@ def hyperplane_bucket(
     @F.pandas_udf("long")
     def bucket_of(vecs: pd.Series) -> pd.Series:
         vi = _to_int_matrix(vecs)
-        planes = _plane_matrix(n_planes, vi.shape[1])
+        planes = _sign_matrix(n_planes, vi.shape[1])
         signed = vi @ planes.T  # (rows, planes), exact int64
         bits = (signed > 0).astype(np.int64)
         weights = (1 << np.arange(n_planes)).astype(np.int64)
@@ -396,44 +423,24 @@ def hyperplane_bucket(
     return df.withColumn(out, bucket_of(F.col(vec_col)))
 
 
-def _partial_topk_fn(k: int):
-    """Blocked partial top-k: rows arrive role-tagged (is_q); rank the
-    query rows of this (bucket, qc, cc) cell against the candidate rows,
-    keep k per query. Exact: the final global rank over per-cell partials
-    equals the rank over the whole bucket because every candidate chunk
-    contributes its k best and (-dot, cand_id) is a total order."""
-
-    def partial_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": [], "cand_id": [], "dot_scaled": []}
-        ).astype({"query_id": "int64", "cand_id": "int64", "dot_scaled": "int64"})
-        qmask = pdf["is_q"].to_numpy()
-        qs, cs = pdf[qmask], pdf[~qmask]
-        if not len(qs) or not len(cs):
-            return empty
-        qi, ci = _to_int_matrix(qs["v"]), _to_int_matrix(cs["v"])
-        qids = qs["query_id"].to_numpy()
-        cids = cs["query_id"].to_numpy()
-        dots = qi @ ci.T  # exact int64, ≤ chunk_cap² cells
-        # candidate order by (-dot, cand_id) per query via lexsort
-        out_q, out_c, out_d = [], [], []
-        for r in range(len(qids)):
-            order = np.lexsort((cids, -dots[r]))
-            taken = 0
-            for c in order:
-                if cids[c] == qids[r]:
-                    continue
-                out_q.append(qids[r])
-                out_c.append(cids[c])
-                out_d.append(dots[r, c])
-                taken += 1
-                if taken >= k:
-                    break
-        return pd.DataFrame(
-            {"query_id": out_q, "cand_id": out_c, "dot_scaled": out_d}
-        ).astype({"query_id": "int64", "cand_id": "int64", "dot_scaled": "int64"})
-
-    return partial_topk
+def _lsh_keys(
+    df: DataFrame, id_col: str, vec_col: str, n_planes: int | str
+) -> tuple[int, DataFrame]:
+    """(n_planes, rows) for the LSH kernels: ``n_planes="auto"`` derives
+    the plane count from the corpus size (one count() job; pass the known
+    size in production), and the rows are (key=bucket, query_id, v). The
+    rows are checkpointed: the bucket pandas UDF feeds every grid consumer
+    (count aggregates and row sides) and Catalyst has no CSE across the
+    count join's branches — executing it once measured ~1.3× on the whole
+    query at sf0.1."""
+    if n_planes == "auto":
+        n_planes = auto_planes(df.count())
+    rows = (
+        hyperplane_bucket(df, id_col, vec_col, n_planes, out="key")
+        .select("key", F.col(id_col).alias("query_id"), F.col(vec_col).alias("v"))
+        .localCheckpoint(eager=True)
+    )
+    return n_planes, rows
 
 
 def lsh_topk(
@@ -442,52 +449,21 @@ def lsh_topk(
     vec_col: str = "embedding",
     k: int = 3,
     n_planes: int | str = N_PLANES,
-    chunk_cap: int = 4096,
 ) -> DataFrame:
-    """ANN top-k within LSH buckets, with BOUNDED task size. Round 1 ran one
-    ``applyInPandas`` task per bucket — an O(|bucket|²) single-task bomb
-    when a bucket grows with the corpus. Now:
-
-    - ``n_planes="auto"`` derives the plane count from the corpus size so
-      the expected bucket population stays ≤ _TARGET_BUCKET_ROWS (one
-      count() job; pass the known corpus size in production);
-    - every bucket is hash-split into ceil(|bucket|/chunk_cap) chunks and
-      the pairwise ranking runs as a blocked (query-chunk × cand-chunk)
-      grid — each task sees ≤ ~2·chunk_cap rows (chunks are hash-balanced:
-      the cap is a balls-in-bins expectation, not a hard ceiling), then a
-      per-query merge ranks the partials. Results are IDENTICAL to the
-      whole-bucket computation (same total order), so the oracle is
-      unchanged; only the physical shape is blocked.
+    """ANN top-k within sign-LSH buckets: :func:`probe_topk` where each
+    vector is both a candidate and a query of its own bucket. Round 1 ran
+    one ``applyInPandas`` task per bucket — an O(|bucket|²) single-task
+    bomb when a bucket grows with the corpus; the grid bounds every task
+    and leaves the result IDENTICAL to the whole-bucket ranking, so the
+    oracle is the plain same-bucket ranking.
 
     Shuffle cost: bucket counts (tiny, broadcast back) + 2·C·n tagged rows
     where C = chunks per bucket (C=1 ⇒ the round-1 shape, ×2 for the role
     tag). Recall vs brute force is property-tested; production tightens it
     with :func:`lsh_topk_multiprobe`.
     """
-    if n_planes == "auto":
-        n_planes = auto_planes(df.count())
-    # the bucket pandas-UDF subtree feeds BOTH the grid's count aggregate
-    # and its row side — localCheckpoint executes the UDF once instead of
-    # per-consumer (Catalyst has no CSE across the count join's branches);
-    # measured ~1.3× on the whole query at sf0.1
-    bucketed = (
-        hyperplane_bucket(df, id_col, vec_col, n_planes)
-        .select("bucket", F.col(id_col).alias("query_id"), F.col(vec_col).alias("v"))
-        .localCheckpoint(eager=True)
-    )
-    partials = (
-        _role_tagged_grid(bucketed, ["bucket"], chunk_cap)
-        .groupBy("bucket", "qc", "cc")
-        .applyInPandas(
-            _partial_topk_fn(k), "query_id long, cand_id long, dot_scaled long"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_scaled"), F.asc("cand_id"))
-    return (
-        partials.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "dot_scaled", "rnk")
-    )
+    _, rows = _lsh_keys(df, id_col, vec_col, n_planes)
+    return probe_topk(rows, rows, k)
 
 
 def lsh_topk_multiprobe(
@@ -496,60 +472,22 @@ def lsh_topk_multiprobe(
     vec_col: str = "embedding",
     k: int = 3,
     n_planes: int | str = N_PLANES,
-    chunk_cap: int = 4096,
 ) -> DataFrame:
-    """Multi-probe sign-LSH top-k: each query probes its own bucket plus
-    every bucket at Hamming distance 1 (flip each of the n_planes sign
-    bits) — the standard recall recovery for vectors that land near a
-    hyperplane. Recall improvement over single-probe is pytest-asserted
-    against brute force.
-
-    Scale shape (round-2 weakness fixed): ``n_planes="auto"`` derives the
-    plane count from the corpus size (expected bucket population stays
-    ≤ _TARGET_BUCKET_ROWS — at fixed planes, bucket population ∝ corpus
-    and the per-bucket join output is O(Σ|bucket|²)); and the per-bucket
-    ranking runs as a blocked bipartite (query-chunk × cand-chunk) grid,
-    so no task materializes more than ~2·chunk_cap rows however hot a
-    bucket gets. Every (query, candidate) pair appears in exactly one grid
-    cell (the query probes n_planes+1 DISTINCT buckets, the candidate
-    lives in one), each cell emits its top-k per query, and the global
-    (-dot, cand_id) merge equals the unblocked ranking — results are
-    identical, so the SQL oracle is unchanged."""
-    if n_planes == "auto":
-        n_planes = auto_planes(df.count())
-    # one UDF execution for FOUR consumers (q-counts, c-counts, q rows,
-    # c rows in _bipartite_tagged_grid) — the lsh_topk checkpoint note
-    bucketed = hyperplane_bucket(df, id_col, vec_col, n_planes).localCheckpoint(
-        eager=True
-    )
-    cand = bucketed.select(
-        "bucket", F.col(id_col).alias("query_id"), F.col(vec_col).alias("v")
-    )
-    probes = F.array(
-        F.col("bucket"),
-        *[
-            F.col("bucket").bitwiseXOR(F.lit(1 << p).cast("long"))
-            for p in range(n_planes)
-        ],
-    )
-    q = bucketed.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("v"),
-        F.explode(probes).alias("bucket"),
-    ).select("bucket", "query_id", "v")
-    partials = (
-        _bipartite_tagged_grid(q, cand, ["bucket"], chunk_cap)
-        .groupBy("bucket", "qc", "cc")
-        .applyInPandas(
-            _partial_topk_fn(k), "query_id long, cand_id long, dot_scaled long"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_scaled"), F.asc("cand_id"))
-    return (
-        partials.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "dot_scaled", "rnk")
-    )
+    """Multi-probe sign-LSH top-k: :func:`probe_topk` where each query
+    probes its own bucket plus every bucket at Hamming distance 1 (flip
+    each of the n_planes sign bits) — the standard recall recovery for
+    vectors that land near a hyperplane — and a candidate lives in its own
+    bucket only. Recall improvement over single-probe is pytest-asserted
+    against brute force. With ``n_planes="auto"`` the expected bucket
+    population stays ≤ _TARGET_BUCKET_ROWS (at fixed planes, bucket
+    population ∝ corpus and the per-bucket join output is O(Σ|bucket|²)),
+    and the grid bounds every task however hot a bucket gets."""
+    n_planes, rows = _lsh_keys(df, id_col, vec_col, n_planes)
+    flips = [
+        F.col("key").bitwiseXOR(F.lit(1 << p).cast("long")) for p in range(n_planes)
+    ]
+    q = rows.select(F.explode(F.array("key", *flips)).alias("key"), "query_id", "v")
+    return probe_topk(q, rows, k)
 
 
 def _dist2_matrix(vi: np.ndarray, cents: np.ndarray) -> np.ndarray:
@@ -561,6 +499,20 @@ def _dist2_matrix(vi: np.ndarray, cents: np.ndarray) -> np.ndarray:
     v2 = np.einsum("rd,rd->r", vi, vi)[:, None]
     c2 = np.einsum("kd,kd->k", cents, cents)[None, :]
     return v2 + c2 - 2 * (vi @ cents.T)
+
+
+def _nearest_centroid(cents: np.ndarray):
+    """pandas UDF → struct(cid, d2k): each vector's nearest centroid by
+    exact int64 dist² (ties → lowest cid, see :func:`_dist2_matrix`) and
+    that dist² div 1000. Built per call: it closes over ``cents``."""
+
+    @F.pandas_udf("struct<cid: int, d2k: long>")
+    def nearest(vs: pd.Series) -> pd.DataFrame:
+        d = _dist2_matrix(_to_int_matrix(vs), cents)
+        cid = np.argmin(d, axis=1).astype("int32")
+        return pd.DataFrame({"cid": cid, "d2k": d[np.arange(len(cid)), cid] // 1000})
+
+    return nearest
 
 
 def kmeans_lite(
@@ -583,10 +535,10 @@ def kmeans_lite(
       k×(dim+1) integers — metadata-scale, like AQE stats;
     - a centroid that loses every member keeps its previous position.
 
-    Returns a (k, dim) int64 centroid matrix (cid = row index). The cost
-    is iters+1 scans of the corpus with nothing but k·dim ints moving —
-    the scale-safe replacement for round 1's corpus-proportional
-    id-mod centroid sample."""
+    Returns a (k, dim) int64 centroid matrix (cid = row index), (0, 0)
+    for an empty corpus. The cost is iters+1 scans of the corpus with
+    nothing but k·dim ints moving — the scale-safe replacement for round
+    1's corpus-proportional id-mod centroid sample."""
     seeds = (
         df.select(F.col(id_col), F.col(vec_col))
         .withColumn("_hk", h15(F.col(id_col).cast("string")))
@@ -595,6 +547,8 @@ def kmeans_lite(
         .select(F.col(vec_col))
         .collect()
     )
+    if not seeds:
+        return np.zeros((0, 0), dtype=np.int64)
     cents = _to_int_matrix(pd.Series([r[0] for r in seeds]))
     dim = cents.shape[1]
     for _ in range(iters):
@@ -651,51 +605,37 @@ def ivf_topk(
     k: int = 3,
 ) -> DataFrame:
     """IVF ANN with fixed-k kmeans-lite centroids and nprobe>1 (M5 scale
-    path). The corpus partitions into k_centroids inverted lists; each
-    query scans only its nprobe nearest lists, ranked by exact integer
-    dot. k_centroids is a CONSTANT (raise it for bigger corpora — e.g.
-    4096 at 1e9 vectors so lists average n/k; parallelism across lists is
-    k, so pick k ≥ executor count), which keeps every broadcast O(k·dim)
-    — centroid count no longer grows with the corpus. Entirely
-    integer-exact and deterministically initialized, so the whole
-    approximate pipeline hash-matches its SQL oracle."""
+    path): :func:`probe_topk` where each candidate is assigned its
+    nearest centroid's inverted list and each sampled query (id %
+    query_mod = 0) probes its nprobe nearest lists, ranked by exact
+    integer dot. k_centroids is a CONSTANT (raise it for bigger corpora —
+    e.g. 4096 at 1e9 vectors so lists average n/k), which keeps every
+    broadcast O(k·dim) — centroid count no longer grows with the corpus —
+    and the grid splits any list that grows anyway, so no task holds more
+    than ~2·_CHUNK_CAP rows. Entirely integer-exact and deterministically
+    initialized, so the whole approximate pipeline hash-matches its SQL
+    oracle."""
     cents = kmeans_lite(df, id_col, vec_col, k=k_centroids, iters=iters)
 
-    @F.pandas_udf("int")
-    def assign_cid(vs: pd.Series) -> pd.Series:
-        vi = _to_int_matrix(vs)
-        return pd.Series(np.argmin(_dist2_matrix(vi, cents), axis=1).astype("int32"))
-
     @F.pandas_udf("array<int>")
-    def probe_cids(vs: pd.Series) -> pd.Series:
-        vi = _to_int_matrix(vs)
-        d = _dist2_matrix(vi, cents)
+    def nearest_lists(vs: pd.Series) -> pd.Series:
+        d = _dist2_matrix(_to_int_matrix(vs), cents)
         # argsort is stable ⇒ ties break to the lowest cid, matching the
-        # oracle's ORDER BY dist2, cid
+        # oracle's ORDER BY dist2, cid; entry 0 is the vector's own list
         order = np.argsort(d, axis=1, kind="stable")[:, :nprobe].astype("int32")
         return pd.Series(list(order))
 
-    cand = df.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cv"),
-        assign_cid(F.col(vec_col)).alias("cid"),
-    )
-    q = df.filter(F.col(id_col) % query_mod == 0).select(
+    # one UDF pass for every grid consumer (the _lsh_keys checkpoint note)
+    rows = df.select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(probe_cids(F.col(vec_col))).alias("cid"),
+        F.col(vec_col).alias("v"),
+        nearest_lists(F.col(vec_col)).alias("lists"),
+    ).localCheckpoint(eager=True)
+    cand = rows.select(F.col("lists")[0].alias("key"), "query_id", "v")
+    q = rows.filter(F.col("query_id") % query_mod == 0).select(
+        F.explode("lists").alias("key"), "query_id", "v"
     )
-    scored = (
-        q.join(cand, "cid")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("dot_scaled", _pair_dot()("qv", "cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_scaled"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "dot_scaled", "rnk")
-    )
+    return probe_topk(q, cand, k)
 
 
 #: bounded evaluation/mining probe-set size for the brute-force kernels —
@@ -828,40 +768,18 @@ def hard_negatives(
         for pdf in it:
             if not len(pdf) or not len(qids):
                 continue
-            ci = _to_int_matrix(pdf["cv"])
             cids = pdf["cand_id"].to_numpy()
             clabels = pdf["neg_label"].to_numpy()
-            dots = qmat @ ci.T  # |q| × batch, exact int64
-            out = {n: [] for n in ("qid", "qlab", "cid", "clab", "dot")}
-            for r in range(len(qids)):
-                order = np.lexsort((cids, -dots[r]))
-                taken = 0
-                for idx in order:
-                    if clabels[idx] == qlabels[r]:
-                        continue
-                    out["qid"].append(qids[r])
-                    out["qlab"].append(qlabels[r])
-                    out["cid"].append(cids[idx])
-                    out["clab"].append(clabels[idx])
-                    out["dot"].append(dots[r, idx])
-                    taken += 1
-                    if taken >= k:
-                        break
+            dots = qmat @ _to_int_matrix(pdf["cv"]).T  # |q| × batch, exact int64
+            same = qlabels[:, None] == clabels[None, :]
+            r, ci = _partial_topk(dots, cids, k, same)
             yield pd.DataFrame(
                 {
-                    "query_id": out["qid"],
-                    "query_label": out["qlab"],
-                    "cand_id": out["cid"],
-                    "neg_label": out["clab"],
-                    "dot_scaled": out["dot"],
-                }
-            ).astype(
-                {
-                    "query_id": "int64",
-                    "query_label": "int64",
-                    "cand_id": "int64",
-                    "neg_label": "int64",
-                    "dot_scaled": "int64",
+                    "query_id": qids[r],
+                    "query_label": qlabels[r],
+                    "cand_id": cids[ci],
+                    "neg_label": clabels[ci],
+                    "dot_scaled": dots[r, ci],
                 }
             )
 
@@ -870,12 +788,7 @@ def hard_negatives(
         "query_id long, query_label long, cand_id long, "
         "neg_label long, dot_scaled long",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_scaled"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "query_label", "cand_id", "neg_label", "dot_scaled", "rnk")
-    )
+    return _rank_close(scored, k, [F.desc("dot_scaled"), F.asc("cand_id")])
 
 
 def gram_matrix(
@@ -938,16 +851,7 @@ def kmeans_profile(
     versions). Nothing but (cid, dist2) ever shuffles — the profile is a
     map-side partial aggregate over the assignment pass."""
     cents = kmeans_lite(df, id_col, vec_col, k=k, iters=iters)
-
-    @F.pandas_udf("struct<cid: int, d2k: long>")
-    def assign_with_dist(vs: pd.Series) -> pd.DataFrame:
-        vi = _to_int_matrix(vs)
-        d = _dist2_matrix(vi, cents)
-        cid = np.argmin(d, axis=1).astype("int32")
-        d2 = d[np.arange(len(cid)), cid] // 1000
-        return pd.DataFrame({"cid": cid, "d2k": d2})
-
-    assigned = df.select(assign_with_dist(F.col(vec_col)).alias("a"))
+    assigned = df.select(_nearest_centroid(cents)(F.col(vec_col)).alias("a"))
     return (
         assigned.groupBy(F.col("a.cid").alias("cid"))
         .agg(
@@ -1023,10 +927,18 @@ def pq_adc_recall(
     Scale: the query LUT is nq·m·k_codes ints broadcast in the task
     closure; one corpus scan computes codes + ADC + exact scores per Arrow
     batch and emits only per-batch top-k rows per (metric, query) —
-    shuffle ∝ nq·k·batches, never the corpus."""
-    n = df.count()
-    qmod = max(1, n // 80)
-    dim = len(df.select(vec_col).limit(1).collect()[0][0])
+    shuffle ∝ nq·k·batches, never the corpus. An empty query set gives
+    (0, 0, 0)."""
+    qmod = max(1, df.count() // 80)
+    (q_ids,), q_mat = _collect_query_matrix(
+        df.filter(F.col(id_col) % qmod == 0), [id_col], vec_col
+    )
+    nq = len(q_ids)
+    if not nq:
+        return df.sparkSession.createDataFrame(
+            [(0, 0, 0)], "n_queries long, hits long, recall_x1000 long"
+        )
+    dim = q_mat.shape[1]
     if dim % m != 0:
         raise ValueError(f"pq_adc_recall: dim {dim} not divisible by m {m}")
     width = dim // m
@@ -1043,14 +955,6 @@ def pq_adc_recall(
         )
         for s in range(m)
     ]
-    qrows = (
-        df.filter(F.col(id_col) % qmod == 0)
-        .select(id_col, vec_col)
-        .collect()
-    )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = _to_int_matrix(pd.Series([r[1] for r in qrows]))
-    nq = len(q_ids)
     # LUT[s]: (nq, k_codes) exact int64 dist² from each query's subvector
     lut = [
         _dist2_matrix(q_mat[:, s * width : (s + 1) * width], books[s])
@@ -1070,37 +974,24 @@ def pq_adc_recall(
                 adc += lut[s][:, codes]
             exact = _dist2_matrix(q_mat, vi)
             self_mask = q_ids[:, None] == ids[None, :]
-            out_q, out_c, out_d, out_kind = [], [], [], []
-            for kind, mat in (("adc", adc), ("exact", exact)):
-                mm = np.where(self_mask, np.iinfo(np.int64).max, mat)
-                kk = min(k, mm.shape[1])
-                # per-batch partial top-k per query, ties → lowest cand id
-                order = np.lexsort((ids[None, :].repeat(nq, 0), mm), axis=1)[
-                    :, :kk
-                ]
-                for qi in range(nq):
-                    sel = order[qi]
-                    keep = mm[qi, sel] < np.iinfo(np.int64).max
-                    sel = sel[keep]
-                    out_q.extend([q_ids[qi]] * len(sel))
-                    out_c.extend(ids[sel])
-                    out_d.extend(mm[qi, sel])
-                    out_kind.extend([kind] * len(sel))
-            yield pd.DataFrame(
-                {
-                    "kind": out_kind,
-                    "query_id": np.array(out_q, dtype=np.int64),
-                    "cand_id": np.array(out_c, dtype=np.int64),
-                    "metric": np.array(out_d, dtype=np.int64),
-                }
-            )
+            for kind, metric in (("adc", adc), ("exact", exact)):
+                # per-batch partial top-k per query: metric asc, ties →
+                # lowest cand id
+                r, c = _partial_topk(-metric, ids, k, self_mask)
+                yield pd.DataFrame(
+                    {
+                        "kind": kind,
+                        "query_id": q_ids[r],
+                        "cand_id": ids[c],
+                        "metric": metric[r, c],
+                    }
+                )
 
     cand = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
         scan, "kind string, query_id long, cand_id long, metric long"
     )
-    w = Window.partitionBy("kind", "query_id").orderBy("metric", "cand_id")
-    topk = cand.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
+    topk = _rank_close(
+        cand, k, [F.asc("metric"), F.asc("cand_id")], by=("kind", "query_id")
     )
     ann = topk.filter(F.col("kind") == "adc").select("query_id", "cand_id")
     ex = topk.filter(F.col("kind") == "exact").select("query_id", "cand_id")
@@ -1148,10 +1039,19 @@ def ivfpq_adc_topk(
     candidate generation is a map-side join and the only exchange is the
     per-query top-k over nq·(n·nprobe/k_coarse) candidate rows. Codebooks
     and centroids are driver-side planning metadata (k_coarse·dim +
-    m·k_codes·dim ints), constant in the corpus."""
-    n = df.count()
-    qmod = max(1, n // 80)
-    dim = len(df.select(vec_col).limit(1).collect()[0][0])
+    m·k_codes·dim ints), constant in the corpus. An empty query set gives
+    no rows."""
+    qmod = max(1, df.count() // 80)
+    # bounded query-side planning tables (the documented collect pattern)
+    (q_ids,), q_mat = _collect_query_matrix(
+        df.filter(F.col(id_col) % qmod == 0), [id_col], vec_col
+    )
+    spark = df.sparkSession
+    if not len(q_ids):
+        return spark.createDataFrame(
+            [], "query_id long, cand_id long, adc_dist long, rnk long"
+        )
+    dim = q_mat.shape[1]
     if dim % m != 0:
         raise ValueError(f"ivfpq_adc_topk: dim {dim} not divisible by m {m}")
     width = dim // m
@@ -1197,11 +1097,6 @@ def ivfpq_adc_topk(
         encode, enc_schema
     )
 
-    # bounded query-side planning tables (the documented collect pattern)
-    qrows = df.filter(F.col(id_col) % qmod == 0).select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = _to_int_matrix(pd.Series([r[1] for r in qrows]))
-    spark = df.sparkSession
     dprobe = _dist2_matrix(q_mat, coarse)
     order = np.argsort(dprobe, axis=1, kind="stable")[:, :nprobe]
     probe_df = spark.createDataFrame(
@@ -1231,27 +1126,9 @@ def ivfpq_adc_topk(
         )
         adc_terms.append(F.col(f"d_{s}"))
     adc = sum(adc_terms[1:], adc_terms[0]).cast("long")
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        scored.withColumn("adc_dist", adc)
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "adc_dist", "rnk")
-    )
-
-
-def _jl_matrix(n_out: int, dim: int) -> np.ndarray:
-    """Deterministic Rademacher (±1) projection matrix for the database-
-    friendly Johnson–Lindenstrauss transform (Achlioptas 2001): sign for
-    (output dim j, input dim i) is the parity of the portable md5-prefix
-    hash of "jl:j,i" — the same salted-h15 family as the LSH hyperplanes,
-    so the SQL oracle reproduces it bit-for-bit."""
-    m = np.empty((n_out, dim), dtype=np.int64)
-    for j in range(n_out):
-        for i in range(dim):
-            h = int(hashlib.md5(f"jl:{j},{i}".encode()).hexdigest()[:15], 16)
-            m[j, i] = 1 if h % 2 == 1 else -1
-    return m
+    return _rank_close(
+        scored.withColumn("adc_dist", adc), k, [F.asc("adc_dist"), F.asc("cand_id")]
+    ).select("query_id", "cand_id", "adc_dist", "rnk")
 
 
 def jl_project(
@@ -1266,12 +1143,14 @@ def jl_project(
     exact in int64 (proj_j = Σᵢ round(xᵢ·1e6)·sign(j,i); 64-dim inputs ⇒
     |proj| ≤ 6.4e7·dim, far from overflow). Purely narrow: one Arrow-batch
     int64 matmul per partition, no shuffle — a scan-shaped rewrite at any
-    corpus size."""
+    corpus size. The database-friendly ±1 matrix (Achlioptas 2001) is
+    :func:`_sign_matrix` with prefix "jl:", so the SQL oracle reproduces it
+    bit-for-bit."""
 
     @F.pandas_udf("array<long>")
     def proj(vs: pd.Series) -> pd.Series:
         vi = _to_int_matrix(vs)
-        m = _jl_matrix(n_out, vi.shape[1])
+        m = _sign_matrix(n_out, vi.shape[1], prefix="jl:")
         return pd.Series(list(vi @ m.T))
 
     return df.select(F.col(id_col), proj(F.col(vec_col)).alias("proj"))
@@ -1309,19 +1188,13 @@ def semantic_dedup(
         n = df.count()
         k = max(8, (int(n) + target_cluster_rows - 1) // target_cluster_rows)
     cents = kmeans_lite(df, id_col, vec_col, k=k, iters=iters)
-
-    @F.pandas_udf("int")
-    def assign_cid(vs: pd.Series) -> pd.Series:
-        vi = _to_int_matrix(vs)
-        return pd.Series(np.argmin(_dist2_matrix(vi, cents), axis=1).astype("int32"))
-
     iv = F.transform(
         F.col(vec_col).cast("array<double>"),
         lambda x: F.round(x * 1_000_000).cast("long"),
     )
     base = df.select(
         F.col(id_col).alias("vid"),
-        assign_cid(F.col(vec_col)).alias("cid"),
+        _nearest_centroid(cents)(F.col(vec_col)).cid.alias("cid"),
         iv.alias("iv"),
     )
     a = base.select("cid", F.col("vid").alias("id_a"), F.col("iv").alias("iv_a"))
@@ -1590,6 +1463,19 @@ def kcenter_greedy(
     )
 
 
+def _q8(series: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """Per-vector max-abs INT8 codes (half-away-from-zero, an all-zero
+    vector codes to 0) plus the vector's scale round(1e6·maxabs)."""
+    m = np.stack(series.to_numpy()).astype(np.float64)
+    ma = np.abs(m).max(axis=1)
+    safe = np.where(ma == 0, 1.0, ma)
+    scaled = 127.0 * m / safe[:, None]
+    q = (np.sign(scaled) * np.floor(np.abs(scaled) + 0.5)).astype(np.int64)
+    q[ma == 0] = 0
+    ms = np.floor(np.abs(1_000_000 * ma) + 0.5).astype(np.int64)
+    return q, ms
+
+
 def int8_brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1603,62 +1489,17 @@ def int8_brute_force_topk(
     is q_a·q_b·(maxabs_a/127)(maxabs_b/127); the query's scale is
     constant per ranking so it drops, and the candidate's scale is
     quantized to an int so the key is exact int64 (|q·q| ≤ dim·127²,
-    ×1e6·maxabs ≪ 2^63) — bit-identical cross-engine, same kernel shape
-    as :func:`brute_force_topk` (collected bounded query matrix, one
-    int matmul per Arrow batch, per-batch partial top-k, window close).
+    ×1e6·maxabs ≪ 2^63) — bit-identical cross-engine, ranked by
+    :func:`_scan_topk` like :func:`brute_force_topk`.
     """
 
-    def q8(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        ma = np.abs(m).max(axis=1)
-        safe = np.where(ma == 0, 1.0, ma)
-        scaled = 127.0 * m / safe[:, None]
-        q = (np.sign(scaled) * np.floor(np.abs(scaled) + 0.5)).astype(np.int64)
-        q[ma == 0] = 0
-        ms = np.floor(np.abs(1_000_000 * ma) + 0.5).astype(np.int64)
-        return q, ms
+    def key8(qmat: np.ndarray, cv: pd.Series) -> np.ndarray:
+        ci, ms = _q8(cv)
+        return (qmat @ ci.T) * ms[None, :]  # |q| × batch, exact int64
 
-    rows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in rows], dtype=np.int64)
-    qraw = (
-        np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-        if rows
-        else np.zeros((0, 1))
-    )
-    qmat, _ = q8(qraw)
-    c = corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-
-    def partial(it):
-        for pdf in it:
-            if not len(pdf) or not len(qids):
-                continue
-            craw = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            ci, ms = q8(craw)
-            cids = pdf["cand_id"].to_numpy()
-            keys = (qmat @ ci.T) * ms[None, :]  # |q| × batch, exact int64
-            out_q, out_c, out_d = [], [], []
-            for r in range(len(qids)):
-                order = np.lexsort((cids, -keys[r]))
-                taken = 0
-                for idx in order:
-                    if cids[idx] == qids[r]:
-                        continue
-                    out_q.append(qids[r])
-                    out_c.append(cids[idx])
-                    out_d.append(keys[r, idx])
-                    taken += 1
-                    if taken >= k:
-                        break
-            yield pd.DataFrame(
-                {"query_id": out_q, "cand_id": out_c, "key8": out_d}
-            ).astype("int64")
-
-    scored = c.mapInPandas(partial, "query_id long, cand_id long, key8 long")
-    w = Window.partitionBy("query_id").orderBy(F.desc("key8"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "key8", "rnk")
-    )
+    return _scan_topk(
+        queries, corpus, id_col, vec_col, k, key8, lambda s: _q8(s)[0]
+    ).withColumnRenamed("score", "key8")
 
 
 def euclidean_bottom2(
@@ -1669,43 +1510,14 @@ def euclidean_bottom2(
 ) -> DataFrame:
     """For each bounded-probe query the TWO nearest corpus vectors by
     exact squared euclidean distance (scaled-int64, ties on cand_id) —
-    the kernel under the TwoNN intrinsic-dimension estimator. Same
-    collected-matrix shape as :func:`brute_force_topk` with the min-side
-    total order (d², cand_id): each Arrow batch emits its per-query
-    bottom-2 partials, a window closes the global rank."""
-    (qids,), qmat = _collect_query_matrix(queries, [id_col], vec_col)
-    q2 = np.einsum("rd,rd->r", qmat, qmat)
-    c = corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-
-    def partial(it):
-        for pdf in it:
-            if not len(pdf) or not len(qids):
-                continue
-            ci = _to_int_matrix(pdf["cv"])
-            cids = pdf["cand_id"].to_numpy()
-            c2 = np.einsum("rd,rd->r", ci, ci)
-            d2 = q2[:, None] + c2[None, :] - 2 * (qmat @ ci.T)
-            out_q, out_c, out_d = [], [], []
-            for r in range(len(qids)):
-                order = np.lexsort((cids, d2[r]))
-                taken = 0
-                for idx in order:
-                    if cids[idx] == qids[r]:
-                        continue
-                    out_q.append(qids[r])
-                    out_c.append(cids[idx])
-                    out_d.append(d2[r, idx])
-                    taken += 1
-                    if taken >= 2:
-                        break
-            yield pd.DataFrame(
-                {"query_id": out_q, "cand_id": out_c, "dist2": out_d}
-            ).astype("int64")
-
-    scored = c.mapInPandas(partial, "query_id long, cand_id long, dist2 long")
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist2"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 2)
-        .select("query_id", "cand_id", "dist2", "rnk")
-    )
+    the kernel under the TwoNN intrinsic-dimension estimator:
+    :func:`_scan_topk` with score −d², so its order (score desc, cand_id)
+    is the min-side order (d², cand_id)."""
+    return _scan_topk(
+        queries,
+        corpus,
+        id_col,
+        vec_col,
+        2,
+        lambda qmat, cv: -_dist2_matrix(qmat, _to_int_matrix(cv)),
+    ).select("query_id", "cand_id", (-F.col("score")).alias("dist2"), "rnk")
