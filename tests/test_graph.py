@@ -102,15 +102,14 @@ def test_triangle_closure_is_equi_join(spark):
     """The adjacency-intersection probe must stay hash/merge EQUI-joins
     (edge ⋈ adj on u, then on v) — a predicate-shaped formulation would
     silently degenerate to a nested-loop join over edges × adjacency."""
+    from videos_to_tfrecords_spark.materialize import inner_plans, plan_text
+
     df = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "a long, b long")
-    # eager=False: audit the lazy plan (the eager path checkpoints the
-    # 1-row result, which audits as a plain RDD scan)
-    plan = (
-        triangle_count(df, eager=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    # audit the plan the result checkpoint ran (the returned frame is the
+    # 1-row checkpoint, which audits as a plain RDD scan)
+    with inner_plans() as plans:
+        triangle_count(df)
+    plan = plan_text(plans[-1])
     # the neighbor-array intersection runs inside codegen, never a join
     assert "array_intersect" in plan
     assert "CartesianProduct" not in plan

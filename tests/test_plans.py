@@ -5,9 +5,18 @@ map-side partial aggregation, sort-free top-k."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from videos_to_tfrecords_spark.plans import graph_queries, mining_queries  # noqa: F401
+from videos_to_tfrecords_spark.plans.registry import MODULES, QUERIES
 from videos_to_tfrecords_spark.sources.tables import load_table
+
+#: every registered query that reaches operators/graph.py or materializes
+#: in plans/graph_queries.py
+GRAPH_QUERIES = [n for n, mod in MODULES.items() if mod == graph_queries.__name__] + [
+    "graph_lpa_communities"
+]
 
 
 def plan_of(df) -> str:
@@ -295,8 +304,8 @@ def test_triangle_count_consumers_hit_cache(spark, sf_dir):
     per consumer), so assert the cache READS instead."""
     from pyspark.sql import functions as F
 
+    from videos_to_tfrecords_spark.materialize import inner_plans, plan_text
     from videos_to_tfrecords_spark.operators.graph import triangle_count
-    from videos_to_tfrecords_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     und = (
@@ -308,28 +317,24 @@ def test_triangle_count_consumers_hit_cache(spark, sf_dir):
         .select("p.a", "p.b")
         .distinct()
     )
-    plan = (
-        triangle_count(und, eager=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    with inner_plans() as plans:
+        triangle_count(und)
+    # the plan the 1-row result checkpoint ran
+    plan = plan_text(plans[-1])
     assert plan.count("InMemoryTableScan") >= 5
     assert "array_intersect" in plan  # the in-task intersection probe
 
 
-def test_triangle_count_releases_cached_intermediates(spark, sf_dir):
-    """The eager triangle count must not leak persisted RDDs across
-    queries (persist + eager-release pattern): after construction the
-    block-manager cache holds nothing new."""
-    from videos_to_tfrecords_spark.plans.graph_queries import q_triangles_copurchase
-
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    q_triangles_copurchase(spark, sf_dir).collect()
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    # the only surviving cache entry is the 1-row result checkpoint (it IS
-    # the returned DataFrame); the edge/degree/orientation intermediates —
-    # the ones that scale with data — must all be gone
+@pytest.mark.parametrize("name", GRAPH_QUERIES)
+def test_graph_queries_release_what_they_made(spark, sf_dir, name):
+    """A graph query leaves no persisted or checkpointed intermediate
+    behind: after build and collect, the only new persistent RDD is the
+    returned result checkpoint. The edge/degree/frontier intermediates —
+    the ones that scale with data — must all be released."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    QUERIES[name](spark, sf_dir).collect()
+    after = set(jsc.getPersistentRDDs().keySet().toArray())
     assert len(after - before) <= 1
 
 

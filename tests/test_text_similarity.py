@@ -433,7 +433,8 @@ def test_ivf_chunk_grid_is_purely_physical_and_bounded(spark, monkeypatch):
 
 
 def _empty_input_cases():
-    """(kernel, fixture, run) for every top-k kernel in similarity.py.
+    """(kernel, fixture, run) for every top-k kernel in similarity.py and
+    the PQ codebook profile.
     ``empty``: a 0-row corpus. ``odd_ids``: 200 rows with odd vec_ids, so
     every id % 2 = 0 query sample (query_mod=2, and qmod = 200 div 80 = 2
     for the PQ kernels) is empty."""
@@ -451,6 +452,7 @@ def _empty_input_cases():
         "euclidean_bottom2": lambda df: s.euclidean_bottom2(even(df), df),
         "pq_adc_recall": lambda df: s.pq_adc_recall(df),
         "ivfpq_adc_topk": lambda df: s.ivfpq_adc_topk(df),
+        "pq_profile": lambda df: s.pq_profile(df),
     }
     sampled = {"ivf_topk", "hard_negatives", "pq_adc_recall", "ivfpq_adc_topk"}
     return [(name, "empty", run) for name, run in runs.items()] + [

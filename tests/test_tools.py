@@ -1,7 +1,8 @@
 """tools/ maintenance scripts: the warehouse sweep (VERDICT r08 #6).
 
-No SparkSession needed — prune_warehouse operates on the filesystem and
-derives its live set from the package source + on-disk sf dirs.
+prune_warehouse operates on the filesystem and derives its live set from
+the package source + on-disk sf dirs; only the check_oracle summary test
+runs a query.
 """
 
 from __future__ import annotations
@@ -109,3 +110,17 @@ def test_check_oracle_rejects_unknown_flag(monkeypatch, capsys):
     assert "--chaned" in capsys.readouterr().err
     assert mod.main(["--help"]) == 0
     assert "Usage:" in capsys.readouterr().out
+
+
+def test_check_oracle_summary_counts_queries_checked(spark, sf_dir, monkeypatch, capsys):
+    """A run over named queries reports how many it checked, not the size
+    of the whole registry."""
+    import videos_to_tfrecords_spark.session as session
+
+    path = os.path.join(os.path.dirname(_TOOL), "check_oracle.py")
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    assert mod.main([sf_dir, "filename_extension_filter"]) == 0
+    assert "0 failures / 1 queries" in capsys.readouterr().out

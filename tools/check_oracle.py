@@ -394,7 +394,7 @@ def main(argv: list[str] | None = None) -> int:
         else:
             print(f"OK    {name}: {len(srows)} rows  ({secs}s)")
             record[name] = {"status": "ok", "rows": len(srows), "secs": secs}
-    print(f"\n{failures} failures / {len(queries)} queries")
+    print(f"\n{failures} failures / {len(record)} queries")
     if json_out:
         import json
 

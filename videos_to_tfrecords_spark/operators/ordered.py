@@ -46,13 +46,14 @@ _PID = "_ord_pid"
 
 
 def _pinned_range(
-    df: DataFrame, order_cols, reliable: bool | None = None
+    df: DataFrame, order_cols, reliable: bool | None = None, scope=None
 ) -> DataFrame:
     """Range-partition on the order and PIN the partitioning (boundary
     sampling is nondeterministic across re-evaluations). `reliable=None`
     reads the `videosToTfrecords.ordered.reliableCheckpoint` session conf
     (default false → executor-local `localCheckpoint`); True requires
-    `setCheckpointDir` and survives executor loss on a real cluster."""
+    `setCheckpointDir` and survives executor loss on a real cluster. A
+    local pin made with a `materialize` scope is a cut of that scope."""
     spark = df.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if reliable is None:
@@ -67,6 +68,8 @@ def _pinned_range(
     )
     if reliable:
         return ranged.checkpoint(eager=True)
+    if scope is not None:
+        return scope.cut(ranged)
     return ranged.localCheckpoint(eager=True)
 
 
@@ -85,10 +88,13 @@ def _offsets(part: DataFrame, agg_col, alias: str) -> DataFrame:
     )
 
 
-def global_row_number(df: DataFrame, order_cols, alias: str = "rn") -> DataFrame:
+def global_row_number(
+    df: DataFrame, order_cols, alias: str = "rn", scope=None
+) -> DataFrame:
     """Exact 1-based global row number over a total order; adds `alias` and
-    keeps every input column. No single-partition shuffle of `df`."""
-    part = _pinned_range(df, order_cols)
+    keeps every input column. No single-partition shuffle of `df`. With a
+    `materialize` scope, the range pin is released when the scope exits."""
+    part = _pinned_range(df, order_cols, scope=scope)
     offs = _offsets(part, F.count("*").cast("long"), "_ord_off")
     rn = F.row_number().over(Window.partitionBy(_PID).orderBy(*order_cols))
     return (

@@ -884,8 +884,13 @@ def pq_profile(
     training is iters+1 scans per subspace with only k rows/batch
     shuffling; the encode profile is one scan per subspace aggregating
     map-side. Fully deterministic ⇒ the unrolled-SQL oracle hash-checks
-    even the trained codebooks."""
-    dim = len(df.select(vec_col).limit(1).collect()[0][0])
+    even the trained codebooks. An empty frame gives no rows."""
+    first = df.select(vec_col).limit(1).collect()
+    if not first:
+        return df.sparkSession.createDataFrame(
+            [], "subspace long, code long, n_vecs long, distortion_k long"
+        )
+    dim = len(first[0][0])
     if dim % m != 0:
         raise ValueError(f"pq_profile: dim {dim} not divisible by m {m}")
     width = dim // m

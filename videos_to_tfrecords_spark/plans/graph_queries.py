@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from videos_to_tfrecords_spark.materialize import materialized
 from videos_to_tfrecords_spark.plans.registry import query
 from videos_to_tfrecords_spark.sources.tables import load_table
 
@@ -454,44 +455,45 @@ def q_graph_negative_edge_samples(spark: SparkSession, sf_dir: str) -> DataFrame
     from videos_to_tfrecords_spark.operators.ordered import global_row_number
     from pyspark.sql import Window
 
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    n = nodes.count()
-    # dense 0-based node rank via the distributed global row number — |V|
-    # grows with the corpus, so no single-partition window over the node
-    # set (operators/ordered.py)
-    rk = global_row_number(nodes, [F.col("node")], "_rn1").select(
-        "node", (F.col("_rn1") - 1).alias("rn")
-    )
-    trials = spark.range(_NEG_TRIALS).select(F.col("id").alias("t"))
-    cand = (
-        nodes.crossJoin(F.broadcast(trials))
-        .select(
-            F.col("node").alias("src"),
-            "t",
-            (
-                h15(
-                    F.concat_ws(
-                        ":", F.col("node").cast("string"), F.col("t").cast("string")
-                    ),
-                    salt="neg",
-                )
-                % n
-            ).alias("pick_rn"),
+    with materialized() as m:
+        edges = m.cut(_trade_edges(spark, sf_dir))
+        nodes = edges.select(F.col("src").alias("node")).distinct()
+        n = nodes.count()
+        # dense 0-based node rank via the distributed global row number — |V|
+        # grows with the corpus, so no single-partition window over the node
+        # set (operators/ordered.py)
+        rk = global_row_number(nodes, [F.col("node")], "_rn1", scope=m).select(
+            "node", (F.col("_rn1") - 1).alias("rn")
         )
-    )
-    withdst = (
-        cand.join(rk, cand.pick_rn == rk.rn)
-        .filter(F.col("node") != F.col("src"))
-        .select("src", "t", F.col("node").alias("dst"))
-    )
-    nonedge = withdst.join(edges, ["src", "dst"], "left_anti")
-    w = Window.partitionBy("src").orderBy("t", "dst")
-    return (
-        nonedge.withColumn("k", F.row_number().over(w).cast("long"))
-        .filter(F.col("k") <= _NEG_K)
-        .select("src", "dst", "k")
-    )
+        trials = spark.range(_NEG_TRIALS).select(F.col("id").alias("t"))
+        cand = (
+            nodes.crossJoin(F.broadcast(trials))
+            .select(
+                F.col("node").alias("src"),
+                "t",
+                (
+                    h15(
+                        F.concat_ws(
+                            ":", F.col("node").cast("string"), F.col("t").cast("string")
+                        ),
+                        salt="neg",
+                    )
+                    % n
+                ).alias("pick_rn"),
+            )
+        )
+        withdst = (
+            cand.join(rk, cand.pick_rn == rk.rn)
+            .filter(F.col("node") != F.col("src"))
+            .select("src", "t", F.col("node").alias("dst"))
+        )
+        nonedge = withdst.join(edges, ["src", "dst"], "left_anti")
+        w = Window.partitionBy("src").orderBy("t", "dst")
+        return m.result(
+            nonedge.withColumn("k", F.row_number().over(w).cast("long"))
+            .filter(F.col("k") <= _NEG_K)
+            .select("src", "dst", "k")
+        )
 
 
 def _weighted_pr_oracle() -> str:
@@ -656,63 +658,43 @@ def q_graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the edge list joins the node-keyed degree table twice
     (each join shuffles on a node key, the PageRank profile) and
     collapses to 6 wide integers — no corpus-sized state."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    fwd = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+    with materialized() as m:
+        edges = m.keep(_trade_edges(spark, sf_dir))
+        deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
+        p = (
+            edges.join(deg.withColumnRenamed("src", "node"), F.col("src") == F.col("node"))
+            .select(F.col("dst"), F.col("d").alias("x"))
+            .join(
+                deg.select(F.col("src").alias("node2"), F.col("d").alias("y")),
+                F.col("dst") == F.col("node2"),
             )
-        ).alias("e")
-    ).select("e.src", "e.dst").persist()
-    deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
-    p = (
-        edges.join(deg.withColumnRenamed("src", "node"), F.col("src") == F.col("node"))
-        .select(F.col("dst"), F.col("d").alias("x"))
-        .join(
-            deg.select(F.col("src").alias("node2"), F.col("d").alias("y")),
-            F.col("dst") == F.col("node2"),
+            .select("x", "y")
         )
-        .select("x", "y")
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    s = p.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(d38(F.col("x")) * d38(F.col("y"))).alias("sxy"),
-        F.sum(d38(F.col("x")) * d38(F.col("x"))).alias("sxx"),
-        F.sum(d38(F.col("y")) * d38(F.col("y"))).alias("syy"),
-    )
-    nD = d38(F.col("n"))
-    num = nD * F.col("sxy") - d38(F.col("sx")) * d38(F.col("sy"))
-    dx = nD * F.col("sxx") - d38(F.col("sx")) * d38(F.col("sx"))
-    dy = nD * F.col("syy") - d38(F.col("sy")) * d38(F.col("sy"))
-    out = (
-        s.filter((dx > 0) & (dy > 0))
-        .select(
-            F.expr("CAST(n div 2 AS BIGINT)").alias("n_edges"),
-            F.floor(
-                F.lit(1000000.0)
-                * num.cast("double")
-                / F.sqrt(dx.cast("double") * dy.cast("double"))
+        d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+        s = p.agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum("x").cast("long").alias("sx"),
+            F.sum("y").cast("long").alias("sy"),
+            F.sum(d38(F.col("x")) * d38(F.col("y"))).alias("sxy"),
+            F.sum(d38(F.col("x")) * d38(F.col("x"))).alias("sxx"),
+            F.sum(d38(F.col("y")) * d38(F.col("y"))).alias("syy"),
+        )
+        nD = d38(F.col("n"))
+        num = nD * F.col("sxy") - d38(F.col("sx")) * d38(F.col("sy"))
+        dx = nD * F.col("sxx") - d38(F.col("sx")) * d38(F.col("sx"))
+        dy = nD * F.col("syy") - d38(F.col("sy")) * d38(F.col("sy"))
+        return m.result(
+            s.filter((dx > 0) & (dy > 0)).select(
+                F.expr("CAST(n div 2 AS BIGINT)").alias("n_edges"),
+                F.floor(
+                    F.lit(1000000.0)
+                    * num.cast("double")
+                    / F.sqrt(dx.cast("double") * dy.cast("double"))
+                )
+                .cast("long")
+                .alias("assortativity_x1e6"),
             )
-            .cast("long")
-            .alias("assortativity_x1e6"),
         )
-        .localCheckpoint(eager=True)
-    )
-    edges.unpersist(blocking=False)
-    return out
 
 
 _BFS_ITERS = 4
@@ -830,12 +812,11 @@ def q_graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     halve exactly."""
     spark_edges = _trade_edges(spark, sf_dir)
     deg = spark_edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
-    club = (
-        deg.orderBy(F.desc("d"), F.asc("src"))
-        .limit(64)
-        .select(F.col("src").alias("node"))
-        .localCheckpoint(eager=True)
-    )
+    # the 64-row club outlives the scope: the returned frame reads it
+    with materialized() as m:
+        club = m.result(
+            deg.orderBy(F.desc("d"), F.asc("src")).limit(64).select(F.col("src").alias("node"))
+        )
     inner = (
         spark_edges.join(
             F.broadcast(club.withColumnRenamed("node", "src")), "src"
