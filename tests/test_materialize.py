@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 import pytest
 
 from videos_to_tfrecords_spark.materialize import inner_plans, materialized, plan_text
@@ -34,3 +37,38 @@ def test_scope_releases_everything_on_error(spark):
         m.result(spark.range(10))
         raise RuntimeError("operator failed")
     assert _persistent(spark) == before
+
+
+@contextmanager
+def _driver_log(spark) -> Iterator:
+    """A writer that receives every line the driver JVM logs inside the block."""
+    log4j = spark._jvm.org.apache.logging.log4j
+    ctx = log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    writer = spark._jvm.java.io.StringWriter()
+    appender = log4j.core.appender.WriterAppender.createAppender(
+        log4j.core.layout.PatternLayout.createDefaultLayout(),
+        None, writer, "test_materialize", False, True,
+    )
+    appender.start()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    try:
+        yield writer
+    finally:
+        root.removeAppender("test_materialize")
+        ctx.updateLoggers()
+        appender.stop()
+
+
+def test_released_checkpoint_is_unregistered_without_a_warning(spark):
+    """``RDD.unpersist`` logs a WARN for every locally checkpointed RDD; the
+    scope's release unregisters the RDD and logs nothing."""
+    warning = "was locally checkpointed, its lineage has been truncated"
+    with _driver_log(spark) as log:
+        with materialized() as m:
+            cut = m.cut(spark.range(10))
+        # the capture sees the WARN that RDD.unpersist logs
+        spark.range(10).localCheckpoint()._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    assert cut._jdf.queryExecution().analyzed().rdd().id() not in _persistent(spark)
+    assert log.toString().count(warning) == 1

@@ -8,7 +8,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from videos_to_tfrecords_spark.plans import graph_queries, mining_queries  # noqa: F401
+from videos_to_tfrecords_spark.plans import (  # noqa: F401
+    advanced_queries,
+    graph_queries,
+    mining_queries,
+)
 from videos_to_tfrecords_spark.plans.registry import MODULES, QUERIES
 from videos_to_tfrecords_spark.sources.tables import load_table
 
@@ -17,6 +21,8 @@ from videos_to_tfrecords_spark.sources.tables import load_table
 GRAPH_QUERIES = [n for n, mod in MODULES.items() if mod == graph_queries.__name__] + [
     "graph_lpa_communities"
 ]
+#: every query of plans/advanced_queries.py
+ADVANCED_QUERIES = [n for n, mod in MODULES.items() if mod == advanced_queries.__name__]
 
 
 def plan_of(df) -> str:
@@ -325,17 +331,29 @@ def test_triangle_count_consumers_hit_cache(spark, sf_dir):
     assert "array_intersect" in plan  # the in-task intersection probe
 
 
+def _new_persistent_rdds(spark, sf_dir, name) -> int:
+    """How many persistent RDDs one build and collect of a query leaves."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    QUERIES[name](spark, sf_dir).collect()
+    return len(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
+
+
 @pytest.mark.parametrize("name", GRAPH_QUERIES)
 def test_graph_queries_release_what_they_made(spark, sf_dir, name):
     """A graph query leaves no persisted or checkpointed intermediate
     behind: after build and collect, the only new persistent RDD is the
     returned result checkpoint. The edge/degree/frontier intermediates —
     the ones that scale with data — must all be released."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    QUERIES[name](spark, sf_dir).collect()
-    after = set(jsc.getPersistentRDDs().keySet().toArray())
-    assert len(after - before) <= 1
+    assert _new_persistent_rdds(spark, sf_dir, name) <= 1
+
+
+@pytest.mark.parametrize("name", ADVANCED_QUERIES)
+def test_advanced_queries_release_what_they_made(spark, sf_dir, name):
+    """The same for the advanced queries: their census and range-pin
+    checkpoints are released, and at most the returned frame's own
+    checkpoint is left."""
+    assert _new_persistent_rdds(spark, sf_dir, name) <= 1
 
 
 def test_packed_spans_prefix_sum_window_is_partitioned(spark, sf_dir):
@@ -382,21 +400,15 @@ def test_grouping_sets_is_one_pass_expand(spark, sf_dir):
 def test_mutual_information_single_fact_scan(spark, sf_dir):
     """Marginals roll up from the contingency cells — the fact table is
     scanned exactly once (cells subtree is cached for its 4 consumers)."""
-    import videos_to_tfrecords_spark.plans.advanced_queries as aq
-    from videos_to_tfrecords_spark.plans.registry import QUERIES
+    from videos_to_tfrecords_spark.materialize import inner_plans, plan_text
 
-    df = QUERIES["mutual_information_fields"](spark, sf_dir)
-    df.collect()  # materialize the cells checkpoint (printed plans re-print
-    # cached subtrees per consumer — the triangle-test caveat)
-    plan = plan_of(QUERIES["mutual_information_fields"](spark, sf_dir))
-    # cells subtree is localCheckpoint'ed (Scan ExistingRDD) or cached
-    assert (
-        "InMemoryTableScan" in plan
-        or "TableCacheQueryStage" in plan
-        or "Scan ExistingRDD" in plan
-    )
-    # either way, the parquet fact table is not re-scanned per consumer
-    assert plan.count("Scan parquet") == 0
+    with inner_plans() as plans:
+        QUERIES["mutual_information_fields"](spark, sf_dir)
+    cells, result = (plan_text(qe) for qe in plans)
+    assert cells.count("Scan parquet") == 1
+    # the returned frame's plan reads the cells checkpoint, not the fact table
+    assert "Scan ExistingRDD" in result
+    assert "Scan parquet" not in result
 
 
 def test_mahalanobis_plan_is_topk_no_global_sort(spark, sf_dir):

@@ -203,7 +203,7 @@ FOREIGN_DRIVER = textwrap.dedent(
 
 
 def test_python_udf_runs_from_foreign_cwd(tmp_path):
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_JVM_PRETOUCH="0")
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
     env.pop("PYTHONPATH", None)
     out = subprocess.run(
         [sys.executable, "-c", FOREIGN_DRIVER.format(root=ROOT)],

@@ -15,8 +15,9 @@ too), without blocking and without starting a Spark job. A released
 checkpoint cannot be read again (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``) and
 a released ``keep`` is silently recomputed, so whatever the returned frame
 reads must be materialized by ``result`` before the scope exits.
-``DataFrame.unpersist()`` leaves a local checkpoint's RDD registered, so
-the scope unpersists the checkpointed RDD itself.
+``DataFrame.unpersist()`` leaves a local checkpoint's RDD registered, and
+``RDD.unpersist`` logs a WARN for every locally checkpointed RDD, so the
+scope unpersists the checkpointed RDD through its ``SparkContext``.
 
 A checkpoint collapses ``explain`` to ``Scan ExistingRDD``: inside ``with
 inner_plans() as plans:`` each ``cut`` and ``result`` appends its frame's
@@ -71,7 +72,7 @@ def materialized() -> Iterator[Scope]:
         for df in scope._kept:
             df.unpersist(blocking=False)
         for rdd in scope._cut + (scope._results if failed else []):
-            rdd.unpersist(False)
+            rdd.context().unpersistRDD(rdd.id(), False)
 
 
 @contextmanager

@@ -111,11 +111,13 @@ def global_cumsum(
     sum_col: str,
     alias: str = "cum",
     before: bool = False,
+    scope=None,
 ) -> DataFrame:
     """Exact running sum of `sum_col` over a total order; `before=True`
     excludes the current row (the census `ROWS ... AND 1 PRECEDING`
-    shape). Adds `alias`, keeps every input column."""
-    part = _pinned_range(df, order_cols)
+    shape). Adds `alias`, keeps every input column. With a `materialize`
+    scope, the range pin is released when the scope exits."""
+    part = _pinned_range(df, order_cols, scope=scope)
     offs = _offsets(part, F.sum(sum_col).cast("long"), "_ord_off")
     upper = -1 if before else 0
     win = (

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from videos_to_tfrecords_spark.materialize import materialized
 from videos_to_tfrecords_spark.operators.relational import asof_join, salted_sum, sessionize
 from videos_to_tfrecords_spark.plans.registry import query
 from videos_to_tfrecords_spark.sources.tables import load_table, register_views
@@ -1045,25 +1046,27 @@ def q_hll_portable_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" ELSE 55 - length(bin(hv % {two54})) END"
         ).alias("r"),
     )
-    regs = rho.groupBy("grp", "idx").agg(F.max("r").alias("m")).localCheckpoint(
-        eager=True  # groups×64 rows; merged + per-group consumers share it
-    )
-    union_regs = regs.groupBy("idx").agg(F.max("m").alias("m")).select(
-        F.lit("ALL").alias("grp"), "idx", "m"
-    )
-    allregs = regs.select("grp", "idx", "m").unionAll(union_regs)
-    sums = allregs.groupBy("grp").agg(
-        F.count("*").cast("long").alias("n_hit"),
-        F.sum(F.expr("CAST(pow(2.0, 55 - m) AS BIGINT)")).cast("long").alias("sp"),
-    )
-    return sums.select(
-        "grp",
-        "n_hit",
-        F.expr(
-            "CAST(floor(0.709 * 4096.0 * pow(2.0, 55) /"
-            " CAST(sp + (64 - n_hit) * 36028797018963968 AS DOUBLE)) AS BIGINT)"
-        ).alias("est_distinct"),
-    )
+    with materialized() as m:
+        # groups×64 rows; merged + per-group consumers share it
+        regs = m.cut(rho.groupBy("grp", "idx").agg(F.max("r").alias("m")))
+        union_regs = regs.groupBy("idx").agg(F.max("m").alias("m")).select(
+            F.lit("ALL").alias("grp"), "idx", "m"
+        )
+        allregs = regs.select("grp", "idx", "m").unionAll(union_regs)
+        sums = allregs.groupBy("grp").agg(
+            F.count("*").cast("long").alias("n_hit"),
+            F.sum(F.expr("CAST(pow(2.0, 55 - m) AS BIGINT)")).cast("long").alias("sp"),
+        )
+        return m.result(
+            sums.select(
+                "grp",
+                "n_hit",
+                F.expr(
+                    "CAST(floor(0.709 * 4096.0 * pow(2.0, 55) /"
+                    " CAST(sp + (64 - n_hit) * 36028797018963968 AS DOUBLE)) AS BIGINT)"
+                ).alias("est_distinct"),
+            )
+        )
 
 
 @query(
@@ -1097,37 +1100,38 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     One contingency aggregate (cells = |X|·|Y|, metadata-sized) + two
     marginal rollups OF THE CELLS (never rescanning the fact table)."""
     li = load_table(spark, sf_dir, "lineitem")
-    # the contingency table is |X|·|Y| rows — eager-checkpoint it (the
-    # triangle_count pattern) so its four consumers read a materialized
-    # metadata-sized table instead of re-aggregating the fact scan
-    c = (
-        li.groupBy(
-            F.col("l_returnflag").alias("x"), F.col("l_linestatus").alias("y")
+    with materialized() as m:
+        # the contingency table is |X|·|Y| rows — eager-checkpoint it (the
+        # triangle_count pattern) so its four consumers read a materialized
+        # metadata-sized table instead of re-aggregating the fact scan
+        c = m.cut(
+            li.groupBy(
+                F.col("l_returnflag").alias("x"), F.col("l_linestatus").alias("y")
+            ).agg(F.count("*").alias("cxy"))
         )
-        .agg(F.count("*").alias("cxy"))
-        .localCheckpoint(eager=True)
-    )
-    mx = c.groupBy("x").agg(F.sum("cxy").alias("cx"))
-    my = c.groupBy("y").agg(F.sum("cxy").alias("cy"))
-    n = c.agg(F.sum("cxy").alias("n"))
-    L = lambda col: F.floor(F.lit(1000000) * F.log(F.col(col).cast("double"))).cast("long")  # noqa: E731
-    cells = (
-        c.join(F.broadcast(mx), "x")
-        .join(F.broadcast(my), "y")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "cxy",
-            (
-                F.col("cxy")
-                * (L("cxy") + L("n") - L("cx") - L("cy"))
-            ).alias("contrib"),
-            "n",
+        mx = c.groupBy("x").agg(F.sum("cxy").alias("cx"))
+        my = c.groupBy("y").agg(F.sum("cxy").alias("cy"))
+        n = c.agg(F.sum("cxy").alias("n"))
+        L = lambda col: F.floor(F.lit(1000000) * F.log(F.col(col).cast("double"))).cast("long")  # noqa: E731
+        cells = (
+            c.join(F.broadcast(mx), "x")
+            .join(F.broadcast(my), "y")
+            .crossJoin(F.broadcast(n))
+            .select(
+                "cxy",
+                (
+                    F.col("cxy")
+                    * (L("cxy") + L("n") - L("cx") - L("cy"))
+                ).alias("contrib"),
+                "n",
+            )
         )
-    )
-    return cells.groupBy().agg(
-        F.count("*").cast("long").alias("n_cells"),
-        F.expr("CAST(sum(contrib) div first(n) AS BIGINT)").alias("mi_x1e6"),
-    )
+        return m.result(
+            cells.groupBy().agg(
+                F.count("*").cast("long").alias("n_cells"),
+                F.expr("CAST(sum(contrib) div first(n) AS BIGINT)").alias("mi_x1e6"),
+            )
+        )
 
 
 # Poisson(1) CDF ×1e6 (floor): multiplicity k iff u < threshold[k],
@@ -1757,40 +1761,40 @@ def q_price_mad_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
-    c = (
-        li.select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("x"))
-        .groupBy("x")
-        .agg(F.count("*").cast("long").alias("t"))
-        .localCheckpoint(eager=True)  # value-domain-bounded census
-    )
-    nf = c.agg(F.sum("t").cast("long").alias("n"))
-
-    def census_median(df, col, alias):
-        # lower median as a 1-row frame: k = (n+1) div 2 carried as a column
-        wb = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, -1)
-        return (
-            df.withColumn(
-                "cum", F.coalesce(F.sum("t").over(wb), F.lit(0)).cast("long")
-            )
-            .crossJoin(F.broadcast(nf))
-            .filter(
-                (F.col("cum") < F.expr("(n + 1) div 2"))
-                & (F.col("cum") + F.col("t") >= F.expr("(n + 1) div 2"))
-            )
-            .select(F.col(col).cast("long").alias(alias))
+    with materialized() as m:
+        c = m.cut(  # value-domain-bounded census
+            li.select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("x"))
+            .groupBy("x")
+            .agg(F.count("*").cast("long").alias("t"))
         )
+        nf = c.agg(F.sum("t").cast("long").alias("n"))
 
-    med = census_median(c, "x", "median_cents")
-    dc = (
-        c.crossJoin(F.broadcast(med))
-        .select(F.abs(F.col("x") - F.col("median_cents")).alias("dx"), "t")
-        .groupBy("dx")
-        .agg(F.sum("t").cast("long").alias("t"))
-    )
-    mad = census_median(dc, "dx", "mad_cents")
-    return nf.crossJoin(med).crossJoin(mad).select(
-        "n", "median_cents", "mad_cents"
-    )
+        def census_median(df, col, alias):
+            # lower median as a 1-row frame: k = (n+1) div 2 carried as a column
+            wb = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, -1)
+            return (
+                df.withColumn(
+                    "cum", F.coalesce(F.sum("t").over(wb), F.lit(0)).cast("long")
+                )
+                .crossJoin(F.broadcast(nf))
+                .filter(
+                    (F.col("cum") < F.expr("(n + 1) div 2"))
+                    & (F.col("cum") + F.col("t") >= F.expr("(n + 1) div 2"))
+                )
+                .select(F.col(col).cast("long").alias(alias))
+            )
+
+        med = census_median(c, "x", "median_cents")
+        dc = (
+            c.crossJoin(F.broadcast(med))
+            .select(F.abs(F.col("x") - F.col("median_cents")).alias("dx"), "t")
+            .groupBy("dx")
+            .agg(F.sum("t").cast("long").alias("t"))
+        )
+        mad = census_median(dc, "dx", "mad_cents")
+        return m.result(
+            nf.crossJoin(med).crossJoin(mad).select("n", "median_cents", "mad_cents")
+        )
 
 
 @query(
@@ -1954,46 +1958,46 @@ def q_daily_anomaly_robust_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
 
-    d = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(F.expr("unix_micros(ts) div 86400000000").alias("day"))
-        .groupBy("day")
-        .agg(F.count("*").cast("long").alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    c = d.groupBy("x").agg(F.count("*").cast("long").alias("t"))
-    n = c.agg(F.sum("t").cast("long").alias("n")).collect()[0]["n"]
-    k = (n + 1) // 2
+    with materialized() as m:
+        d = m.cut(
+            ev.filter(F.col("event_type") == "purchase")
+            .select(F.expr("unix_micros(ts) div 86400000000").alias("day"))
+            .groupBy("day")
+            .agg(F.count("*").cast("long").alias("x"))
+        )
+        c = d.groupBy("x").agg(F.count("*").cast("long").alias("t"))
+        n = c.agg(F.sum("t").cast("long").alias("n")).collect()[0]["n"]
+        k = (n + 1) // 2
 
-    def census_median(df, col):
-        wb = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, -1)
-        return (
-            df.withColumn(
-                "cum", F.coalesce(F.sum("t").over(wb), F.lit(0)).cast("long")
+        def census_median(df, col):
+            wb = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, -1)
+            return (
+                df.withColumn(
+                    "cum", F.coalesce(F.sum("t").over(wb), F.lit(0)).cast("long")
+                )
+                .filter((F.col("cum") < k) & (F.col("cum") + F.col("t") >= k))
+                .collect()[0][col]
             )
-            .filter((F.col("cum") < k) & (F.col("cum") + F.col("t") >= k))
-            .collect()[0][col]
-        )
 
-    med = int(census_median(c, "x"))
-    dc = (
-        c.select(F.abs(F.col("x") - med).alias("dx"), "t")
-        .groupBy("dx")
-        .agg(F.sum("t").cast("long").alias("t"))
-    )
-    mad = int(census_median(dc, "dx"))
-    z = d.select(
-        "day",
-        F.col("x").alias("n_purchases"),
-        (
-            F.lit(0)
-            if mad == 0
-            else F.expr(f"(6745 * abs(x - {med})) div (10 * {mad})")
+        med = int(census_median(c, "x"))
+        dc = (
+            c.select(F.abs(F.col("x") - med).alias("dx"), "t")
+            .groupBy("dx")
+            .agg(F.sum("t").cast("long").alias("t"))
         )
-        .cast("long")
-        .alias("z_x1000"),
-    )
-    return z.orderBy(F.desc("z_x1000"), F.asc("day")).limit(10)
+        mad = int(census_median(dc, "dx"))
+        z = d.select(
+            "day",
+            F.col("x").alias("n_purchases"),
+            (
+                F.lit(0)
+                if mad == 0
+                else F.expr(f"(6745 * abs(x - {med})) div (10 * {mad})")
+            )
+            .cast("long")
+            .alias("z_x1000"),
+        )
+        return m.result(z.orderBy(F.desc("z_x1000"), F.asc("day")).limit(10))
 
 
 @query(
@@ -2093,58 +2097,59 @@ def q_interarrival_exponential_gof(spark: SparkSession, sf_dir: str) -> DataFram
     w = Window.partitionBy("user_id").orderBy(
         F.unix_micros("ts"), F.col("event_id")
     )
-    g = (
-        ev.select(
-            (F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)).alias(
-                "gap"
-            )
+    with materialized() as m:
+        g = m.cut(
+            ev.select(
+                (F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)).alias(
+                    "gap"
+                )
+            ).filter(F.col("gap").isNotNull() & (F.col("gap") > 0))
         )
-        .filter(F.col("gap").isNotNull() & (F.col("gap") > 0))
-        .localCheckpoint(eager=True)
-    )
-    tot = g.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("gap").cast("long").alias("s"),
-        F.max("gap").cast("long").alias("mx"),
-    )
-    c = g.crossJoin(F.broadcast(tot)).select(
-        F.expr("(gap * 64) div (mx + 1)").alias("b")
-    ).groupBy("b").agg(F.count("*").cast("long").alias("t"))
-    spine = spark.range(64).select(F.col("id").alias("b"))
-    f = spine.join(c, "b", "left").select(
-        "b", F.coalesce("t", F.lit(0)).alias("t")
-    )
-    wc = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-    cum = f.select("b", F.sum("t").over(wc).alias("ct"))
-    gap2 = cum.crossJoin(F.broadcast(tot)).select(
-        F.expr("(1000000 * ct) div n").alias("emp_ppm"),
-        F.floor(
-            F.lit(1000000.0)
-            * (
-                F.lit(1.0)
-                - F.exp(
-                    -(
-                        F.col("n").cast("double")
-                        * F.expr("((b + 1) * (mx + 1)) div 64 - 1").cast(
-                            "double"
+        tot = g.agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum("gap").cast("long").alias("s"),
+            F.max("gap").cast("long").alias("mx"),
+        )
+        c = g.crossJoin(F.broadcast(tot)).select(
+            F.expr("(gap * 64) div (mx + 1)").alias("b")
+        ).groupBy("b").agg(F.count("*").cast("long").alias("t"))
+        spine = spark.range(64).select(F.col("id").alias("b"))
+        f = spine.join(c, "b", "left").select(
+            "b", F.coalesce("t", F.lit(0)).alias("t")
+        )
+        wc = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
+        cum = f.select("b", F.sum("t").over(wc).alias("ct"))
+        gap2 = cum.crossJoin(F.broadcast(tot)).select(
+            F.expr("(1000000 * ct) div n").alias("emp_ppm"),
+            F.floor(
+                F.lit(1000000.0)
+                * (
+                    F.lit(1.0)
+                    - F.exp(
+                        -(
+                            F.col("n").cast("double")
+                            * F.expr("((b + 1) * (mx + 1)) div 64 - 1").cast(
+                                "double"
+                            )
                         )
+                        / F.col("s").cast("double")
                     )
-                    / F.col("s").cast("double")
                 )
             )
+            .cast("long")
+            .alias("theo_ppm"),
+            "n",
+            "s",
         )
-        .cast("long")
-        .alias("theo_ppm"),
-        "n",
-        "s",
-    )
-    return gap2.agg(
-        F.first("n").alias("n_gaps"),
-        F.expr("CAST(first(s) div first(n) AS BIGINT)").alias("mean_gap_us"),
-        F.max(F.abs(F.col("emp_ppm") - F.col("theo_ppm")))
-        .cast("long")
-        .alias("ks_ppm"),
-    )
+        return m.result(
+            gap2.agg(
+                F.first("n").alias("n_gaps"),
+                F.expr("CAST(first(s) div first(n) AS BIGINT)").alias("mean_gap_us"),
+                F.max(F.abs(F.col("emp_ppm") - F.col("theo_ppm")))
+                .cast("long")
+                .alias("ks_ppm"),
+            )
+        )
 
 
 @query(
@@ -2775,61 +2780,64 @@ def q_kendall_tau_value_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("value").cast("long").alias("y"),
     )
     cells = e.groupBy("x", "y").agg(F.count("*").cast("long").alias("n"))
-    cells = cells.localCheckpoint(eager=True)  # feeds grid + both marginals
-    xs = cells.select("x").distinct()
-    ys = cells.select("y").distinct()
-    grid = (
-        xs.crossJoin(ys)
-        .join(cells, ["x", "y"], "left")
-        .select("x", "y", F.coalesce("n", F.lit(0)).alias("n"))
-    )
-    wux = W.partitionBy("y").orderBy("x").rowsBetween(W.unboundedPreceding, -1)
-    u = grid.withColumn("ux", F.coalesce(F.sum("n").over(wux), F.lit(0)))
-    wlo = W.partitionBy("x").orderBy("y").rowsBetween(W.unboundedPreceding, -1)
-    whi = (
-        W.partitionBy("x")
-        .orderBy(F.desc("y"))
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    lg = u.select(
-        "n",
-        F.coalesce(F.sum("ux").over(wlo), F.lit(0)).alias("low"),
-        F.coalesce(F.sum("ux").over(whi), F.lit(0)).alias("hig"),
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    s = lg.agg(
-        F.sum(d38(F.col("n")) * d38(F.col("low"))).alias("concordant"),
-        F.sum(d38(F.col("n")) * d38(F.col("hig"))).alias("discordant"),
-    )
-    tx = (
-        cells.groupBy("x")
-        .agg(F.sum("n").alias("t"))
-        .agg(
-            F.sum(d38(F.col("t")) * d38(F.col("t") - 1) / F.lit(2))
-            .cast("decimal(38,0)")
-            .alias("tie_x")
+    with materialized() as m:
+        cells = m.cut(cells)  # feeds grid + both marginals
+        xs = cells.select("x").distinct()
+        ys = cells.select("y").distinct()
+        grid = (
+            xs.crossJoin(ys)
+            .join(cells, ["x", "y"], "left")
+            .select("x", "y", F.coalesce("n", F.lit(0)).alias("n"))
         )
-    )
-    ty = (
-        cells.groupBy("y")
-        .agg(F.sum("n").alias("t"))
-        .agg(
-            F.sum(d38(F.col("t")) * d38(F.col("t") - 1) / F.lit(2))
-            .cast("decimal(38,0)")
-            .alias("tie_y")
+        wux = W.partitionBy("y").orderBy("x").rowsBetween(W.unboundedPreceding, -1)
+        u = grid.withColumn("ux", F.coalesce(F.sum("n").over(wux), F.lit(0)))
+        wlo = W.partitionBy("x").orderBy("y").rowsBetween(W.unboundedPreceding, -1)
+        whi = (
+            W.partitionBy("x")
+            .orderBy(F.desc("y"))
+            .rowsBetween(W.unboundedPreceding, -1)
         )
-    )
-    nn = e.agg(F.count("*").cast("long").alias("n_rows"))
-    # close the outputs to BIGINT (see oracle comment: dtype parity; BIGINT
-    # holds the pair counts up to ~4.3e9 input rows)
-    out = nn.crossJoin(s).crossJoin(tx).crossJoin(ty)
-    return out.select(
-        "n_rows",
-        F.col("concordant").cast("long").alias("concordant"),
-        F.col("discordant").cast("long").alias("discordant"),
-        F.col("tie_x").cast("long").alias("tie_x"),
-        F.col("tie_y").cast("long").alias("tie_y"),
-    )
+        lg = u.select(
+            "n",
+            F.coalesce(F.sum("ux").over(wlo), F.lit(0)).alias("low"),
+            F.coalesce(F.sum("ux").over(whi), F.lit(0)).alias("hig"),
+        )
+        d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+        s = lg.agg(
+            F.sum(d38(F.col("n")) * d38(F.col("low"))).alias("concordant"),
+            F.sum(d38(F.col("n")) * d38(F.col("hig"))).alias("discordant"),
+        )
+        tx = (
+            cells.groupBy("x")
+            .agg(F.sum("n").alias("t"))
+            .agg(
+                F.sum(d38(F.col("t")) * d38(F.col("t") - 1) / F.lit(2))
+                .cast("decimal(38,0)")
+                .alias("tie_x")
+            )
+        )
+        ty = (
+            cells.groupBy("y")
+            .agg(F.sum("n").alias("t"))
+            .agg(
+                F.sum(d38(F.col("t")) * d38(F.col("t") - 1) / F.lit(2))
+                .cast("decimal(38,0)")
+                .alias("tie_y")
+            )
+        )
+        nn = e.agg(F.count("*").cast("long").alias("n_rows"))
+        # close the outputs to BIGINT (see oracle comment: dtype parity; BIGINT
+        # holds the pair counts up to ~4.3e9 input rows)
+        out = nn.crossJoin(s).crossJoin(tx).crossJoin(ty)
+        return m.result(
+            out.select(
+                "n_rows",
+                F.col("concordant").cast("long").alias("concordant"),
+                F.col("discordant").cast("long").alias("discordant"),
+                F.col("tie_x").cast("long").alias("tie_x"),
+                F.col("tie_y").cast("long").alias("tie_y"),
+            )
+        )
 
 
 @query(
@@ -2896,30 +2904,33 @@ def q_seasonal_decomposition_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("wsum"),
         F.count("*").over(w).alias("wn"),
     )
-    r = (
-        t.filter(F.col("wn") == 7)
-        .select(
-            "day",
-            "y",
-            F.expr("wsum div 7").cast("long").alias("trend"),
-            (F.col("day") % 7).alias("dow7"),
+    with materialized() as m:
+        r = m.cut(  # feeds the seasonal agg + remainder join
+            t.filter(F.col("wn") == 7)
+            .select(
+                "day",
+                "y",
+                F.expr("wsum div 7").cast("long").alias("trend"),
+                (F.col("day") % 7).alias("dow7"),
+            )
+            .withColumn("resid", F.col("y") - F.col("trend"))
         )
-        .withColumn("resid", F.col("y") - F.col("trend"))
-    ).localCheckpoint(eager=True)  # feeds the seasonal agg + remainder join
-    s = r.groupBy("dow7").agg(
-        F.count("*").cast("long").alias("n_days"),
-        F.expr("(sum(resid) + 1000000 * count(*)) div count(*) - 1000000")
-        .cast("long")
-        .alias("seasonal"),
-    )
-    e = r.join(F.broadcast(s), "dow7").withColumn(
-        "rem", F.col("resid") - F.col("seasonal")
-    )
-    return e.groupBy("dow7", "n_days", "seasonal").agg(
-        F.sum(F.col("rem").cast("decimal(38,0)") * F.col("rem"))
-        .cast("long")
-        .alias("remainder_ss")
-    )
+        s = r.groupBy("dow7").agg(
+            F.count("*").cast("long").alias("n_days"),
+            F.expr("(sum(resid) + 1000000 * count(*)) div count(*) - 1000000")
+            .cast("long")
+            .alias("seasonal"),
+        )
+        e = r.join(F.broadcast(s), "dow7").withColumn(
+            "rem", F.col("resid") - F.col("seasonal")
+        )
+        return m.result(
+            e.groupBy("dow7", "n_days", "seasonal").agg(
+                F.sum(F.col("rem").cast("decimal(38,0)") * F.col("rem"))
+                .cast("long")
+                .alias("remainder_ss")
+            )
+        )
 
 
 @query(
@@ -2951,34 +2962,37 @@ def q_theil_sen_order_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (days²/2 ≈ 2.9M pairs at ~2400 days regardless of corpus rows), so the
     exact median is a percentile_disc over a bounded table."""
     orders = load_table(spark, sf_dir, "orders")
-    d = (
-        orders.select(
-            F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date")).alias(
-                "day"
+    with materialized() as m:
+        d = m.cut(
+            orders.select(
+                F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date")).alias(
+                    "day"
+                )
+            )
+            .groupBy("day")
+            .agg(F.count("*").cast("long").alias("y"))
+        )
+        a, b = d.alias("a"), d.alias("b")
+        p = a.join(b, F.col("b.day") > F.col("a.day")).select(
+            F.expr(
+                "(1000000 * (b.y - a.y)"
+                " - (((1000000 * (b.y - a.y)) % (b.day - a.day))"
+                "    + (b.day - a.day)) % (b.day - a.day))"
+                " div (b.day - a.day)"
+            )
+            .cast("long")
+            .alias("slope_x1e6")
+        )
+        return m.result(
+            p.agg(
+                F.count("*").cast("long").alias("n_pairs"),
+                F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY slope_x1e6)")
+                .cast("long")
+                .alias("ts_slope_x1e6"),
+                F.min("slope_x1e6").cast("long").alias("min_slope_x1e6"),
+                F.max("slope_x1e6").cast("long").alias("max_slope_x1e6"),
             )
         )
-        .groupBy("day")
-        .agg(F.count("*").cast("long").alias("y"))
-    ).localCheckpoint(eager=True)
-    a, b = d.alias("a"), d.alias("b")
-    p = a.join(b, F.col("b.day") > F.col("a.day")).select(
-        F.expr(
-            "(1000000 * (b.y - a.y)"
-            " - (((1000000 * (b.y - a.y)) % (b.day - a.day))"
-            "    + (b.day - a.day)) % (b.day - a.day))"
-            " div (b.day - a.day)"
-        )
-        .cast("long")
-        .alias("slope_x1e6")
-    )
-    return p.agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY slope_x1e6)")
-        .cast("long")
-        .alias("ts_slope_x1e6"),
-        F.min("slope_x1e6").cast("long").alias("min_slope_x1e6"),
-        F.max("slope_x1e6").cast("long").alias("max_slope_x1e6"),
-    )
 
 
 @query(
@@ -3014,36 +3028,35 @@ def q_chisq_independence_source_lang(
     floored at 1e6 (expected counts never materialize as floats). Domain
     is sources × langs — bounded at any corpus size."""
     docs = load_table(spark, sf_dir, "documents")
-    c = docs.groupBy("source", "lang").agg(
-        F.count("*").cast("long").alias("n")
-    ).localCheckpoint(eager=True)
-    r = c.groupBy("source").agg(F.sum("n").cast("long").alias("nr"))
-    l = c.groupBy("lang").agg(F.sum("n").cast("long").alias("nl"))
-    t = c.agg(F.sum("n").cast("long").alias("nt"))
-    grid = (
-        r.crossJoin(l)
-        .join(c, ["source", "lang"], "left")
-        .select("source", "lang", "nr", "nl", F.coalesce("n", F.lit(0)).alias("n"))
-        .crossJoin(F.broadcast(t))
-    )
-    term = (
-        "((CAST(n AS DECIMAL(38,0)) * nt - CAST(nr AS DECIMAL(38,0)) * nl)"
-        " * (CAST(n AS DECIMAL(38,0)) * nt - CAST(nr AS DECIMAL(38,0)) * nl)"
-        " * 1000000) div (CAST(nr AS DECIMAL(38,0)) * nl * nt)"
-    )
-    q = grid.agg(
-        F.sum(F.expr(term)).cast("decimal(38,0)").alias("chi_num"),
-        F.count("*").cast("long").alias("n_cells"),
-    )
-    nr = r.agg(F.count("*").cast("long").alias("n_sources"))
-    nl = l.agg(F.count("*").cast("long").alias("n_langs"))
-    return (
-        q.select(
-            F.col("chi_num").cast("long").alias("chi2_x1e6"), "n_cells"
+    with materialized() as m:
+        c = m.cut(
+            docs.groupBy("source", "lang").agg(F.count("*").cast("long").alias("n"))
         )
-        .crossJoin(F.broadcast(nr))
-        .crossJoin(F.broadcast(nl))
-    )
+        r = c.groupBy("source").agg(F.sum("n").cast("long").alias("nr"))
+        l = c.groupBy("lang").agg(F.sum("n").cast("long").alias("nl"))
+        t = c.agg(F.sum("n").cast("long").alias("nt"))
+        grid = (
+            r.crossJoin(l)
+            .join(c, ["source", "lang"], "left")
+            .select("source", "lang", "nr", "nl", F.coalesce("n", F.lit(0)).alias("n"))
+            .crossJoin(F.broadcast(t))
+        )
+        term = (
+            "((CAST(n AS DECIMAL(38,0)) * nt - CAST(nr AS DECIMAL(38,0)) * nl)"
+            " * (CAST(n AS DECIMAL(38,0)) * nt - CAST(nr AS DECIMAL(38,0)) * nl)"
+            " * 1000000) div (CAST(nr AS DECIMAL(38,0)) * nl * nt)"
+        )
+        q = grid.agg(
+            F.sum(F.expr(term)).cast("decimal(38,0)").alias("chi_num"),
+            F.count("*").cast("long").alias("n_cells"),
+        )
+        nr = r.agg(F.count("*").cast("long").alias("n_sources"))
+        nl = l.agg(F.count("*").cast("long").alias("n_langs"))
+        return m.result(
+            q.select(F.col("chi_num").cast("long").alias("chi2_x1e6"), "n_cells")
+            .crossJoin(F.broadcast(nr))
+            .crossJoin(F.broadcast(nl))
+        )
 
 
 @query(
@@ -3161,68 +3174,69 @@ def q_approx_quantile_accuracy_eval(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("x")
     )
     c = li.groupBy("x").agg(F.count("*").cast("long").alias("t"))
-    c = global_cumsum(c, [F.col("x")], "t", "cum", before=True).localCheckpoint(
-        eager=True
-    )  # census feeds the exact leg AND both rank counts
-    tot = c.agg(F.sum("t").cast("long").alias("n"))
-    qs = spark.createDataFrame(
-        [(250000,), (500000,), (750000,), (990000,)], "q_ppm long"
-    )
-    ks = qs.crossJoin(F.broadcast(tot)).select(
-        "q_ppm",
-        "n",
-        F.expr("CAST((q_ppm * n + 999999) div 1000000 AS BIGINT)").alias("k"),
-    )
-    exact = (
-        c.join(
-            F.broadcast(ks),
-            (F.col("cum") < F.col("k"))
-            & (F.col("cum") + F.col("t") >= F.col("k")),
+    with materialized() as m:
+        # census feeds the exact leg AND both rank counts
+        c = m.cut(global_cumsum(c, [F.col("x")], "t", "cum", before=True, scope=m))
+        tot = c.agg(F.sum("t").cast("long").alias("n"))
+        qs = spark.createDataFrame(
+            [(250000,), (500000,), (750000,), (990000,)], "q_ppm long"
         )
-        .groupBy("q_ppm")
-        .agg(F.min("x").cast("long").alias("exact_q_cents"))
-    )
-    ap = (
-        li.agg(
-            F.percentile_approx(
-                "x", [0.25, 0.5, 0.75, 0.99], 1000
-            ).alias("arr")
+        ks = qs.crossJoin(F.broadcast(tot)).select(
+            "q_ppm",
+            "n",
+            F.expr("CAST((q_ppm * n + 999999) div 1000000 AS BIGINT)").alias("k"),
         )
-        .select(F.posexplode("arr").alias("i", "a"))
-        .select(
-            F.element_at(
-                F.array(
-                    F.lit(250000), F.lit(500000), F.lit(750000), F.lit(990000)
-                ),
-                F.col("i") + 1,
+        exact = (
+            c.join(
+                F.broadcast(ks),
+                (F.col("cum") < F.col("k"))
+                & (F.col("cum") + F.col("t") >= F.col("k")),
             )
-            .cast("long")
-            .alias("q_ppm"),
-            "a",
+            .groupBy("q_ppm")
+            .agg(F.min("x").cast("long").alias("exact_q_cents"))
         )
-    )
-    ranks = (
-        c.crossJoin(F.broadcast(ap))
-        .groupBy("q_ppm", "a")
-        .agg(
-            F.sum(F.when(F.col("x") < F.col("a"), F.col("t")).otherwise(0))
-            .cast("long")
-            .alias("lt"),
-            F.sum(F.when(F.col("x") <= F.col("a"), F.col("t")).otherwise(0))
-            .cast("long")
-            .alias("le"),
+        ap = (
+            li.agg(
+                F.percentile_approx(
+                    "x", [0.25, 0.5, 0.75, 0.99], 1000
+                ).alias("arr")
+            )
+            .select(F.posexplode("arr").alias("i", "a"))
+            .select(
+                F.element_at(
+                    F.array(
+                        F.lit(250000), F.lit(500000), F.lit(750000), F.lit(990000)
+                    ),
+                    F.col("i") + 1,
+                )
+                .cast("long")
+                .alias("q_ppm"),
+                "a",
+            )
         )
-    )
-    within = ranks.crossJoin(F.broadcast(tot)).select(
-        "q_ppm",
-        (
-            ((F.col("lt") + 1) * 1000000 <= (F.col("q_ppm") + 1000) * F.col("n"))
-            & (F.col("le") * 1000000 >= (F.col("q_ppm") - 1000) * F.col("n"))
-        ).alias("within_bound"),
-    )
-    return exact.join(within, "q_ppm").select(
-        "q_ppm", "exact_q_cents", "within_bound"
-    )
+        ranks = (
+            c.crossJoin(F.broadcast(ap))
+            .groupBy("q_ppm", "a")
+            .agg(
+                F.sum(F.when(F.col("x") < F.col("a"), F.col("t")).otherwise(0))
+                .cast("long")
+                .alias("lt"),
+                F.sum(F.when(F.col("x") <= F.col("a"), F.col("t")).otherwise(0))
+                .cast("long")
+                .alias("le"),
+            )
+        )
+        within = ranks.crossJoin(F.broadcast(tot)).select(
+            "q_ppm",
+            (
+                ((F.col("lt") + 1) * 1000000 <= (F.col("q_ppm") + 1000) * F.col("n"))
+                & (F.col("le") * 1000000 >= (F.col("q_ppm") - 1000) * F.col("n"))
+            ).alias("within_bound"),
+        )
+        return m.result(
+            exact.join(within, "q_ppm").select("q_ppm", "exact_q_cents", "within_bound")
+        )
+
 
 _ZM_FILES = 64
 # both dimensions are scaled to a common 2^10 grid BEFORE interleaving —
@@ -3346,9 +3360,9 @@ def q_zonemap_pruning_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     matching = {name: match_row[name] for name in preds}
 
-    def census(order_cols, layout: str) -> DataFrame:
-        zones = (
-            global_row_number(li, order_cols, "_r")
+    def census(m, order_cols, layout: str) -> DataFrame:
+        zones = m.cut(  # 64 rows feed both predicates
+            global_row_number(li, order_cols, "_r", scope=m)
             .withColumn(
                 "f", F.expr(f"CAST((_r - 1) div {rows_per_file} AS BIGINT)")
             )
@@ -3360,7 +3374,6 @@ def q_zonemap_pruning_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("l_suppkey").alias("smax"),
                 F.count("*").alias("nrows"),
             )
-            .localCheckpoint(eager=True)  # 64 rows feed both predicates
         )
         outs = []
         for name, (plo, phi, slo, shi) in preds.items():
@@ -3390,17 +3403,21 @@ def q_zonemap_pruning_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return outs[0].unionByName(outs[1])
 
-    a = census(
-        [F.col("l_partkey"), F.col("l_orderkey"), F.col("l_linenumber")],
-        "partkey_sort",
-    )
-    b = census(
-        [F.col("zval"), F.col("l_orderkey"), F.col("l_linenumber")], "zorder"
-    )
-    return a.unionByName(b).withColumn(
-        "scan_amplification_ppm",
-        F.expr("CAST((1000000 * rows_scanned) div rows_matching AS BIGINT)"),
-    )
+    with materialized() as m:
+        a = census(
+            m,
+            [F.col("l_partkey"), F.col("l_orderkey"), F.col("l_linenumber")],
+            "partkey_sort",
+        )
+        b = census(
+            m, [F.col("zval"), F.col("l_orderkey"), F.col("l_linenumber")], "zorder"
+        )
+        return m.result(
+            a.unionByName(b).withColumn(
+                "scan_amplification_ppm",
+                F.expr("CAST((1000000 * rows_scanned) div rows_matching AS BIGINT)"),
+            )
+        )
 
 
 @query(
