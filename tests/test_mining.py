@@ -14,6 +14,7 @@ from videos_to_tfrecords_spark.plans.mining_queries import (
     q_markov_transitions,
     q_scd2_history,
 )
+from videos_to_tfrecords_spark.session import session_conf
 
 
 def test_hard_negatives_labels_always_differ(spark):
@@ -106,10 +107,7 @@ def test_bloom_filter_runtime_join_pruning(spark, sf_dir):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",  # broadcast joins skip bloom
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with session_conf(spark, confs):
         li = load_table(spark, sf_dir, "lineitem")
         orders = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -119,12 +117,6 @@ def test_bloom_filter_runtime_join_pruning(spark, sf_dir):
         ).agg(F.count("*").alias("n"))
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan or "BloomFilter" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_hard_negatives_query_matches_operator(spark, sf_dir):

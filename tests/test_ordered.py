@@ -16,6 +16,7 @@ from videos_to_tfrecords_spark.operators.ordered import (
     global_rank_cumsum,
     global_row_number,
 )
+from videos_to_tfrecords_spark.session import session_conf
 
 
 def _frame(spark, n=997):
@@ -122,11 +123,9 @@ def test_partition_count_invariance(spark):
     # the global rank must not depend on spark.sql.shuffle.partitions
     df = _frame(spark, 211)
     order = [F.asc("v"), F.desc("k")]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     results = []
-    try:
-        for parts in ("1", "3", "16"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
+    for parts in ("1", "3", "16"):
+        with session_conf(spark, {"spark.sql.shuffle.partitions": parts}):
             results.append(
                 tuple(
                     sorted(
@@ -135,8 +134,6 @@ def test_partition_count_invariance(spark):
                     )
                 )
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert results[0] == results[1] == results[2]
 
 

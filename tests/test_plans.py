@@ -12,6 +12,7 @@ from videos_to_tfrecords_spark.plans import (  # noqa: F401
     advanced_queries,
     graph_queries,
     mining_queries,
+    pipeline_queries,
 )
 from videos_to_tfrecords_spark.plans.registry import MODULES, QUERIES
 from videos_to_tfrecords_spark.sources.tables import load_table
@@ -23,6 +24,11 @@ GRAPH_QUERIES = [n for n, mod in MODULES.items() if mod == graph_queries.__name_
 ]
 #: every query of plans/advanced_queries.py
 ADVANCED_QUERIES = [n for n, mod in MODULES.items() if mod == advanced_queries.__name__]
+#: every query that runs a Structured Streaming query
+STREAM_QUERIES = [n for n in QUERIES if n.startswith("streaming_")] + [
+    "python_stream_source_census",
+    "statestore_reader_audit",
+]
 
 
 def plan_of(df) -> str:
@@ -354,6 +360,20 @@ def test_advanced_queries_release_what_they_made(spark, sf_dir, name):
     checkpoints are released, and at most the returned frame's own
     checkpoint is left."""
     assert _new_persistent_rdds(spark, sf_dir, name) <= 1
+
+
+@pytest.mark.parametrize("name", STREAM_QUERIES)
+def test_stream_queries_release_what_they_made(spark, sf_dir, name):
+    """A stream query stops its stream and drops its memory sink's temp
+    view, whose rows would otherwise stay on the driver for the rest of
+    the session; at most the returned frame's own checkpoint is left."""
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    views = temp_views()
+    assert _new_persistent_rdds(spark, sf_dir, name) <= 1
+    assert temp_views() - views == set()
+    assert spark.streams.active == []
 
 
 def test_packed_spans_prefix_sum_window_is_partitioned(spark, sf_dir):

@@ -9,6 +9,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from videos_to_tfrecords_spark.operators.split import hash_bucket_split
+from videos_to_tfrecords_spark.session import session_conf
 from videos_to_tfrecords_spark.sources.tables import load_table
 from tests.test_plans import plan_of
 
@@ -50,9 +51,7 @@ def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
         li, "lineitem_b", str(tmp_path / "lineitem_b"), "l_orderkey", n_buckets=4
     )
     # small tables would broadcast; force the sort-merge path the demo is about
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         j = (
             spark.table("orders_b")
             .join(
@@ -67,8 +66,6 @@ def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
         # bucketed scans feed the join directly: the ONLY shuffle is the
         # final groupBy on o_orderpriority
         assert plan.count("Exchange hashpartitioning") == 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     got = {r.o_orderpriority: r.n for r in j.collect()}
     want = {
         r.o_orderpriority: r.n
@@ -195,10 +192,7 @@ def test_aqe_splits_skewed_join_partition(spark):
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with session_conf(spark, confs):
         left = spark.range(220_000).select(
             F.when(F.col("id") < 200_000, F.lit(0))
             .otherwise((F.col("id") % 100) + 1)
@@ -224,12 +218,6 @@ def test_aqe_splits_skewed_join_partition(spark):
         assert row.k_sum == sum(k * 200 * 2 for k in range(1, 101))
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, plan[:2000]
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_join_strategy_hints_control_physical_join(spark):
@@ -246,9 +234,7 @@ def test_join_strategy_hints_control_physical_join(spark):
     right = spark.range(997).select(
         F.col("id").alias("k"), (F.col("id") * 7).alias("w")
     )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         expect = 50_000
         plans = {}
         for hint, node in (
@@ -266,8 +252,6 @@ def test_join_strategy_hints_control_physical_join(spark):
             plans[hint] = plan
         # the SHJ plan must not sort its inputs (that's its advantage)
         assert "Sort " not in plans["shuffle_hash"].split("ShuffledHashJoin")[1].split("HashAggregate")[0]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_dynamic_partition_pruning_fires_on_fact_scan(spark, sf_dir, tmp_path):
@@ -318,10 +302,7 @@ def test_runtime_bloom_filter_injected_on_selective_join(spark, tmp_path):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with session_conf(spark, confs):
         fact_p = str(tmp_path / "fact")
         dim_p = str(tmp_path / "dim")
         spark.range(500_000).selectExpr("id % 10000 AS k", "id AS v").write.parquet(fact_p)
@@ -337,12 +318,6 @@ def test_runtime_bloom_filter_injected_on_selective_join(spark, tmp_path):
         assert row.n == 50 * len(keys)
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan and "bloom_filter_agg" in plan, plan[:1500]
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_aqe_coalesces_small_shuffle_partitions(spark):
@@ -358,10 +333,7 @@ def test_aqe_coalesces_small_shuffle_partitions(spark):
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64MB",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with session_conf(spark, confs):
         df = (
             spark.range(10_000)
             .select((F.col("id") % 100).alias("k"), F.col("id").alias("v"))
@@ -373,12 +345,6 @@ def test_aqe_coalesces_small_shuffle_partitions(spark):
         assert rows[0] == sum(range(0, 10_000, 100))
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "AQEShuffleRead coalesced" in plan, plan[:1500]
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
@@ -393,15 +359,11 @@ def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
     spark.range(300).select(
         (F.col("id") % 10).alias("d"), F.col("id").alias("v")
     ).write.partitionBy("d").parquet(path)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with session_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         fix = spark.range(3).select(
             F.lit(5).alias("d"), (F.col("id") + 10_000).alias("v")
         )
         fix.write.mode("overwrite").partitionBy("d").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(path)
     per_day = {r.d: r.n for r in back.groupBy("d").agg(F.count("*").alias("n")).collect()}
     assert per_day[5] == 3                      # replaced

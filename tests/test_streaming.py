@@ -177,6 +177,7 @@ def test_streaming_sessionize_on_rocksdb_state_store(spark, tmp_path):
     import glob as _glob
     import os as _os
 
+    from videos_to_tfrecords_spark.session import session_conf
     from videos_to_tfrecords_spark.streaming.pipeline import (
         streaming_sessionize_stateful,
     )
@@ -202,13 +203,11 @@ def test_streaming_sessionize_on_rocksdb_state_store(spark, tmp_path):
     sentinel.write.mode("append").parquet(src)
 
     chk = str(tmp_path / "rocks_chk")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    }
+    with session_conf(spark, rocksdb):
         got = sorted(
             (r.user_id, r.start_us, r.end_us, r.n_events)
             for r in streaming_sessionize_stateful(
@@ -216,11 +215,6 @@ def test_streaming_sessionize_on_rocksdb_state_store(spark, tmp_path):
             ).collect()
             if r.user_id != 99_999
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
     # sessions: user 1 → (0,10m) and (2h,2h+5m); user 2 → (5m..55m)
     m = 60_000_000
@@ -784,9 +778,9 @@ def test_statestore_reader_matches_batch_agg(spark, sf_dir):
     # state-metadata source must describe the aggregation operator
     import os
 
+    from videos_to_tfrecords_spark.session import scratch_dir
     from videos_to_tfrecords_spark.sources.tables import load_table
     from videos_to_tfrecords_spark.streaming.pipeline import (
-        _statestore_base,
         statestore_reader_audit,
     )
 
@@ -805,7 +799,7 @@ def test_statestore_reader_matches_batch_agg(spark, sf_dir):
         .collect()
     }
     assert got == want and len(got) > 0
-    ckpt = os.path.join(_statestore_base(sf_dir), "ck")
+    ckpt = os.path.join(scratch_dir("stst", sf_dir), "ck")
     md = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(md) == 1
     assert md[0].operatorName == "stateStoreSave"

@@ -1,15 +1,17 @@
 """Prune stale spark-warehouse artifact dirs (VERDICT r08 #6).
 
 Write-path queries key their artifacts as ``{prefix}_{md5(sf_dir)[:8]}``
-(e.g. ``csv_ddbe1476``, ``orders_bkt_1a675cfc``) and regenerate them on
-every run (rmtree / DROP TABLE first), so the warehouse is a pure cache —
+(``session.scratch_dir``; e.g. ``csv_ddbe1476``, ``orders_bkt_1a675cfc``)
+and regenerate them on every run (rmtree / DROP TABLE first), so the
+warehouse is a pure cache —
 but nothing deleted dirs whose prefix left the code (a renamed query) or
 whose sf_dir no longer exists. This sweep derives the LIVE set from the
 repo itself:
 
-  * prefixes: grep the package source for the two construction patterns —
-    ``"{prefix}_" + <hashlib>.md5(sf_dir...)`` and the bucketed-table
-    ``f"{tbl}_bkt_{sfx}"`` loop (tbl in the adjacent tuple literal);
+  * prefixes: grep the package source for the two ``scratch_dir`` call
+    shapes — ``scratch_dir("{prefix}", ...)`` and the bucketed-table
+    ``scratch_dir(f"{tbl}_bkt", ...)`` loop (tbl in the adjacent tuple
+    literal);
   * keys: md5 of sf dirs that exist on disk (testdata sf* plus the
     synthetic ``.scale_probe/*``).
 
@@ -36,15 +38,15 @@ WAREHOUSE = os.path.join(REPO, "spark-warehouse")
 
 
 def live_prefixes() -> set[str]:
-    pat_md5 = re.compile(r"\"([a-z0-9_]+)_\"\s*\+\s*(?:_hl|hashlib)\.md5")
+    pat_scratch = re.compile(r"scratch_dir\(\s*\"([a-z0-9_]+)\"")
     pat_bkt_tbl = re.compile(r"\(\"([a-z]+)\",\s*\"[a-z_]+key\"\)")
     prefixes: set[str] = set()
     bkt_tables: set[str] = set()
     uses_bkt = False
     for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
         src = open(path, encoding="utf-8").read()
-        prefixes.update(pat_md5.findall(src))
-        if '_bkt_{sfx}' in src:
+        prefixes.update(pat_scratch.findall(src))
+        if 'scratch_dir(f"{tbl}_bkt"' in src:
             uses_bkt = True
             bkt_tables.update(pat_bkt_tbl.findall(src))
     if uses_bkt:

@@ -11,13 +11,13 @@ across three rounds); every top-k is fully tie-broken.
 
 from __future__ import annotations
 
-import hashlib as _hl
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from videos_to_tfrecords_spark.plans.registry import query
+from videos_to_tfrecords_spark.session import scratch_dir
 from videos_to_tfrecords_spark.sources.tables import load_table
 
 # pair-explosion of a sorted in-task array: C(n,2) structs (a < b by
@@ -1069,18 +1069,14 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     protos = with_sequence_example(
         docs, context_cols=["doc_id", "n_chars", "lang"], list_cols=[]
     )
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        "tfrec_" + _hl.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    path = scratch_dir("tfrec", sf_dir)
     # clean first: a stale run with a different shard count would leave
     # extra .tfrecord files in the glob and double-count on read-back
     import shutil
 
     shutil.rmtree(path, ignore_errors=True)
     write_tfrecords(protos, "proto", path, "docs")
-    back = read_tfrecords_df(spark, os.path.join(path, "data", "docs", "*"))
+    back = read_tfrecords_df(spark, os.path.join(path, "data", "docs"))
 
     def parse(batches):
         import pandas as pd

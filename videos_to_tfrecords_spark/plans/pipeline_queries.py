@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from videos_to_tfrecords_spark import cli
+from videos_to_tfrecords_spark.materialize import materialized
 from videos_to_tfrecords_spark.ml.inference import (
     batch_inference,
     int_hash_linear_model,
@@ -39,9 +40,13 @@ from videos_to_tfrecords_spark.schema import (
     LIST_COLUMNS,
     FeatureKind,
 )
+from videos_to_tfrecords_spark.session import scratch_dir, session_conf
 from videos_to_tfrecords_spark.sources.tables import load_table
 from videos_to_tfrecords_spark.sources.tfrecord import with_sequence_example
-from videos_to_tfrecords_spark.streaming.pipeline import streaming_tumbling_counts
+from videos_to_tfrecords_spark.streaming.pipeline import (
+    drain,
+    streaming_tumbling_counts,
+)
 
 
 @query(
@@ -808,21 +813,12 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     never pay it twice), aggregated. The oracle computes the same result
     from the parquet directly, so the JSON round-trip itself is what is
     being hash-checked. Deterministic overwrite path keeps re-runs pure."""
-    import hashlib as _hl
-    import os
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    # stay inside the repo (gitignored warehouse dir), keyed by SF so
-    # concurrent SF runs never collide
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        "jsonl_" + _hl.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    path = scratch_dir("jsonl", sf_dir)
     ev.write.mode("overwrite").json(path)
     from pyspark.sql import types as T
 
@@ -853,9 +849,6 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as headered CSV (integer cents — exact through text), read
     back with an EXPLICIT schema, aggregated; the oracle reads the parquet
     directly so the CSV round-trip itself is hash-checked."""
-    import hashlib as _hl
-    import os
-
     from pyspark.sql import types as T
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -863,11 +856,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        "csv_" + _hl.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    path = scratch_dir("csv", sf_dir)
     ev.write.mode("overwrite").option("header", "true").csv(path)
     schema = T.StructType(
         [
@@ -931,7 +920,6 @@ def q_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     as NULL. The census counts/sums the evolved column only where it
     exists, so the merge semantics themselves are hash-checked (oracle
     reconstructs the same split from the event ids)."""
-    import hashlib as _hl
     import os
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -940,11 +928,7 @@ def q_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("cents"),
         F.length("props").cast("long").alias("props_len"),
     )
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        "evo_" + _hl.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    base = scratch_dir("evo", sf_dir)
     v1 = ev.filter(F.col("event_id") % 2 == 0).drop("props_len")
     v2 = ev.filter(F.col("event_id") % 2 != 0)
     v1.write.mode("overwrite").parquet(os.path.join(base, "batch=1"))
@@ -1730,12 +1714,12 @@ def q_tfrecord_sink_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle over the pre-encode rows. Split routing is the deterministic
     hash-bucket split (operators/split.py), so the oracle reconstructs
     the exact same Train/Val/Test assignment."""
-    import hashlib as _hl
     import os
     import shutil
 
     from videos_to_tfrecords_spark.sources.tfrecord import (
         read_tfrecords_df,
+        tfrecord_files,
         write_split_tfrecords,
     )
 
@@ -1755,24 +1739,17 @@ def q_tfrecord_sink_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition(4)
     )
-    base = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        "spark-warehouse",
-        "tfsink_" + _hl.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    base = scratch_dir("tfsink", sf_dir)
     shutil.rmtree(base, ignore_errors=True)  # stale shards from prior layouts
     write_split_tfrecords(payload, "rec", "dataset", base)
-    glob = os.path.join(base, "data", "*", "*.tfrecord")
+    data = os.path.join(base, "data")
     shards = (
-        spark.read.format("binaryFile")
-        .load(glob)
+        tfrecord_files(spark, data)
         .select(F.element_at(F.split("path", "/"), -2).alias("split"))
         .groupBy("split")
         .agg(F.count("*").cast("long").alias("n_shards"))
     )
-    dec = read_tfrecords_df(spark, glob).select(
+    dec = read_tfrecords_df(spark, data).select(
         F.element_at(F.split("path", "/"), -2).alias("split"),
         F.octet_length("record").cast("long").alias("blen"),
         F.split(F.decode(F.col("record"), "UTF-8"), "\t")
@@ -1974,19 +1951,12 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back with a type-pushdown filter census — ORC's predicate pushdown +
     column pruning ride the same Catalyst path as parquet, verified by
     the oracle reading the original parquet directly."""
-    import hashlib as _hl
-    import os
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        "orc_" + _hl.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    path = scratch_dir("orc", sf_dir)
     ev.write.mode("overwrite").option("compression", "zstd").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("event_type").agg(
@@ -2012,9 +1982,6 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, read back with an explicit schema + rowTag, aggregated; integer
     cents survive text exactly, and the oracle reads the original parquet
     so the XML round-trip itself is hash-checked."""
-    import hashlib as _hl
-    import os
-
     from pyspark.sql import types as T
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2022,11 +1989,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        "xml_" + _hl.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    path = scratch_dir("xml", sf_dir)
     (
         ev.write.mode("overwrite")
         .format("xml")
@@ -2074,7 +2037,6 @@ def q_python_stream_source_census(
     (no drop, no double-read across microbatches) is pinned by value;
     see sources/pystream.py for the API-scale notes."""
     import os
-    import uuid
 
     from videos_to_tfrecords_spark.sources.pystream import (
         EventsReplaySource,
@@ -2082,8 +2044,6 @@ def q_python_stream_source_census(
 
     spark.dataSource.register(EventsReplaySource)
     path = os.path.join(sf_dir, "events.parquet")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     src = (
         spark.readStream.format("events_replay")
         .option("path", path)
@@ -2095,19 +2055,7 @@ def q_python_stream_source_census(
             F.sum("event_id").cast("long").alias("id_sum"),
         )
     )
-    name = f"pystream_{uuid.uuid4().hex[:8]}"
-    q = (
-        src.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(src, "complete")
 
 
 @query(
@@ -2132,29 +2080,19 @@ def q_bucketed_join_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     at real scale neither side fits a broadcast anyway). The census
     hash-checks the VALUES through the bucketed storage path against the
     raw-parquet oracle."""
-    import hashlib as _hl
     import os
 
     from videos_to_tfrecords_spark.sources.layout import write_bucketed
 
-    sfx = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
     names = {}
     for tbl, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
-        tname = f"{tbl}_bkt_{sfx}"
+        path = scratch_dir(f"{tbl}_bkt", sf_dir)
+        tname = os.path.basename(path)
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        write_bucketed(
-            load_table(spark, sf_dir, tbl),
-            tname,
-            os.path.join(repo, "spark-warehouse", tname),
-            key,
-        )
+        write_bucketed(load_table(spark, sf_dir, tbl), tname, path, key)
         names[tbl] = tname
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    no_broadcast = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+    with session_conf(spark, no_broadcast), materialized() as m:
         o = spark.table(names["orders"])
         c = spark.table(names["customer"])
         out = (
@@ -2171,9 +2109,7 @@ def q_bucketed_join_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize UNDER the no-broadcast conf: the returned frame reads
         # the checkpoint, so the driver's later collect replays the bucketed
         # SMJ result, not a re-planned broadcast join
-        return out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        return m.result(out)
 
 
 @query(
@@ -2200,8 +2136,6 @@ def q_dpp_join_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact scan's PartitionFilters at runtime and the other ~25 day
     directories are never read (plan-asserted in
     tests/test_storage_layout.py). Census per kept day, hash-checked."""
-    import hashlib as _hl
-    import os
     import shutil
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2209,12 +2143,7 @@ def q_dpp_join_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("cents"),
         F.expr("unix_micros(ts) div 86400000000").alias("d"),
     )
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    path = os.path.join(
-        repo, "spark-warehouse", "dpp_" + _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    )
+    path = scratch_dir("dpp", sf_dir)
     # rewrite every run: a stale layout from an older testdata generation
     # would silently diverge from the oracle (same md5 key across rounds)
     shutil.rmtree(path, ignore_errors=True)

@@ -29,7 +29,10 @@ workers' ``PYTHONPATH`` so the daemon imports from any working directory.
 
 from __future__ import annotations
 
+import hashlib
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -48,6 +51,34 @@ MAX_DRIVER_HEAP_GIB = 24
 CODEGEN_CACHE_ENTRIES = 8192
 #: the directory that holds this package, put on the Python workers' path
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def scratch_dir(prefix: str, sf_dir: str) -> str:
+    """The directory a query writes its own files to and reads back:
+    ``<checkout>/spark-warehouse/<prefix>_<md5(sf_dir)[:8]>``, one per query
+    and scale factor, so runs at two scale factors never collide.
+    ``tools/prune_warehouse.py`` finds the live prefixes from the
+    ``scratch_dir("<prefix>", ...)`` calls."""
+    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    return os.path.join(_PACKAGE_PARENT, "spark-warehouse", f"{prefix}_{key}")
+
+
+@contextmanager
+def session_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set session conf keys for the block. On exit, normally or by an
+    exception, each key gets its old value back; a key that was unset
+    before is unset again."""
+    old = {key: spark.conf.get(key, None) for key in conf}
+    try:
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def _meminfo_gib(key: str) -> float | None:

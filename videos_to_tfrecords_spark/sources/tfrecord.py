@@ -379,14 +379,24 @@ def write_split_tfrecords(
     return totals
 
 
-def read_tfrecords_df(spark, path_glob: str):
-    """Distributed TFRecord source: binaryFile scan (distributed listing +
-    whole-file content) → per-file record parsing in an Arrow flat map,
-    both CRCs of every record verified (``ValueError`` with path and byte
-    offset on a bad CRC or a truncated file). One task per file; at 100 TB
-    pair with sharded files so tasks are balanced. Returns (path, record
-    binary) rows."""
-    files = spark.read.format("binaryFile").load(path_glob)
+def tfrecord_files(spark, path: str):
+    """binaryFile scan (distributed listing, whole-file ``content`` read
+    only when selected) of ``path``: a file, a glob, or a directory with
+    every file below it, e.g. a sink's ``data`` directory with one
+    subdirectory per split. Prefer the directory to a glob: Spark looks
+    for a streaming sink's metadata log under a single load path and,
+    given a glob, logs a warning with a stack trace when that lookup
+    fails."""
+    return spark.read.format("binaryFile").option("recursiveFileLookup", "true").load(path)
+
+
+def read_tfrecords_df(spark, path: str):
+    """Distributed TFRecord source: :func:`tfrecord_files` → per-file
+    record parsing in an Arrow flat map, both CRCs of every record
+    verified (``ValueError`` with path and byte offset on a bad CRC or a
+    truncated file). One task per file; at 100 TB pair with sharded files
+    so tasks are balanced. Returns (path, record binary) rows."""
+    files = tfrecord_files(spark, path)
 
     def parse(batches):
         for batch in batches:

@@ -12,15 +12,34 @@ Scale posture: watermark + append mode is the production shape (bounded
 state); ``complete`` output mode is used for the bounded-input demo because
 append only emits windows the watermark has passed — on a bounded file
 source the tail windows would never flush.
+
+Drain rule: every stream query runs through :func:`drain`. It pins the
+state partitions (``STATE_PARTITIONS``) for the query's life and restores
+the session's conf afterwards, stops the query however the drain ends, and
+drops a memory sink's temp view before it returns, so a long-lived session
+keeps neither a stream nor a view per query it ran.
 """
 
 from __future__ import annotations
 
-import uuid
+import itertools
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from videos_to_tfrecords_spark.materialize import materialized
+from videos_to_tfrecords_spark.session import scratch_dir, session_conf
+
+#: state-store partitions of every stream query. Spark takes a stream's
+#: state partitioning from ``spark.sql.shuffle.partitions`` when the query
+#: starts and keeps it for the query's life; a driver session's default of
+#: 200 would mean 200 state stores for each of these bounded drains.
+STATE_PARTITIONS = 8
+#: numbers the memory sinks' query names, unique within the process
+_sink_ids = itertools.count()
 
 RAW_EVENTS_SCHEMA = T.StructType(
     [
@@ -34,45 +53,77 @@ RAW_EVENTS_SCHEMA = T.StructType(
 )
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet, normalized identically to the
-    batch loader (timestamps are µs instants; the declared TimestampType
-    schema reinterprets the file's naive µs values under the UTC session
-    zone, matching ``load_table``)."""
-    return (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")  # file source wants a dir
-        .parquet(sf_dir)
+def events_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    glob: str = "events.parquet",
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """readStream over the events parquet files in ``sf_dir`` that match
+    ``glob``, normalized identically to the batch loader (timestamps are µs
+    instants; the declared TimestampType schema reinterprets the file's
+    naive µs values under the UTC session zone, matching ``load_table``).
+    ``max_files_per_trigger`` splits the files over that many per
+    microbatch."""
+    reader = spark.readStream.schema(RAW_EVENTS_SCHEMA).option(
+        "pathGlobFilter", glob  # the file source wants a directory
     )
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(sf_dir)
+
+
+def drain(
+    df: DataFrame,
+    mode: str,
+    *,
+    sink=None,
+    checkpoint: str | None = None,
+) -> DataFrame | None:
+    """Run the stream ``df`` in output ``mode`` until it has processed all
+    its available input, then stop it.
+
+    ``sink`` None writes to a memory sink and returns its rows as a frame;
+    the sink's temp view is dropped before return (the frame, bound first,
+    still reads the rows). A callable is a ``foreachBatch`` function and a
+    string a sink format (e.g. ``"noop"``); drain then returns None.
+    ``checkpoint`` is the query's checkpoint location.
+
+    The query runs with ``STATE_PARTITIONS`` shuffle partitions. When the
+    drain ends, also by an exception, the query is stopped and the
+    session's own value restored."""
+    spark = df.sparkSession
+    writer = df.writeStream.outputMode(mode)
+    name = None
+    if sink is None:
+        name = f"drained_{next(_sink_ids)}"
+        writer = writer.format("memory").queryName(name)
+    elif callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format(sink)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with session_conf(spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}):
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+            return spark.table(name) if name else None
+        finally:
+            q.stop()
+            if name:
+                spark.catalog.dropTempView(name)
 
 
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily tumbling-window counts as a streaming query, drained to a
     memory sink. Same logical plan as the batch tumbling_window_stats."""
-    # streaming state stores partition by spark.sql.shuffle.partitions at
-    # query START and keep it for the query's life — a driver session's
-    # default 200 means 200 state stores for a tiny demo; pin a sane value
-    # for the stream and restore after
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     agg = (
         events_stream(spark, sf_dir)
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         (F.unix_micros("w.start") / 1_000_000).cast("long").alias("win_start_s"),
         "event_type",
         "n",
@@ -91,13 +142,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_users"))
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = dedup.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain(dedup, "complete")
 
 
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,13 +164,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = sess.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain(sess, "complete")
 
 
 def streaming_tfrecord_sink(
@@ -162,11 +201,7 @@ def streaming_tfrecord_sink(
     stream = events_stream(spark, sf_dir).select(
         "event_id", "event_type", F.unix_micros(F.col("ts")).alias("ts")
     )
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream, "append", sink=sink)
     return total["n"]
 
 
@@ -187,22 +222,14 @@ def streaming_tfrecord_sink_census(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: each microbatch writes its own shards (one task per shard, no
     cross-batch coordination — exactly how a production stream appends to
     a TFRecord dataset); the read-back is one task per shard file."""
-    import hashlib as _hl
-    import os
-    import shutil
-
     from videos_to_tfrecords_spark.sources.tables import load_table
     from videos_to_tfrecords_spark.sources.tfrecord import (
         read_tfrecords_df,
+        tfrecord_files,
         write_tfrecords,
     )
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    base = os.path.join(
-        repo, "spark-warehouse", "stfsink_" + _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    )
+    base = scratch_dir("stfsink", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     src = os.path.join(base, "src")
     out = os.path.join(base, "out")
@@ -246,21 +273,16 @@ def streaming_tfrecord_sink_census(spark: SparkSession, sf_dir: str) -> DataFram
             return
         write_tfrecords(rec, "rec", out, f"b{batch_id}")
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
+        "append",
+        sink=sink,
+        checkpoint=os.path.join(base, "ck"),
     )
-    q.awaitTermination()
 
-    glob = os.path.join(out, "data", "*", "*.tfrecord")
+    data = os.path.join(out, "data")
     layout = (
-        spark.read.format("binaryFile")
-        .load(glob)
+        tfrecord_files(spark, data)
         .agg(
             F.countDistinct(
                 F.element_at(F.split("path", "/"), -2)
@@ -268,7 +290,7 @@ def streaming_tfrecord_sink_census(spark: SparkSession, sf_dir: str) -> DataFram
             F.count("*").cast("long").alias("n_shards"),
         )
     )
-    dec = read_tfrecords_df(spark, glob).select(
+    dec = read_tfrecords_df(spark, data).select(
         F.octet_length("record").cast("long").alias("blen"),
         F.split(F.decode(F.col("record"), "UTF-8"), "\t").alias("f"),
     )
@@ -289,7 +311,8 @@ def streaming_tfrecord_sink_census(spark: SparkSession, sf_dir: str) -> DataFram
     )
     # pin eagerly (bounded: ≤ event-type rows): the NEXT invocation
     # rmtree's `base`, and this frame lazily reads the shard files
-    return out_df.localCheckpoint(eager=True)
+    with materialized() as m:
+        return m.result(out_df)
 
 
 def streaming_sessionize_stateful(
@@ -379,24 +402,15 @@ def streaming_sessionize_stateful(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"stream_sessz_{uuid.uuid4().hex[:8]}"
-    writer = sessions.writeStream.outputMode("append").format("memory").queryName(name)
-    if checkpoint_dir:
-        # an explicit checkpoint makes the state store inspectable — and
-        # at 100× event volume the store should be RocksDB
-        # (spark.sql.streaming.stateStore.providerClass=
-        # ...state.RocksDBStateStoreProvider, a session conf read at query
-        # start): open-session state then lives on executor DISK with an
-        # in-memory block cache instead of an all-in-heap HashMap, so
-        # state size is bounded by disk, not executor memory. Pytest runs
-        # the full lifecycle under both providers.
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    # an explicit checkpoint makes the state store inspectable — and at
+    # 100× event volume the store should be RocksDB
+    # (spark.sql.streaming.stateStore.providerClass=
+    # ...state.RocksDBStateStoreProvider, a session conf read at query
+    # start): open-session state then lives on executor DISK with an
+    # in-memory block cache instead of an all-in-heap HashMap, so state
+    # size is bounded by disk, not executor memory. Pytest runs the full
+    # lifecycle under both providers.
+    return drain(sessions, "append", checkpoint=checkpoint_dir)
 
 
 def streaming_stream_stream_join(
@@ -418,8 +432,6 @@ def streaming_stream_stream_join(
     the batch interval join by construction (processAllAvailable sees all
     input, so no row is dropped by the watermark — late-data EVICTION
     correctness vs the batch twin is what the pytest checks)."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     ev = events_stream(spark, sf_dir)
     views = (
         ev.filter(F.col("event_type") == "view")
@@ -454,14 +466,7 @@ def streaming_stream_stream_join(
         F.unix_micros("view_ts").alias("view_us"),
         F.unix_micros("click_ts").alias("click_us"),
     )
-    name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 def streaming_cms_counts(
@@ -485,8 +490,6 @@ def streaming_cms_counts(
     """
     from videos_to_tfrecords_spark.functions.hashing import h15
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     item = F.col("user_id").cast("string")
     cells = F.array(
         *[
@@ -497,25 +500,13 @@ def streaming_cms_counts(
             for d in range(depth)
         ]
     )
-    reader = spark.readStream.schema(RAW_EVENTS_SCHEMA).option("pathGlobFilter", glob)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     agg = (
-        reader.parquet(sf_dir)
+        events_stream(spark, sf_dir, glob, max_files_per_trigger)
         .select(F.explode(cells).alias("cell"))
         .groupBy(F.col("cell.d").alias("d"), F.col("cell.bucket").alias("bucket"))
         .agg(F.count("*").alias("c"))
     )
-    name = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).select("d", "bucket", "c")
+    return drain(agg, "complete").select("d", "bucket", "c")
 
 
 def streaming_drift_histogram(
@@ -535,12 +526,7 @@ def streaming_drift_histogram(
     equals the batch build exactly, so the downstream chi-square drift
     statistic is oracle-checked end-to-end through the streaming path.
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    reader = spark.readStream.schema(RAW_EVENTS_SCHEMA).option("pathGlobFilter", glob)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    cells = reader.parquet(sf_dir).select(
+    cells = events_stream(spark, sf_dir, glob, max_files_per_trigger).select(
         F.expr(
             f"CAST(least(greatest(CAST(round(value * 100) AS BIGINT) div 1000, 0),"
             f" {bins - 1}) AS BIGINT)"
@@ -550,16 +536,7 @@ def streaming_drift_histogram(
         .alias("h"),
     )
     agg = cells.groupBy("h", "bin").agg(F.count("*").alias("c"))
-    name = f"stream_drift_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).select("h", "bin", "c")
+    return drain(agg, "complete").select("h", "bin", "c")
 
 
 def streaming_heavy_hitters(
@@ -580,27 +557,13 @@ def streaming_heavy_hitters(
     applyInPandasWithState). Drained on a bounded source, filtering the
     final table at share > 1/t_ratio is bit-equal to the batch
     heavy_hitters_mg query, which is how it shares that oracle."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    reader = spark.readStream.schema(RAW_EVENTS_SCHEMA).option("pathGlobFilter", glob)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     agg = (
-        reader.parquet(sf_dir)
+        events_stream(spark, sf_dir, glob, max_files_per_trigger)
         .select(F.floor("value").cast("long").alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").cast("long").alias("freq"))
     )
-    name = f"stream_hh_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    counts = spark.table(name).select("bucket", "freq")
+    counts = drain(agg, "complete").select("bucket", "freq")
     tot = counts.groupBy().agg(F.sum("freq").cast("long").alias("n_total"))
     return (
         counts.crossJoin(F.broadcast(tot))
@@ -636,25 +599,11 @@ def streaming_upsert_foreachbatch(
     merge joins (keys-sized) increment against (keys-sized) current state
     — never raw events; a real deployment swaps the parquet-version dance
     for MERGE INTO and gets the same plan."""
-    import hashlib as _hl
-    import os
-    import shutil
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    target = target_path or os.path.join(
-        repo, "spark-warehouse", "fbu_" + _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    )
+    target = target_path or scratch_dir("fbu", sf_dir)
     shutil.rmtree(target, ignore_errors=True)
     os.makedirs(target, exist_ok=True)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    reader = spark.readStream.schema(RAW_EVENTS_SCHEMA).option(
-        "pathGlobFilter", glob
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(sf_dir).select(
+    stream = events_stream(spark, sf_dir, glob, max_files_per_trigger).select(
         "user_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -691,12 +640,7 @@ def streaming_upsert_foreachbatch(
         )
         versions.append(batch_id)
 
-    q = stream.writeStream.foreachBatch(upsert).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    drain(stream, "append", sink=upsert)
     if not versions:
         return spark.createDataFrame(
             [], "user_id long, event_type string, n long, value_cents long"
@@ -726,16 +670,9 @@ def streaming_hll_registers(
     from videos_to_tfrecords_spark.functions.hashing import h15
 
     two54 = 18014398509481984  # 2^54
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    reader = spark.readStream.schema(RAW_EVENTS_SCHEMA).option(
-        "pathGlobFilter", glob
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     hv = h15(F.col("user_id").cast("string"), salt="hll")
     agg = (
-        reader.parquet(sf_dir)
+        events_stream(spark, sf_dir, glob, max_files_per_trigger)
         .select(hv.alias("hv"))
         .select(
             F.expr(f"hv div {two54}").alias("idx"),
@@ -747,19 +684,7 @@ def streaming_hll_registers(
         .groupBy("idx")
         .agg(F.max("r").alias("m"))
     )
-    name = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).select("idx", "m")
+    return drain(agg, "complete").select("idx", "m")
 
 
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,8 +696,6 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained synchronously; hash-matches the batch join+window oracle."""
     from videos_to_tfrecords_spark.sources.tables import load_table
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -787,19 +710,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_cents"),
         )
     )
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).select(
+    return drain(enriched, "complete").select(
         (F.unix_micros("w.start") / 1_000_000).cast("long").alias("win_start_s"),
         "c_mktsegment",
         "n_events",
@@ -831,19 +742,10 @@ def streaming_late_data_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator. Day windows come from F.window, which buckets the epoch
     microseconds directly — session-timezone-proof."""
     import glob as _glob
-    import hashlib as _hl
-    import os
-    import shutil
-    import uuid
 
     from videos_to_tfrecords_spark.sources.tables import load_table
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    base = os.path.join(
-        repo, "spark-warehouse", "late_" + _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    )
+    base = scratch_dir("late", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     src = os.path.join(base, "src")
     os.makedirs(src)
@@ -880,8 +782,6 @@ def streaming_late_data_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("value", T.DoubleType()),
         ]
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     agg = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -895,19 +795,7 @@ def streaming_late_data_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    name = f"stream_late_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).select(
+    return drain(agg, "append").select(
         F.expr("unix_micros(w.start) div 86400000000").alias("day"),
         F.col("n").cast("long").alias("n"),
         F.col("value_cents").cast("long").alias("value_cents"),
@@ -932,10 +820,6 @@ def streaming_stream_stream_left_outer(
     plus the inner matches, so both the match and the expiry logic
     hash-check. Unmatched click_id surfaces as −1 (not NULL) so the
     column stays integral on both engines."""
-    import uuid
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     ev = events_stream(spark, sf_dir)
     views = (
         ev.filter(F.col("event_type") == "view")
@@ -970,19 +854,7 @@ def streaming_stream_stream_left_outer(
         "user_id",
         F.unix_micros("view_ts").alias("view_us"),
     )
-    name = f"stream_sslo_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 def streaming_dedup_within_watermark(
@@ -1018,18 +890,10 @@ def streaming_dedup_within_watermark(
     ``dropDuplicates``'s unbounded state. The file split is test harness,
     not operator."""
     import glob as _glob
-    import hashlib as _hl
-    import os
-    import shutil
 
     from videos_to_tfrecords_spark.sources.tables import load_table
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    base = os.path.join(
-        repo, "spark-warehouse", "ddww_" + _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    )
+    base = scratch_dir("ddww", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     src = os.path.join(base, "src")
     os.makedirs(src)
@@ -1072,8 +936,6 @@ def streaming_dedup_within_watermark(
             T.StructField("cnt", T.LongType()),
         ]
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     dedup = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1081,19 +943,7 @@ def streaming_dedup_within_watermark(
         .withWatermark("ts", "61 hours")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-    name = f"stream_ddww_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    emitted = spark.table(name).select(
+    emitted = drain(dedup, "append").select(
         "event_type",
         F.expr("unix_micros(ts) div 86400000000").alias("d"),
         "cnt",
@@ -1116,45 +966,26 @@ def streaming_dedup_within_watermark(
     )
 
 
-def _statestore_base(sf_dir: str) -> str:
-    """Checkpoint/source root for `statestore_reader_audit`, keyed by sf_dir.
-    Shared with tests/test_streaming.py so the path scheme has exactly one
-    definition (r8 ADVICE)."""
-    import hashlib as _hl
-    import os
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    return os.path.join(
-        repo, "spark-warehouse", "stst_" + _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    )
-
-
 def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State-store BATCH reader (SPARK-45511, the Spark 4 state data
-    source): a checkpointed streaming aggregation is drained with
-    ``Trigger.AvailableNow``, then its raw operator state is read back as
-    a plain DataFrame with ``spark.read.format("statestore")`` — the
-    production debugging/ops surface for inspecting (and auditing) live
-    streaming state without stopping the job. After a full drain the
-    aggregation state IS the complete batch aggregate, so every
-    (key → agg buffer) entry the reader surfaces is value-hash-checked
-    against an oracle computed straight from the events table: a wrong
-    buffer field, a dropped key, or a partition-routing bug in the state
-    files is a red row.
+    source): a checkpointed streaming aggregation is drained, then its raw
+    operator state is read back as a plain DataFrame with
+    ``spark.read.format("statestore")`` — the production debugging/ops
+    surface for inspecting (and auditing) live streaming state without
+    stopping the job. After a full drain the aggregation state IS the
+    complete batch aggregate, so every (key → agg buffer) entry the
+    reader surfaces is value-hash-checked against an oracle computed
+    straight from the events table: a wrong buffer field, a dropped key,
+    or a partition-routing bug in the state files is a red row.
 
     Scale: state entries ∝ distinct (event_type, bucket) keys — bounded
     at 5 × 32 by construction, and the reader itself is partition-
-    parallel (one task per state-store partition, 8 here), so reading
-    production-sized state scales with the state layout, not the input
-    that built it."""
-    import os
-    import shutil
-
+    parallel (one task per state-store partition, ``STATE_PARTITIONS``),
+    so reading production-sized state scales with the state layout, not
+    the input that built it."""
     from videos_to_tfrecords_spark.sources.tables import load_table
 
-    base = _statestore_base(sf_dir)
+    base = scratch_dir("stst", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ck")
@@ -1175,28 +1006,16 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("cents", T.LongType()),
         ]
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        agg = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .groupBy("event_type", "bucket")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("cents").alias("cents"),
-            )
+    agg = (
+        spark.readStream.schema(schema)
+        .parquet(src)
+        .groupBy("event_type", "bucket")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("cents").alias("cents"),
         )
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    )
+    drain(agg, "update", sink="noop", checkpoint=ckpt)
 
     st = spark.read.format("statestore").load(ckpt)
     out = st.select(
@@ -1208,5 +1027,6 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pin the (bounded: ≤ 5×32 keys) result eagerly — the NEXT invocation
     # rmtree's `base`, so a caller holding this DataFrame lazily across a
     # re-invocation (e.g. a double-pass harness) must not re-read deleted
-    # state files (r8 ADVICE).
-    return out.localCheckpoint(eager=True)
+    # state files.
+    with materialized() as m:
+        return m.result(out)
